@@ -145,9 +145,9 @@ def cell_expr(lon, lat, res: int):
     For the *big* side of candidate-generation joins: keeps 100%-of-rows
     math out of Python. Java Math.sin/log may differ from NumPy/libm by
     1 ulp, which can shift a point sitting exactly on a cell edge into the
-    adjacent cell — harmless wherever a k-ring (>=1) or cover margin
-    absorbs +-1 cell, which is every call site; use the NumPy path when the
-    cell id itself is the contract.
+    adjacent cell — harmless wherever a k-ring (>=1) or an epsilon-widened
+    cover (``pip_join.COVER_EPS``) absorbs it, which is every call site; use
+    the NumPy path when the cell id itself is the contract.
     """
     from pyspark.sql import functions as F
 

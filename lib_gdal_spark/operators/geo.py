@@ -82,6 +82,8 @@ def with_tile(df: DataFrame, z: int, lon="lon", lat="lat", tms: bool = False) ->
     (the NULL-key join-skip path)."""
     n = 1 << z
     lo = F.col(lon)
+    # greatest/least skip NULLs, so guard the whole tile math.
+    has = lo.isNotNull() & F.col(lat).isNotNull()
     la = F.least(F.greatest(F.col(lat), F.lit(-C.MAX_MERC_LAT)),
                  F.lit(C.MAX_MERC_LAT))
     mx = (lo + 180.0) / 360.0
@@ -91,13 +93,13 @@ def with_tile(df: DataFrame, z: int, lon="lon", lat="lat", tms: bool = False) ->
         - F.log((1.0 + sin_lat) / (1.0 - sin_lat))
         / F.lit(4.0 * float(np.pi))
     )
-    tx = F.least(
+    tx = F.when(has, F.least(
         F.greatest(F.floor(mx * n), F.lit(0)), F.lit(n - 1)
-    ).cast("long")
+    ).cast("long"))
     ty_raw = F.least(
         F.greatest(F.floor(my * n), F.lit(0)), F.lit(n - 1)
     ).cast("long")
-    ty = (F.lit(n - 1) - ty_raw) if tms else ty_raw
+    ty = F.when(has, (F.lit(n - 1) - ty_raw) if tms else ty_raw)
     return df.withColumn("z", F.lit(z)).withColumn("tx", tx).withColumn(
         "ty", ty
     )

@@ -108,6 +108,20 @@ def test_with_tile_matches_oracle(enriched):
     assert np.array_equal(pdf["ty"].to_numpy(dtype=np.int64), ey)
 
 
+def test_with_tile_null_coords_get_null_tile(spark):
+    """greatest/least skip NULLs: without a guard a NULL coordinate would
+    land in tile (0, 2^z-1)."""
+    pts = spark.createDataFrame(
+        [(1, None, None), (2, 2.35, None), (3, None, 48.85), (4, 2.35, 48.85)],
+        "pid long, lon double, lat double")
+    for tms in (False, True):
+        got = {r["pid"]: (r["tx"], r["ty"])
+               for r in geo.with_tile(pts, z=8, tms=tms).collect()}
+        assert got[1] == got[2] == got[3] == (None, None)
+        ex, ey = C.lonlat_to_tile(np.array([2.35]), np.array([48.85]), 8, tms=tms)
+        assert got[4] == (ex[0], ey[0])
+
+
 def test_knn_bruteforce_vs_kring(spark, enriched):
     pts = (
         enriched.where(F.col("lon").isNotNull())
