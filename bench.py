@@ -60,8 +60,6 @@ BENCH = {
     "knn_kring": lambda s: _force(E.q_knn_kring(s, SF_DIR)),
     "summary_agg": lambda s: _force(E.q_ogr_summary_record(s, SF_DIR)),
     "first_match_join": lambda s: _force(E.q_ogr_first_match_join(s, SF_DIR)),
-    "minhash_lsh": lambda s: _force(E.q_minhash_lsh_pairs(s, SF_DIR)),
-    "cosine_topk": lambda s: _force(E.q_cosine_topk(s, SF_DIR)),
     "raster_pyramid": lambda s: _force(E.q_raster_pyramid(s, SF_DIR)),
     "rasterize": lambda s: _force(E.q_rasterize_counts(s, SF_DIR)),
     "polygonize": lambda s: _force(E.q_polygonize_components(s, SF_DIR)),
@@ -84,57 +82,25 @@ BENCH = {
     "raster_checksum": lambda s: _force(E.q_raster_checksum(s, SF_DIR)),
     "pyramid_magphase": lambda s: _force(E.q_pyramid_magphase_l1(s, SF_DIR)),
     "special_fields": lambda s: _force(E.q_ogr_special_fields(s, SF_DIR)),
-    "text_repetition": lambda s: _force(E.q_text_repetition(s, SF_DIR)),
     "ogr_reproject": lambda s: _force(E.q_ogr_reproject(s, SF_DIR)),
     # round-3 pipeline additions
-    "substring_dedup": lambda s: _force(E.q_substring_dedup(s, SF_DIR)),
-    "fuzzy_dedup": lambda s: _force(E.q_fuzzy_dedup(s, SF_DIR)),
     "semantic_dedup": lambda s: _force(E.q_semantic_dedup(s, SF_DIR)),
-    "tfidf_top_terms": lambda s: _force(E.q_tfidf_top_terms(s, SF_DIR)),
-    "pii_redact": lambda s: _force(E.q_pii_redact(s, SF_DIR)),
-    "sample_token_budget": lambda s: _force(E.q_sample_token_budget(s, SF_DIR)),
-    "lm_perplexity": lambda s: _force(E.q_lm_perplexity(s, SF_DIR)),
-    "pack_sequences": lambda s: _force(E.q_pack_sequences(s, SF_DIR)),
-    "dsir_importance": lambda s: _force(E.q_dsir_importance(s, SF_DIR)),
-    "bloom_membership": lambda s: _force(E.q_bloom_membership(s, SF_DIR)),
-    "line_dedup": lambda s: _force(E.q_line_dedup(s, SF_DIR)),
-    "events_sessionize": lambda s: _force(E.q_events_sessionize(s, SF_DIR)),
-    "events_asof": lambda s: _force(E.q_events_asof(s, SF_DIR)),
-    "nb_classifier": lambda s: _force(E.q_nb_classifier(s, SF_DIR)),
-    "cms_counts": lambda s: _force(E.q_cms_counts(s, SF_DIR)),
-    "hll_distinct": lambda s: _force(E.q_hll_distinct(s, SF_DIR)),
     "ogr_multijoin": lambda s: _force(E.q_ogr_multijoin(s, SF_DIR)),
     "exact_quantiles": lambda s: _force(E.q_exact_quantiles(s, SF_DIR)),
     "pagerank": lambda s: _force(E.q_pagerank(s, SF_DIR)),
-    "simhash_pairs": lambda s: _force(E.q_simhash_pairs(s, SF_DIR)),
-    "winnow": lambda s: _force(E.q_winnow_fingerprints(s, SF_DIR)),
-    "c4_clean": lambda s: _force(E.q_c4_clean(s, SF_DIR)),
-    "bm25": lambda s: _force(E.q_bm25(s, SF_DIR)),
-    "bpe_train": lambda s: _force(E.q_bpe_train(s, SF_DIR)),
-    "chunk_docs": lambda s: _force(E.q_chunk_documents(s, SF_DIR)),
     "triangle_counts": lambda s: _force(E.q_triangle_counts(s, SF_DIR)),
-    "inverted_index": lambda s: _force(E.q_inverted_index(s, SF_DIR)),
     "zonal_stats": lambda s: _force(E.q_zonal_stats(s, SF_DIR)),
-    "link_graph": lambda s: _force(E.q_link_graph(s, SF_DIR)),
     "gtiff_roundtrip": lambda s: _force(E.q_gtiff_roundtrip(s, SF_DIR)),
     "osm_way_assembly": lambda s: _force(E.q_osm_way_assembly(s, SF_DIR)),
     "cdx_index": lambda s: _force(E.q_cdx_index(s, SF_DIR)),
     "mvt_tiles": lambda s: _force(E.q_mvt_tiles(s, SF_DIR)),
-    "decontaminate": lambda s: _force(E.q_decontaminate(s, SF_DIR)),
     # round-3 continuation additions
-    "cdc_chunks": lambda s: _force(E.q_cdc_chunks(s, SF_DIR)),
     "wet_wat_ingest": lambda s: _force(E.q_wet_wat_ingest(s, SF_DIR)),
     "viewshed": lambda s: _force(E.q_viewshed(s, SF_DIR)),
-    "image_hashes": lambda s: _force(E.q_image_hashes(s, SF_DIR)),
-    "media_gps_tiles": lambda s: _force(E.q_media_gps_tiles(s, SF_DIR)),
-    "crawl_frontier": lambda s: _force(E.q_crawl_frontier(s, SF_DIR)),
     "dem_hillshade_multi": lambda s: _force(E.q_dem_hillshade_multi(s, SF_DIR)),
     "contour_polygons": lambda s: _force(E.q_contour_polygons(s, SF_DIR)),
     "tpch_promo_share": lambda s: _force(E.q_tpch_promo_share(s, SF_DIR)),
-    "char_entropy": lambda s: _force(E.q_char_entropy(s, SF_DIR)),
     "s2_cells": lambda s: _force(E.q_s2_cells(s, SF_DIR)),
-    "event_funnel": lambda s: _force(E.q_event_funnel(s, SF_DIR)),
-    "cosine_topk_int8": lambda s: _force(E.q_cosine_topk_int8(s, SF_DIR)),
     "s2_ring_pairs": lambda s: _force(E.q_s2_ring_pairs(s, SF_DIR)),
     # round-4 session-2 additions
     "warp_laea": lambda s: _force(E.q_warp_laea_nearest(s, SF_DIR)),
@@ -150,74 +116,22 @@ BENCH = {
     "quadkeys": lambda s: _force(E.q_quadkeys(s, SF_DIR)),
     "warp_cassini": lambda s: _force(E.q_warp_cassini_nearest(s, SF_DIR)),
     "warp_polyconic": lambda s: _force(E.q_warp_polyconic_nearest(s, SF_DIR)),
-    "boilerplate": lambda s: _force(E.q_boilerplate_removal(s, SF_DIR)),
-    "gopher_dup_ngrams": lambda s: _force(E.q_gopher_dup_ngrams(s, SF_DIR)),
-    "gopher_quality": lambda s: _force(E.q_gopher_quality(s, SF_DIR)),
-    "gopher_top_ngrams": lambda s: _force(E.q_gopher_top_ngrams(s, SF_DIR)),
-    "readability": lambda s: _force(E.q_readability(s, SF_DIR)),
-    "url_features": lambda s: _force(E.q_url_features(s, SF_DIR)),
     "warp_mercator": lambda s: _force(E.q_warp_mercator_nearest(s, SF_DIR)),
     "warp_eqc": lambda s: _force(E.q_warp_eqc_nearest(s, SF_DIR)),
     "warp_omerc": lambda s: _force(E.q_warp_omerc_nearest(s, SF_DIR)),
-    "decontaminate_items": lambda s: _force(E.q_decontaminate_items(s, SF_DIR)),
     "warp_ups": lambda s: _force(E.q_warp_ups_nearest(s, SF_DIR)),
     "warp_stateplane_md": lambda s: _force(E.q_warp_stateplane_md(s, SF_DIR)),
     "warp_stateplane_nj": lambda s: _force(E.q_warp_stateplane_nj(s, SF_DIR)),
-    "ts_periodogram": lambda s: _force(E.q_ts_periodogram(s, SF_DIR)),
-    "markov_chain": lambda s: _force(E.q_markov_chain(s, SF_DIR)),
     "hausdorff_pairs": lambda s: _force(E.q_hausdorff_pairs(s, SF_DIR)),
     "mgrs_polar_cells": lambda s: _force(E.q_mgrs_polar_cells(s, SF_DIR)),
-    "mann_whitney": lambda s: _force(E.q_mann_whitney(s, SF_DIR)),
-    "kruskal_wallis": lambda s: _force(E.q_kruskal_wallis(s, SF_DIR)),
-    "ks_2samp": lambda s: _force(E.q_ks_2samp(s, SF_DIR)),
-    "spearman_rho": lambda s: _force(E.q_spearman_rho(s, SF_DIR)),
-    "isotonic_pava": lambda s: _force(E.q_isotonic_pava(s, SF_DIR)),
     "edit_distance": lambda s: _force(E.q_edit_distance(s, SF_DIR)),
     "dtw_pairs": lambda s: _force(E.q_dtw_pairs(s, SF_DIR)),
     "frechet_pairs": lambda s: _force(E.q_frechet_pairs(s, SF_DIR)),
     "lcss_pairs": lambda s: _force(E.q_lcss_pairs(s, SF_DIR)),
     "ransac_line": lambda s: _force(E.q_ransac_line(s, SF_DIR)),
-    "roc_auc": lambda s: _force(E.q_roc_auc(s, SF_DIR)),
-    "pr_curve": lambda s: _force(E.q_pr_curve(s, SF_DIR)),
-    "cohen_kappa": lambda s: _force(E.q_cohen_kappa(s, SF_DIR)),
-    "theil_index": lambda s: _force(E.q_theil_index(s, SF_DIR)),
-    "ndcg_at_k": lambda s: _force(E.q_ndcg_at_k(s, SF_DIR)),
-    "kendall_tau": lambda s: _force(E.q_kendall_tau(s, SF_DIR)),
-    "mad_robust": lambda s: _force(E.q_mad_robust(s, SF_DIR)),
-    "palma_ratio": lambda s: _force(E.q_palma_ratio(s, SF_DIR)),
-    "wilcoxon": lambda s: _force(E.q_wilcoxon(s, SF_DIR)),
-    "chao1": lambda s: _force(E.q_chao1(s, SF_DIR)),
-    "good_turing": lambda s: _force(E.q_good_turing(s, SF_DIR)),
-    "friedman": lambda s: _force(E.q_friedman(s, SF_DIR)),
-    "cronbach": lambda s: _force(E.q_cronbach(s, SF_DIR)),
-    "wasserstein": lambda s: _force(E.q_wasserstein(s, SF_DIR)),
-    "total_variation": lambda s: _force(E.q_total_variation(s, SF_DIR)),
-    "cliffs_delta": lambda s: _force(E.q_cliffs_delta(s, SF_DIR)),
-    "levene": lambda s: _force(E.q_levene(s, SF_DIR)),
-    "trimmed_mean": lambda s: _force(E.q_trimmed_mean(s, SF_DIR)),
-    "partial_corr": lambda s: _force(E.q_partial_corr(s, SF_DIR)),
-    "cramers_v": lambda s: _force(E.q_cramers_v(s, SF_DIR)),
-    "odds_ratio": lambda s: _force(E.q_odds_ratio(s, SF_DIR)),
     "circular_stats": lambda s: _force(E.q_circular_stats(s, SF_DIR)),
-    "jonckheere": lambda s: _force(E.q_jonckheere(s, SF_DIR)),
-    "viterbi_decode": lambda s: _force(E.q_viterbi_decode(s, SF_DIR)),
-    "bh_fdr": lambda s: _force(E.q_bh_fdr(s, SF_DIR)),
-    "smith_waterman": lambda s: _force(E.q_smith_waterman(s, SF_DIR)),
-    "page_hinkley": lambda s: _force(E.q_page_hinkley(s, SF_DIR)),
-    "gini_lorenz": lambda s: _force(E.q_gini_lorenz(s, SF_DIR)),
-    "herfindahl": lambda s: _force(E.q_herfindahl(s, SF_DIR)),
-    "runs_test": lambda s: _force(E.q_runs_test(s, SF_DIR)),
-    "durbin_watson": lambda s: _force(E.q_durbin_watson(s, SF_DIR)),
-    "grubbs": lambda s: _force(E.q_grubbs(s, SF_DIR)),
-    "ccnet_buckets": lambda s: _force(E.q_ccnet_buckets(s, SF_DIR)),
-    "sample_temperature": lambda s: _force(E.q_sample_temperature(s, SF_DIR)),
-    "pii_luhn": lambda s: _force(E.q_pii_luhn(s, SF_DIR)),
-    "typo_pairs": lambda s: _force(E.q_typo_pairs(s, SF_DIR)),
-    "pii_iban": lambda s: _force(E.q_pii_iban(s, SF_DIR)),
-    "soundex_keys": lambda s: _force(E.q_soundex_keys(s, SF_DIR)),
     "gc_navigation": lambda s: _force(E.q_gc_navigation(s, SF_DIR)),
     "rhumb_destination": lambda s: _force(E.q_rhumb_destination(s, SF_DIR)),
-    "embedding_qa": lambda s: _force(E.q_embedding_qa(s, SF_DIR)),
     # round-4 session-5 additions: spatial statistics
     "morans_i": lambda s: _force(E.q_morans_i(s, SF_DIR)),
     "getis_hotspots": lambda s: _force(E.q_getis_hotspots(s, SF_DIR)),
@@ -230,13 +144,9 @@ BENCH = {
     "trustrank": lambda s: _force(E.q_trustrank(s, SF_DIR)),
     "url_history": lambda s: _force(E.q_url_history(s, SF_DIR)),
     "lpa_communities": lambda s: _force(E.q_lpa_communities(s, SF_DIR)),
-    "priority_sample": lambda s: _force(E.q_priority_sample(s, SF_DIR)),
     "dem_flowdir": lambda s: _force(E.q_dem_flowdir(s, SF_DIR)),
-    "co_citation": lambda s: _force(E.q_co_citation(s, SF_DIR)),
     "salted_hot_join": lambda s: _force(E.q_salted_hot_join(s, SF_DIR)),
     "dem_basins": lambda s: _force(E.q_dem_basins(s, SF_DIR)),
-    "interval_join": lambda s: _force(E.q_interval_join(s, SF_DIR)),
-    "cusum_drift": lambda s: _force(E.q_cusum_drift(s, SF_DIR)),
     "jsonld_geo": lambda s: _force(E.q_jsonld_geo(s, SF_DIR)),
     "graph_stats": lambda s: _force(E.q_graph_stats(s, SF_DIR)),
     # round-4 session-8 additions (flow_accumulation / strahler_order /
@@ -246,26 +156,16 @@ BENCH = {
     "map_match": lambda s: _force(E.q_map_match(s, SF_DIR)),
     "mann_kendall": lambda s: _force(E.q_mann_kendall(s, SF_DIR)),
     "dwell_segments": lambda s: _force(E.q_dwell_segments(s, SF_DIR)),
-    "retention_cohorts": lambda s: _force(E.q_retention_cohorts(s, SF_DIR)),
-    "textrank_terms": lambda s: _force(E.q_textrank_terms(s, SF_DIR)),
-    "burst_detection": lambda s: _force(E.q_burst_detection(s, SF_DIR)),
     "polygon_neighbors": lambda s: _force(E.q_polygon_neighbors(s, SF_DIR)),
     "raster_quantile_classes":
         lambda s: _force(E.q_raster_quantile_classes(s, SF_DIR)),
-    "attribution": lambda s: _force(E.q_attribution(s, SF_DIR)),
     "emerging_hotspots": lambda s: _force(E.q_emerging_hotspots(s, SF_DIR)),
     # round-4 session-9 additions
-    "kmv_distinct": lambda s: _force(E.q_kmv_distinct(s, SF_DIR)),
     "skyline_docs": lambda s: _force(E.q_skyline_docs(s, SF_DIR)),
-    "bleu_pairs": lambda s: _force(E.q_bleu_pairs(s, SF_DIR)),
     "morph_open": lambda s: _force(E.q_morph_open(s, SF_DIR)),
     "zonal_crosstab": lambda s: _force(E.q_zonal_crosstab(s, SF_DIR)),
-    "split_report": lambda s: _force(E.q_split_report(s, SF_DIR)),
-    "collocations": lambda s: _force(E.q_collocations(s, SF_DIR)),
-    "ab_test": lambda s: _force(E.q_ab_test(s, SF_DIR)),
     "openness": lambda s: _force(E.q_openness(s, SF_DIR)),
     "sky_view_factor": lambda s: _force(E.q_sky_view_factor(s, SF_DIR)),
-    "rouge_l": lambda s: _force(E.q_rouge_l(s, SF_DIR)),
     "pq_encode": lambda s: _force(E.q_pq_encode(s, SF_DIR)),
     "pq_topk": lambda s: _force(E.q_pq_topk(s, SF_DIR)),
     "dem_vrm": lambda s: _force(E.q_dem_vrm(s, SF_DIR)),
@@ -278,8 +178,6 @@ BENCH = {
     "grid_gwr": lambda s: _force(E.q_grid_gwr(s, SF_DIR)),
     "variogram": lambda s: _force(E.q_variogram(s, SF_DIR)),
     "huff_model": lambda s: _force(E.q_huff_model(s, SF_DIR)),
-    "keyness_g2": lambda s: _force(E.q_keyness_g2(s, SF_DIR)),
-    "burrows_delta": lambda s: _force(E.q_burrows_delta(s, SF_DIR)),
     # round-4 session-11 additions (cost_corridor/cost_allocation stay
     # gate-only with the other fixpoint ops; the fixed-size fixture
     # queries are covered by the gate; the entries below scale with
@@ -288,34 +186,18 @@ BENCH = {
     "focal_stats": lambda s: _force(E.q_focal_stats(s, SF_DIR)),
     "netcdf_roundtrip": lambda s: _force(E.q_netcdf_roundtrip(s, SF_DIR)),
     "tpi_landforms": lambda s: _force(E.q_tpi_landforms(s, SF_DIR)),
-    "jaccard_prefix_join":
-        lambda s: _force(E.q_jaccard_prefix_join(s, SF_DIR)),
-    "trimmed_mean": lambda s: _force(E.q_trimmed_mean(s, SF_DIR)),
-    "partial_corr": lambda s: _force(E.q_partial_corr(s, SF_DIR)),
-    "cramers_v": lambda s: _force(E.q_cramers_v(s, SF_DIR)),
-    "odds_ratio": lambda s: _force(E.q_odds_ratio(s, SF_DIR)),
     "circular_stats": lambda s: _force(E.q_circular_stats(s, SF_DIR)),
-    "jonckheere": lambda s: _force(E.q_jonckheere(s, SF_DIR)),
-    "mattr": lambda s: _force(E.q_mattr(s, SF_DIR)),
     "od_matrix": lambda s: _force(E.q_od_matrix(s, SF_DIR)),
     "knox_test": lambda s: _force(E.q_knox_test(s, SF_DIR)),
     "st_dbscan": lambda s: _force(E.q_st_dbscan(s, SF_DIR)),
     "theil_sen": lambda s: _force(E.q_theil_sen(s, SF_DIR)),
-    "kaplan_meier": lambda s: _force(E.q_kaplan_meier(s, SF_DIR)),
-    "lexrank": lambda s: _force(E.q_lexrank(s, SF_DIR)),
     # round-4 session-12 additions (chaikin/snap/mec/visvalingam/mst/ipf
     # are fixed-size fixture queries -> gate-only; the entries below
     # scale with SF_DIR or the full fixture rasters)
-    "ts_acf": lambda s: _force(E.q_ts_acf(s, SF_DIR)),
-    "ts_trend": lambda s: _force(E.q_ts_trend(s, SF_DIR)),
-    "ts_ewma": lambda s: _force(E.q_ts_ewma(s, SF_DIR)),
-    "welch_ttest": lambda s: _force(E.q_welch_ttest(s, SF_DIR)),
     "focal_median": lambda s: _force(E.q_focal_median(s, SF_DIR)),
     "kuwahara": lambda s: _force(E.q_kuwahara(s, SF_DIR)),
     "hist_match": lambda s: _force(E.q_hist_match(s, SF_DIR)),
     "pca_features": lambda s: _force(E.q_pca_features(s, SF_DIR)),
-    "ts_ccf": lambda s: _force(E.q_ts_ccf(s, SF_DIR)),
-    "lag_regression": lambda s: _force(E.q_lag_regression(s, SF_DIR)),
     "morph_close": lambda s: _force(E.q_morph_close(s, SF_DIR)),
     "lees_l": lambda s: _force(E.q_lees_l(s, SF_DIR)),
 }

@@ -60,8 +60,11 @@ def extract_coords(html: pd.Series) -> tuple[pd.Series, pd.Series]:
 
 
 def decode_html(html_bytes: pd.Series) -> pd.Series:
-    """binary -> str (utf-8); vectorized via pandas bytes accessor."""
-    return html_bytes.map(lambda b: b.decode("utf-8"), na_action="ignore")
+    """binary -> str (utf-8). Invalid byte sequences decode to U+FFFD, so
+    one malformed page keeps its row instead of failing the batch; valid
+    utf-8 decodes exactly as before."""
+    return html_bytes.map(lambda b: b.decode("utf-8", errors="replace"),
+                          na_action="ignore")
 
 
 def extract_enriched(html: pd.Series):

@@ -27,7 +27,10 @@ def enrich_pages(pages: DataFrame, res: int = 12) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> + (lon, lat, cell@res).
 
     Rows without coordinates keep NULL lon/lat/cell (NULL-key join-skip
-    semantics, ``drivers/ogr_gensql.cpp:1310-1316``).
+    semantics, ``drivers/ogr_gensql.cpp:1310-1316``). Mined coordinates
+    out of range (|lat| > 90 or |lon| > 180) count as no coordinates, so
+    they cannot land in an edge cell. Invalid utf-8 in ``html`` decodes to
+    U+FFFD (``extract.decode_html``).
     """
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -36,7 +39,9 @@ def enrich_pages(pages: DataFrame, res: int = 12) -> DataFrame:
             # fused single-pass extraction (the geo-span regex would
             # otherwise scan the corpus twice); bit-identical outputs
             text, lon, lat = X.extract_enriched(html)
-            ok = ~(np.isnan(lon.to_numpy()) | np.isnan(lat.to_numpy()))
+            # NaN compares False: missing and out-of-range both drop out
+            ok = ((np.abs(lat.to_numpy()) <= 90.0)
+                  & (np.abs(lon.to_numpy()) <= 180.0))
             cell = np.full(len(b), -1, dtype=np.int64)
             if ok.any():
                 cell[ok] = C.lonlat_to_cell(

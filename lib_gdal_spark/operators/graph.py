@@ -1309,7 +1309,7 @@ def link_prediction(edges: DataFrame, min_common: int = 2,
     Scale: a wedge through node w emits deg(w)^2 candidate pairs — web
     hubs make that quadratic. ``hub_cap`` drops wedges through nodes
     with degree > hub_cap (the same frequency-cap pattern as
-    ``dedup.simhash_pairs`` / ``knn.s2_ring_pairs``); scores then become
+    ``knn.s2_ring_pairs``); scores then become
     "common non-hub neighbors", a documented contraction of the exact
     semantics. Leave None for exact results on bounded-degree graphs.
 

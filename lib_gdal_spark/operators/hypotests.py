@@ -326,8 +326,10 @@ def gini_lorenz(df: DataFrame, val_col: str, deciles: int = 10) -> DataFrame:
     decile boundary position p lands inside exactly one value group,
     where cum(p) = cum_before + (p - r)*v.
 
-    Returns ``deciles`` rows: (decile, pop_frac, cum_share, gini) with
-    gini repeated (flat schema)."""
+    Returns one row per EXACT boundary — each k in 1..``deciles`` with
+    k*n divisible by ``deciles`` (all ``deciles`` rows only when n is a
+    multiple of it; k = ``deciles`` is always present): (decile,
+    pop_frac, cum_share, gini) with gini repeated (flat schema)."""
     counts = df.groupBy(F.col(val_col).cast("long").alias("v")).agg(
         F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("v")
@@ -615,13 +617,15 @@ def calibration_bins(df: DataFrame, score_col: str, label_col: str,
 def theil_index(df: DataFrame, val_col: str) -> DataFrame:
     """Theil T inequality index of a positive integer value column:
 
-        T = (1/S) * sum x*ln(x) - ln(S/n)
+        T = (1/S) * sum x*ln(x) - ln(S/n_pos)
 
     (the x*ln(x/mu)/n/mu form rearranged so the per-row log term is
     ln(x) alone). Determinism: ln(x) is quantized to the 1e-12 lattice
     and sum x*L(x) runs as exact decimal(38,0) (the periodogram
     pattern); the two outer logs are fixed float expressions of the
-    exact totals. Zero values are excluded (their x*ln x limit is 0).
+    exact totals. Zero values are excluded from the sum AND from the
+    mean: with zeros present this is the Theil T of the positive
+    subpopulation (n_pos rows), not of all n rows.
     Returns one row (n, n_pos, theil)."""
     d = df.select(F.col(val_col).cast("long").alias("v"))
     tot = d.agg(F.count(F.lit(1)).alias("n"))
@@ -1187,8 +1191,9 @@ def cliffs_delta(df: DataFrame, group_col: str, val_col: str,
 
 def levene_test(df: DataFrame, group_col: str, val_col: str) -> DataFrame:
     """Brown-Forsythe/Levene variance-homogeneity test: the one-way
-    ANOVA F applied to z = |x - median_g| (group medians by the
-    lower-median value-spine convention; the deviations stay integer,
+    ANOVA F applied to z = |x - median_g| (group median = the value at
+    rank ceil((n+1)/2) on the value spine, i.e. the UPPER median for
+    even n — unlike mad_robust's lower median; the deviations stay integer,
     so the composed :func:`anova_oneway` keeps its exact-fraction
     contract). One row (k_groups, n, w) with w the F statistic."""
     d = df.select(F.col(group_col).alias("g"),

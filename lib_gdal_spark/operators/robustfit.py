@@ -45,7 +45,9 @@ def ransac_line(
 ) -> DataFrame:
     """One row: (n, best_trial, n_inliers, slope, intercept) — see
     module docstring. ``points`` must carry a dense 0..n-1 ``id_col``
-    (the anchor indices address it) and INTEGER coordinates."""
+    (the anchor indices address it) and INTEGER coordinates. When the
+    best trial's inliers all share one x (a vertical line), slope and
+    intercept are NULL."""
     pts = points.select(F.col(id_col).alias("pid"),
                         F.col(x_col).cast("long").alias("x"),
                         F.col(y_col).cast("long").alias("y"))
@@ -91,10 +93,12 @@ def ransac_line(
     k, sx, sy = int(fit["k"]), int(fit["sx"]), int(fit["sy"])
     sxx, sxy = int(fit["sxx"]), int(fit["sxy"])
     den = k * sxx - sx * sx
-    slope = float(k * sxy - sx * sy) / float(den)
-    intercept = (float(sy) - slope * float(sx)) / float(k)
+    slope = intercept = None
+    if den != 0:  # constant-x inliers: a vertical line has no y = a*x + b
+        slope = float(k * sxy - sx * sy) / float(den)
+        intercept = round((float(sy) - slope * float(sx)) / float(k), 9)
+        slope = round(slope, 9)
     return spark.createDataFrame(
-        [(n, int(best_t), int(best_n), round(slope, 9),
-          round(intercept, 9))],
+        [(n, int(best_t), int(best_n), slope, intercept)],
         "n long, best_trial long, n_inliers long, slope double, "
         "intercept double")

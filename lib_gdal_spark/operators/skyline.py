@@ -11,7 +11,7 @@ information density) without collapsing them into one weighted score.
 Scale shape: the skyline operator is idempotent and combinable —
 skyline(A u B) = skyline(skyline(A) u skyline(B)) — so each partition
 reduces to its local skyline inside an Arrow worker (the same
-partial-then-merge contract as every sketch in operators/sketch.py),
+partial-then-merge contract as any combinable aggregate),
 and only those survivors move. The final merge is one task over the
 concatenated local skylines, guarded by ``max_candidates`` with a LOUD
 error (skylines over near-anticorrelated criteria can be large; the

@@ -8,8 +8,8 @@ time-ordered track into maximal runs of consecutive STEPS classified
 stay (step distance <= v_max * dt) or move, and emit the stay runs
 longer than ``min_dwell_s`` with their centroid — the places the entity
 lingered. Reference analog: none (lib_gdal has no trajectory layer);
-the nearest kin in this repo are events.sessionize (time-gap runs) and
-mapmatch (the road-snap that often precedes this).
+the nearest kin in this repo is mapmatch (the road-snap that often
+precedes this).
 
 Scale shape: ONE window (partitionBy entity, orderBy ts, monotonic lag
 + running sum — Spark executes it as a single keyed sort within

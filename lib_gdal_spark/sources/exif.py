@@ -1,7 +1,7 @@
 """EXIF GPS metadata inside JPEG APP1 — the "mine geocoordinates from
 page media" path of the north star: geotagged images carry lat/lon in a
-TIFF-structured APP1 segment, and extracting them turns the multimodal
-column into spatial-join input (cells, tiles, PIP) with no text parsing.
+TIFF-structured APP1 segment, and extracting them turns image bytes
+into spatial-join input (cells, tiles, PIP) with no text parsing.
 
 Writer: a minimal little-endian TIFF block (IFD0 with the 0x8825 GPS-IFD
 pointer; GPS IFD with LatitudeRef/Latitude/LongitudeRef/Longitude as

@@ -1,7 +1,7 @@
 """GIF codec (87a/89a) — pure stdlib/numpy (reference:
 ``drivers/raster/gif``). The remaining big web image format after
-PNG/JPEG: paletted, LZW-compressed, optionally animated — frames matter
-for the multimodal pipeline (a crawl sees animated GIFs constantly).
+PNG/JPEG: paletted, LZW-compressed, optionally animated (a crawl sees
+animated GIFs constantly).
 
 Reader: header + logical screen descriptor, global/local color tables,
 extension blocks (graphic-control delays kept, others skipped), image

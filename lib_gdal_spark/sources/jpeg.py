@@ -1,8 +1,7 @@
 """Baseline JPEG codec (ITU-T T.81 sequential DCT, 8-bit) in pure
-numpy/stdlib — upgrades the multimodal decode path from the deterministic
-fake to a REAL decoder for the most common web image format (PNG and
-(Geo)TIFF already decode natively; the container has no external image
-libs, so the codec lives in-repo like sources/png.py).
+numpy/stdlib — a REAL decoder for the most common web image format (PNG
+and (Geo)TIFF already decode natively; no external image library is a
+dependency, so the codec lives in-repo like sources/png.py).
 
 Decoder: SOI/APPn/COM/DQT/SOF0/DHT/SOS/EOI marker walk, canonical
 Huffman tables reconstructed from the stream's DHT segments (so

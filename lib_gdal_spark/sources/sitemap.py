@@ -1,7 +1,5 @@
-"""Sitemap XML source (sitemaps.org protocol) — the third leg of the
-crawl-metadata trio next to the link graph (operators/links.py) and
-robots policies (operators/robots.py); a Common-Crawl-style pipeline
-seeds and prioritizes fetches from these.
+"""Sitemap XML source (sitemaps.org protocol) — crawl metadata a
+Common-Crawl-style pipeline seeds and prioritizes fetches from.
 
 Parses both ``<urlset>`` documents (url: loc, lastmod, changefreq,
 priority) and ``<sitemapindex>`` documents (child sitemap locs), one

@@ -183,17 +183,6 @@ def test_bmp_roundtrip_fuzz(h, w, seed):
     assert np.array_equal(parse_bmp(write_bmp(rgb)), rgb)
 
 
-@given(st.integers(1, 40), st.integers(1, 40), st.integers(1, 2),
-       st.integers(0, 2 ** 32 - 1))
-@settings(max_examples=40, deadline=None)
-def test_wav_roundtrip_fuzz(n, sr_k, ch, seed):
-    from lib_gdal_spark.sources.wav import parse_wav, write_wav
-    rng = np.random.default_rng(seed)
-    s = rng.integers(-32768, 32768, (n, ch)).astype(np.int16)
-    d, sr = parse_wav(write_wav(s, sr_k * 1000))
-    assert sr == sr_k * 1000 and np.array_equal(d, s)
-
-
 @given(st.integers(1, 4), st.integers(0, 2 ** 32 - 1))
 @settings(max_examples=25, deadline=None)
 def test_jpeg_block_constant_fuzz(nb, seed):

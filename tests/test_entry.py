@@ -6,11 +6,15 @@ column set, and order-insensitive exact value equality.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+
 import duckdb
 import pandas as pd
 import pytest
 
 import __spark_entry__ as E
+import lib_gdal_spark
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -28,10 +32,7 @@ SUBSET = [
     "cell_pack_parent",
     "pip_join_pentagon",
     "knn_kring",
-    "dedup_exact_prefix",
-    "text_quality",
-    "lang_id",
-    "cosine_topk",
+    "warp_bilinear_z2",
 ]
 
 
@@ -68,7 +69,22 @@ def test_entry_smoke(spark):
 
 def test_rows_only_queries_run(spark, sf_dir):
     qs = E.queries()
-    for name in ("minhash_lsh_pairs", "simhash", "raster_checksum",
-                 "pages_enrich"):
+    for name in ("raster_checksum", "pages_enrich"):
         n = qs[name](spark, sf_dir).count()
         assert n >= 0
+
+
+def test_every_package_module_imports():
+    """A kept module that still imports a deleted one fails here, not at
+    the first query that happens to reach it."""
+    names = [m.name for m in pkgutil.walk_packages(
+        lib_gdal_spark.__path__, prefix="lib_gdal_spark.")]
+    assert names
+    for name in names:
+        importlib.import_module(name)
+
+
+def test_every_query_has_an_oracle():
+    """No orphan oracles and no unchecked queries; ``feature_matching`` is
+    rows-only because its matcher is sequential by reference semantics."""
+    assert set(E.queries()) - {"feature_matching"} == set(E.oracle_sql())

@@ -1,7 +1,6 @@
-"""EXIF GPS (sources/exif.py) and the media->spatial bridge."""
+"""EXIF GPS (sources/exif.py)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from lib_gdal_spark.sources.exif import (
@@ -51,22 +50,3 @@ def test_big_endian_tiff_block():
     mm = insert_app1(write_jpeg(IMG), b"Exif\x00\x00" + tiff)
     assert parse_exif_gps(mm) == pytest.approx((10.5, -20.25))
     assert parse_exif_gps(j) == pytest.approx((10.5, -20.25), abs=1.5e-6)
-
-
-def test_media_gps_operator(spark):
-    from lib_gdal_spark.operators.multimodal import media_gps
-
-    rows = [
-        (0, "image", insert_app1(write_jpeg(IMG),
-                                 build_exif_gps(51.5, -0.12)),
-         0, 0, 1, None, None, None, None),
-        (1, "image", write_jpeg(IMG),           # no GPS -> dropped
-         0, 0, 1, None, None, None, None),
-    ]
-    media = spark.createDataFrame(pd.DataFrame(rows, columns=[
-        "media_id", "kind", "payload", "width", "height", "channels",
-        "sample_rate", "n_samples", "fps", "n_frames"]))
-    got = media_gps(media).collect()
-    assert len(got) == 1 and got[0]["media_id"] == 0
-    assert (got[0]["lat"], got[0]["lon"]) == pytest.approx(
-        (51.5, -0.12), abs=1.5e-6)

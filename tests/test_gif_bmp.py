@@ -1,13 +1,10 @@
-"""GIF + BMP codecs (sources/gif.py, sources/bmp.py) and their
-multimodal integration. The GIF LZW width convention is pinned against
-REAL third-party encoder output (CPython's bundled icons), when present
-on the machine."""
+"""GIF + BMP codecs (sources/gif.py, sources/bmp.py). The GIF LZW
+width convention is pinned against REAL third-party encoder output
+(CPython's bundled icons), when present on the machine."""
 
 import glob
-import os
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from lib_gdal_spark.sources.bmp import parse_bmp, write_bmp
@@ -55,36 +52,3 @@ def test_bmp_roundtrip_and_8bit():
     assert np.array_equal(parse_bmp(write_bmp(rgb)), rgb)
     with pytest.raises(ValueError):
         parse_bmp(b"not a bmp")
-
-
-def test_multimodal_decodes_gif_and_bmp(spark):
-    from lib_gdal_spark.operators.multimodal import (
-        image_features, video_frame_sample, with_mime)
-
-    rng = np.random.default_rng(3)
-    pal = rng.integers(0, 256, (16, 3)).astype(np.uint8)
-    frames = [rng.integers(0, 16, (24, 32)).astype(np.uint8)
-              for _ in range(6)]
-    anim = write_gif(frames, pal, delays_cs=20)      # 5 fps
-    bmp = write_bmp(rng.integers(0, 256, (24, 32, 3)).astype(np.uint8))
-    media = spark.createDataFrame(pd.DataFrame(
-        [(0, "image", anim, 0, 0, 3, None, None, None, None),
-         (1, "image", bmp, 0, 0, 3, None, None, None, None),
-         (2, "video", anim, 0, 0, 3, None, None, 1.0, 1)],
-        columns=["media_id", "kind", "payload", "width", "height",
-                 "channels", "sample_rate", "n_samples", "fps",
-                 "n_frames"]))
-    feats = {r["media_id"]: r for r in
-             image_features(media, resize_to=(4, 4), strict=True)
-             .collect()}
-    assert (feats[0]["width"], feats[0]["height"]) == (32, 24)
-    assert feats[1]["mean"] == pytest.approx(
-        parse_bmp(bmp).mean(), rel=1e-12)
-    vid = video_frame_sample(media, every_n=2, strict=True).collect()
-    got = {r["frame_idx"]: r["mean"] for r in vid}
-    assert set(got) == {0, 2, 4}
-    assert got[2] == pytest.approx(pal[frames[2]].mean(), rel=1e-12)
-    assert got[0] == pytest.approx(got[0])
-    mimes = {r["media_id"]: r["mime"]
-             for r in with_mime(media).collect()}
-    assert mimes[0] == "image/gif" and mimes[1] == "image/bmp"

@@ -1,9 +1,7 @@
 """Baseline JPEG codec (sources/jpeg.py): exactness on block-constant
-images, near-losslessness at quant=1, header robustness, and the
-multimodal strict-mode integration."""
+images, near-losslessness at quant=1 and header robustness."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from lib_gdal_spark.sources.jpeg import (
@@ -77,24 +75,6 @@ def test_custom_quant_table_roundtrips_through_dqt():
     q = np.full(64, 3)
     q[0] = 8  # DC must divide 8*(v-128) for exactness
     assert np.array_equal(parse_jpeg(write_jpeg(img, quant=q)), img)
-
-
-def test_multimodal_strict_decodes_jpeg(spark):
-    from lib_gdal_spark.operators.multimodal import (
-        MEDIA_SCHEMA, image_features)
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for m in range(6):
-        img = _block_img(rng, 3, 4)
-        rows.append((m, "image", write_jpeg(img), 0, 0, 1,
-                     None, None, None, None))
-    media = spark.createDataFrame(pd.DataFrame(rows, columns=[
-        "media_id", "kind", "payload", "width", "height", "channels",
-        "sample_rate", "n_samples", "fps", "n_frames"]))
-    feats = image_features(media, resize_to=(8, 8), strict=True)
-    got = {r["media_id"]: (r["width"], r["height"]) for r in feats.collect()}
-    assert got == {m: (32, 24) for m in range(6)}
 
 
 def test_420_subsampling_roundtrip():

@@ -106,24 +106,3 @@ def test_benford_on_benford_distributed_data(spark):
     chi2u = sum(r["chi2_term"] for r in
                 benford_test(uni, "v").collect())
     assert chi2u > 100.0
-
-
-def test_k_anonymity_hand_built(spark):
-    from lib_gdal_spark.operators.mixing import k_anonymity
-
-    rows = (
-        [("en", "a", 100, v) for v in (10, 20, 30, 40, 50)]   # ok class
-        + [("de", "a", 100, 10), ("de", "a", 100, 10)]        # small, 1 val
-        + [("fr", "b", 200, v) for v in (1, 1, 1, 1, 1, 1)]   # big, 1 val
-    )
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["lang", "source", "size_band", "t"]),
-        schema="lang string, source string, size_band int, t int")
-    got = k_anonymity(df, ["lang", "source", "size_band"], "t",
-                      k=5, l=2).first()
-    assert got["n_rows"] == 13 and got["n_classes"] == 3
-    assert got["k_violations"] == 1 and got["rows_at_risk_k"] == 2
-    assert got["min_class"] == 2
-    assert got["l_violations"] == 2 and got["rows_at_risk_l"] == 8
-    assert got["min_diversity"] == 1
-    assert not got["k_anonymous"] and not got["l_diverse"]

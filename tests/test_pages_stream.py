@@ -75,7 +75,7 @@ def test_stream_first_seen_dedup(spark, staged):
     d, src = staged
     stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
     out = PS.first_seen_urls(PS.enrich_stream(stream, res=12))
-    got = _run_stream(spark, out, "dedup_stream", "append",
+    got = _run_stream(spark, out, "first_seen_stream", "append",
                       os.path.join(d, "ck3"))
     n_urls = spark.read.parquet(src).select("url").distinct().count()
     assert got.count() == n_urls

@@ -1,5 +1,5 @@
 """Tests for the round-3 pipeline additions: k-means / SemDeDup,
-data-mixing samplers, TF-IDF, PII redaction."""
+TF-IDF, PII redaction, Bloom membership, line dedup."""
 
 import math
 
@@ -8,7 +8,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators import cluster as CL
-from lib_gdal_spark.operators import mixing as MX
 from lib_gdal_spark.operators import textops as TX
 
 
@@ -76,38 +75,6 @@ def _docs(spark, n=60):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
-def test_sample_sources_rates_and_determinism(spark):
-    d = _docs(spark)
-    none = MX.sample_sources(d, {}, default_rate=0.0).count()
-    allr = MX.sample_sources(d, {}, default_rate=1.0).count()
-    assert none == 0 and allr == 60
-    r1 = {r["doc_id"] for r in
-          MX.sample_sources(d, {"src0": 0.5}, default_rate=0.2).collect()}
-    r2 = {r["doc_id"] for r in
-          MX.sample_sources(d.repartition(13), {"src0": 0.5},
-                            default_rate=0.2).collect()}
-    assert r1 == r2  # partitioning-independent keep-set
-    # a different seed draws a different set (overwhelmingly likely)
-    r3 = {r["doc_id"] for r in
-          MX.sample_sources(d, {"src0": 0.5}, default_rate=0.2,
-                            seed=7).collect()}
-    assert r1 != r3
-
-
-def test_sample_token_budget_prefix(spark):
-    d = _docs(spark)
-    out = MX.sample_to_token_budget(d, 10)
-    rows = out.collect()
-    assert rows and all(r["cum_tokens"] <= 10 for r in rows)
-    # per source: the kept set is a prefix in (hash, id) order -> adding
-    # any dropped doc of that source would exceed the budget via cumsum
-    per = {}
-    for r in rows:
-        per.setdefault(r["source"], []).append(r)
-    for src, kept in per.items():
-        assert max(r["cum_tokens"] for r in kept) <= 10
-
-
 def test_tfidf_hand_case(spark):
     d = spark.createDataFrame(
         [(0, "apple apple banana"), (1, "banana cherry"), (2, "cherry")],
@@ -137,19 +104,6 @@ def test_redact_pii_all_categories(spark):
     assert clean["redacted"] == "no pii here" and clean["n_email"] == 0
 
 
-def test_sample_token_budget_bucketed_identical(spark):
-    """salt_buckets=B reproduces the single-window output exactly (range
-    buckets partition the (hash, id) order)."""
-    d = _docs(spark, 200)
-    one = sorted((r["doc_id"], r["cum_tokens"]) for r in
-                 MX.sample_to_token_budget(d, 55).collect())
-    for b in (4, 16):
-        salted = sorted((r["doc_id"], r["cum_tokens"]) for r in
-                        MX.sample_to_token_budget(
-                            d, 55, salt_buckets=b).collect())
-        assert salted == one, b
-
-
 def test_ngram_lm_perplexity_hand_case(spark):
     """Hand-computed add-0.5 bigram LM: C1 = {a:3, b:3, z:2, only:1},
     V = 4 (k*V = 2), C2 = {(a,b):3, (b,a):1, (z,z):1}."""
@@ -167,69 +121,6 @@ def test_ngram_lm_perplexity_hand_case(spark):
     assert abs(out[0]["ppl"] - round(math.exp(h0), 6)) < 1e-12
     assert abs(out[2]["cross_entropy"] - round(-q_zz / 1e6, 6)) < 1e-12
     assert out[3]["n_bigrams"] == 0 and out[3]["cross_entropy"] is None
-
-
-def test_pack_sequences_contiguous_and_bucket_invariant(spark):
-    d = _docs(spark, 150)
-    out = MX.pack_sequences(d, seq_len=16).collect()
-    rows = sorted(out, key=lambda r: r["gstart"])
-    # exact concatenation: starts tile the token stream with no gaps
-    pos = 0
-    for r in rows:
-        assert r["gstart"] == pos
-        assert r["first_seq"] == pos // 16
-        assert r["last_seq"] == (pos + r["n_tokens"] - 1) // 16
-        pos += r["n_tokens"]
-    # bucket count must not change the plan
-    b1 = sorted((r["doc_id"], r["gstart"]) for r in
-                MX.pack_sequences(d, seq_len=16, salt_buckets=1).collect())
-    b64 = sorted((r["doc_id"], r["gstart"]) for r in
-                 MX.pack_sequences(d, seq_len=16, salt_buckets=64).collect())
-    assert b1 == b64 == sorted((r["doc_id"], r["gstart"]) for r in rows)
-
-
-def _q6(v):
-    """round-half-away-from-zero to micro-units (matches F.round/DuckDB)."""
-    return int(math.copysign(math.floor(abs(v) * 1e6 + 0.5), v))
-
-
-def test_dsir_importance_hand_case(spark):
-    from lib_gdal_spark.operators.dedup import hash_str64
-
-    rows = [(0, "aa bb"), (1, "aa bb"), (2, "cc dd"), (3, "")]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in MX.dsir_importance(
-        d, target=F.col("text").contains("aa"), n_buckets=8).collect()}
-    # hand-computed: grams per non-empty doc = 2 unigrams + 1 bigram
-    B, a = 8, 0.5
-    cr, ct = {}, {}
-    for did, txt in rows:
-        toks = txt.split()
-        grams = toks + [f"{toks[i]} {toks[i+1]}" for i in range(len(toks) - 1)]
-        for g in grams:
-            b = hash_str64(g) % B
-            cr[b] = cr.get(b, 0) + 1
-            if "aa" in txt:
-                ct[b] = ct.get(b, 0) + 1
-    tr, tt = sum(cr.values()), sum(ct.values())
-    for did, txt in rows:
-        toks = txt.split()
-        grams = toks + [f"{toks[i]} {toks[i+1]}" for i in range(len(toks) - 1)]
-        r = out[did]
-        assert r["n_grams"] == len(grams)
-        if not grams:
-            assert r["log_weight"] is None and r["selected"] is None
-            continue
-        w = sum(
-            _q6(math.log((ct.get(hash_str64(g) % B, 0) + a) / (tt + a * B)))
-            - _q6(math.log((cr[hash_str64(g) % B] + a) / (tr + a * B)))
-            for g in grams
-        )
-        assert r["log_weight"] == round(w / 1e6, 6)
-        assert r["selected"] == (w > 0)
-    # the target-matching docs must outscore the off-domain doc
-    assert out[0]["log_weight"] > out[2]["log_weight"]
-    assert out[0]["is_target"] and not out[2]["is_target"]
 
 
 def test_bloom_membership_no_false_negatives(spark):
@@ -326,64 +217,3 @@ def test_nb_classifier_separable_and_deterministic(spark):
     out2 = {r["doc_id"]: r["log_odds"] for r in
             TX.nb_classifier(d.repartition(13), F.col("y")).collect()}
     assert out2 == {k: v["log_odds"] for k, v in out.items()}
-
-
-def test_chunk_documents_coverage_and_overlap(spark):
-    """Every token lands in >= 1 chunk; consecutive chunks share exactly
-    `overlap` tokens; trailing chunk may be short; 1-chunk and empty-text
-    edge cases."""
-    import pandas as pd
-
-    from lib_gdal_spark.operators import mixing as MX
-
-    texts = [
-        " ".join(f"t{i}" for i in range(50)),   # 50 tokens: multi-chunk
-        " ".join(f"s{i}" for i in range(10)),   # single chunk
-        "one",                                   # 1 token
-        "   ",                                   # blank: dropped
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-        schema="doc_id long, text string",
-    )
-    out = MX.chunk_documents(df, chunk_size=16, overlap=4)
-    rows = sorted(
-        ((r["doc_id"], r["chunk_idx"], r["start_tok"],
-          r["n_chunk_tokens"], r["chunk_text"]) for r in out.collect())
-    )
-    by_doc = {}
-    for d, k, st, nt, ct in rows:
-        by_doc.setdefault(d, []).append((k, st, nt, ct.split(" ")))
-    # doc 0: 50 tokens, stride 12 -> starts 1,13,25,37,49 (5 chunks)
-    assert [c[1] for c in by_doc[0]] == [1, 13, 25, 37, 49]
-    assert [c[2] for c in by_doc[0]] == [16, 16, 16, 14, 2]
-    toks0 = texts[0].split()
-    covered = set()
-    for k, st, nt, ct in by_doc[0]:
-        assert ct == toks0[st - 1: st - 1 + nt]
-        covered.update(range(st, st + nt))
-    assert covered == set(range(1, 51))
-    for (k1, st1, nt1, ct1), (k2, st2, nt2, ct2) in zip(
-            by_doc[0], by_doc[0][1:]):
-        # carried context: the next chunk's prefix re-reads the previous
-        # chunk's suffix (min(overlap, len) tokens for the short tail)
-        shared = nt1 - (st2 - st1)
-        assert shared == min(4, nt2)
-        assert ct1[st2 - st1:] == ct2[:shared]
-    assert by_doc[1] == [(0, 1, 10, texts[1].split())]
-    assert by_doc[2] == [(0, 1, 1, ["one"])]
-    assert 3 not in by_doc
-
-
-def test_chunk_documents_param_guard(spark):
-    import pandas as pd
-    import pytest
-
-    from lib_gdal_spark.operators import mixing as MX
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0], "text": ["x"]}),
-        schema="doc_id long, text string",
-    )
-    with pytest.raises(ValueError):
-        MX.chunk_documents(df, chunk_size=8, overlap=8)

@@ -141,34 +141,6 @@ def test_haversine_metric_properties(lon1, lat1, lon2, lat2):
     assert d12 <= 6371.0088 * np.pi + 1e-6  # half circumference
 
 
-def test_cosine_topk_ivf_contract(spark, sf_dir):
-    """IVF: candidates always come from probed lists; full probe == exact;
-    recall grows monotonically with nprobe."""
-    from pyspark.sql import functions as F
-
-    from lib_gdal_spark.operators import ann as ANN
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = corpus.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    exact = {(r["qid"], r["rank"]): r["vec_id"]
-             for r in ANN.cosine_topk(queries, corpus, k=5).collect()}
-    last = -1
-    for nprobe in (4, 16, 32):
-        got = {(r["qid"], r["rank"]): r["vec_id"]
-               for r in ANN.cosine_topk_ivf(
-                   queries, corpus, k=5, n_lists=32, nprobe=nprobe
-               ).collect()}
-        overlap = sum(1 for k2 in exact if got.get(k2) == exact[k2])
-        assert overlap >= last
-        last = overlap
-    assert got == exact  # full probe degenerates to exact
-
-
 # --- round-3: WKB/WKT codec properties over the widened type set ---------
 
 _coord = st.floats(min_value=-1e6, max_value=1e6,

@@ -51,3 +51,20 @@ def test_too_few_points_raises(spark):
                                 F.lit(0).alias("x"), F.lit(0).alias("y"))
     with pytest.raises(ValueError):
         ransac_line(one)
+
+
+def test_vertical_inliers_give_null_slope(spark):
+    """Constant-x inliers have no y = a*x + b form: NULL slope and
+    intercept, the real inlier count and the usual schema."""
+    pts = spark.range(50).select(
+        F.col("id").alias("pid"),
+        F.when(F.col("id") % 5 == 0, (F.col("id") * 13) % 97 + 20)
+         .otherwise(7).alias("x"),
+        (F.col("id") * 3).alias("y"))
+    df = ransac_line(pts, trials=32, tol=2)
+    assert df.dtypes == [("n", "bigint"), ("best_trial", "bigint"),
+                         ("n_inliers", "bigint"), ("slope", "double"),
+                         ("intercept", "double")]
+    r = df.collect()[0]
+    assert r["n"] == 50 and r["n_inliers"] == 40
+    assert r["slope"] is None and r["intercept"] is None

@@ -122,6 +122,63 @@ def test_with_tile_null_coords_get_null_tile(spark):
         assert got[4] == (ex[0], ey[0])
 
 
+def _page(url: str, head: str, body: str | bytes) -> tuple:
+    if isinstance(body, str):
+        body = body.encode("utf-8")
+    html = (f"<html><head><title>t</title>{head}</head><body>".encode()
+            + body + b"</body></html>")
+    return (url, None, bytearray(html), "", "en")
+
+
+def test_enrich_out_of_range_coords_are_null(spark):
+    """|lat| > 90 or |lon| > 180 is no coordinate: NULL lon/lat/cell and a
+    NULL tile, not a silent edge cell (95;500 used to land in x=4095, y=0
+    at res 12). The range bounds themselves stay valid."""
+    meta = '<meta name="geo.position" content="{};{}">'
+    span = '<span data-lat="{}" data-lon="{}">here</span>'
+    rows = [
+        _page("meta_out", meta.format("95.0", "500.0"), "<p>a</p>"),
+        _page("lat_out", meta.format("-90.5", "10.0"), "<p>a</p>"),
+        _page("lon_out", "", span.format("10.0", "-180.25")),
+        _page("bounds", meta.format("-90.0", "180.0"), "<p>a</p>"),
+        _page("inside", "", span.format("48.85", "2.35")),
+    ]
+    pages = spark.createDataFrame(rows, P.PAGES_SCHEMA)
+    got = {r["url"]: r for r in
+           geo.with_tile(geo.enrich_pages(pages, res=12), z=12).collect()}
+    for url in ("meta_out", "lat_out", "lon_out"):
+        r = got[url]
+        assert (r["lon"], r["lat"], r["cell"], r["tx"], r["ty"]) == \
+            (None, None, None, None, None), url
+    for url, lon, lat in (("bounds", 180.0, -90.0), ("inside", 2.35, 48.85)):
+        r = got[url]
+        assert (r["lon"], r["lat"]) == (lon, lat)
+        assert r["cell"] == C.lonlat_to_cell(
+            np.array([lon]), np.array([lat]), 12)[0]
+
+
+def test_enrich_invalid_utf8_keeps_the_row(spark, pages_df):
+    """One page of invalid utf-8 no longer fails the job: its bytes decode
+    to U+FFFD, the text invariant re-derives the same text, and valid
+    pages come out exactly as before."""
+    bad = spark.createDataFrame(
+        [_page("bad", '<meta name="geo.position" content="1.5;2.5">',
+               b"<p>caf\xe9 \xff\xfe ok</p>")], P.PAGES_SCHEMA)
+    good = pages_df.orderBy("url").limit(300)
+    out = {r["url"]: r for r in
+           geo.enrich_pages(good.unionByName(bad), res=12).collect()}
+    r = out["bad"]
+    assert r["text"] == "t\ncaf\ufffd \ufffd\ufffd ok"
+    assert (r["lon"], r["lat"]) == (2.5, 1.5)
+    ref = {r["url"]: r for r in geo.enrich_pages(good, res=12).collect()}
+    want = {r["url"]: r["text"] for r in good.collect()}
+    assert len(ref) == 300 and all(
+        out[u] == ref[u] and out[u]["text"].encode() == want[u].encode()
+        for u in ref)
+    stored = bad.withColumn("text", F.lit(r["text"]))
+    assert geo.verify_text_invariant(stored).count() == 0
+
+
 def test_knn_bruteforce_vs_kring(spark, enriched):
     pts = (
         enriched.where(F.col("lon").isNotNull())

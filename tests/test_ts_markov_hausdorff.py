@@ -1,5 +1,6 @@
-"""Closed-form checks for periodogram, Holt smoothing, Markov chain,
-and discrete Hausdorff."""
+"""Closed-form checks for periodogram, Holt smoothing, the trajectory
+distances (Hausdorff, DTW, Frechet, LCSS), circular statistics and the
+Jonckheere trend test."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from lib_gdal_spark.operators.events import markov_chain
 from lib_gdal_spark.operators.timeseries import holt_smoothing, periodogram
 from lib_gdal_spark.operators.trajectory import hausdorff_pairs
 
@@ -39,28 +39,6 @@ def test_holt_alpha1(spark):
         assert r["trend"] == 1.0           # b stays at x1 - x0 = 1
     assert out[0]["fitted"] is None
     assert out[3]["fitted"] == out[2]["level"] + 1.0
-
-
-def test_markov_chain_counts_and_occupancy(spark):
-    # user 1: a->b->a->b, user 2: a->a->c — known transitions
-    rows = [
-        (1, 1, "a"), (2, 1, "b"), (3, 1, "a"), (4, 1, "b"),
-        (5, 2, "a"), (6, 2, "a"), (7, 2, "c"),
-    ]
-    ev = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["event_id", "user_id", "event_type"])
-    ).withColumn("ts", F.col("event_id").cast("timestamp"))
-    out = {(r["src"], r["dst"]): r for r in
-           markov_chain(ev, steps=1).collect()}
-    assert out[("a", "b")]["n_trans"] == 2
-    assert out[("a", "a")]["n_trans"] == 1
-    assert out[("b", "a")]["n_trans"] == 1
-    assert out[("a", "c")]["n_trans"] == 1
-    assert out[("a", "b")]["p"] == 0.5
-    # both users start at 'a'; 1-step occupancy = P[a, :]
-    assert out[("a", "b")]["occ_dst"] == 0.5
-    assert out[("a", "a")]["occ_dst"] == 0.25
-    assert out[("a", "c")]["occ_dst"] == 0.25
 
 
 def test_hausdorff_known_pair(spark):
@@ -130,44 +108,6 @@ def test_dtw_max_len_guard(spark):
     import pytest as _pt
     with _pt.raises(Exception):
         dtw_pairs(pts, pairs, max_len=4).collect()
-
-
-def test_viterbi_textbook(spark):
-    """Rabiner-style sanity: with strongly-diagnostic emissions the
-    decoded path follows the observations."""
-    import math
-    from lib_gdal_spark.operators.events import viterbi_decode
-    pi = [math.log(0.5), math.log(0.5)]
-    a = [[math.log(0.9), math.log(0.1)], [math.log(0.1), math.log(0.9)]]
-    b = {"x": [math.log(0.9), math.log(0.1)],
-         "y": [math.log(0.1), math.log(0.9)]}
-    rows = [(i, 1, o) for i, o in enumerate(["x", "x", "y", "y", "y"])]
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string"
-    ).withColumn("ts", F.col("event_id").cast("timestamp"))
-    r = viterbi_decode(ev, pi, a, b).collect()[0]
-    assert r["path"] == "00111"
-    assert r["n_obs"] == 5
-    # exact log-likelihood of that path
-    import math as m
-    ll = (pi[0] + b["x"][0] + a[0][0] + b["x"][0] + a[0][1] + b["y"][1]
-          + a[1][1] + b["y"][1] + a[1][1] + b["y"][1])
-    assert r["loglik"] == round(ll, 9)
-
-
-def test_viterbi_tie_prefers_smaller_state(spark):
-    import math
-    from lib_gdal_spark.operators.events import viterbi_decode
-    # fully symmetric model: every comparison ties -> all-zeros path
-    pi = [math.log(0.5), math.log(0.5)]
-    a = [[math.log(0.5), math.log(0.5)], [math.log(0.5), math.log(0.5)]]
-    b = {"x": [math.log(1.0), math.log(1.0)]}
-    ev = spark.createDataFrame(
-        [(i, 1, "x") for i in range(4)],
-        "event_id long, user_id long, event_type string"
-    ).withColumn("ts", F.col("event_id").cast("timestamp"))
-    r = viterbi_decode(ev, pi, a, b).collect()[0]
-    assert r["path"] == "0000"
 
 
 def test_frechet_identical_and_shifted(spark):

@@ -26,51 +26,38 @@ QUERIES = [
     "pip_join_pentagon", "knn_kring", "rasterize_counts",
     "polygonize_components", "polygonize_rings", "grid_idw",
     "warp_utm_nearest", "layer_union", "graph_sssp", "band_stats",
-    "dedup_exact", "minhash_lsh_pairs",
     # round-3 additions
     "raster_checksum", "raster_checksum_complex", "warp_ps_nearest",
     "warp_albers_nearest", "translate_cubic", "pyramid_magphase_l1",
     "ogr_special_fields", "grid_avgdist",
     # round-3 pipeline additions
-    "substring_dedup", "fuzzy_dedup", "semantic_dedup", "kmeans_clusters",
-    "tfidf_top_terms", "pii_redact", "sample_sources",
-    "sample_token_budget", "lm_perplexity",
+    "semantic_dedup", "kmeans_clusters",
     # round-3 source-codec wave
-    "link_graph", "osm_way_assembly", "gtiff_roundtrip", "warc_ingest",
-    "robots_filter", "cdx_index", "zonal_stats",
+    "osm_way_assembly", "gtiff_roundtrip", "warc_ingest", "cdx_index",
+    "zonal_stats",
     # round-3 continuation 2
-    "cdc_chunks", "cdc_dup_chunks", "wet_wat_ingest",
+    "wet_wat_ingest",
     # round-3 session 5
     "raster_footprint", "raster_compare", "contour_polygons",
-    "tpch_promo_share", "char_entropy", "domain_blocklist",
-    "fix_mojibake", "cosine_topk_int8", "wrap_dateline", "great_circle",
+    "tpch_promo_share", "wrap_dateline", "great_circle",
     "dem_hillshade_multi",
     # round-4 session-3 additions
-    "mgrs_cells", "plus_codes", "quadkeys", "soundex_keys",
-    "boilerplate_removal", "gopher_dup_ngrams", "gopher_quality",
-    "gopher_top_ngrams", "readability", "url_features",
-    "warp_cassini_nearest", "warp_polyconic_nearest",
-    "warp_mercator_nearest", "warp_eqc_nearest", "warp_omerc_nearest",
-    "warp_ups_nearest", "decontaminate_items", "ccnet_buckets",
-    "sample_temperature", "pii_luhn", "pii_iban", "typo_pairs",
+    "mgrs_cells", "plus_codes", "quadkeys", "warp_cassini_nearest",
+    "warp_polyconic_nearest", "warp_mercator_nearest", "warp_eqc_nearest",
+    "warp_omerc_nearest", "warp_ups_nearest",
     # round-4 session-8 additions
-    "map_match", "mann_kendall", "dwell_segments", "retention_cohorts",
-    "textrank_terms", "burst_detection", "polygon_neighbors",
-    "raster_quantile_classes", "attribution", "emerging_hotspots",
+    "map_match", "mann_kendall", "dwell_segments", "polygon_neighbors",
+    "raster_quantile_classes", "emerging_hotspots",
     # round-4 session-11 additions
     "geomorphons", "focal_stats", "tpi_landforms", "netcdf_roundtrip",
     "flow_length", "flow_length_upstream", "od_matrix", "knox_test",
-    "two_step_fca", "jaccard_prefix_join", "random_projection",
-    "line_density", "betweenness", "coreness", "st_dbscan",
-    "trimmed_mean", "kaplan_meier", "theil_sen", "jenks_breaks",
-    "otsu_threshold", "zonal_majority", "image_quality", "audio_quality",
+    "two_step_fca", "line_density", "betweenness", "coreness", "st_dbscan",
+    "theil_sen", "jenks_breaks", "otsu_threshold", "zonal_majority",
     # round-4 session-12 additions
     "focal_median", "unsharp_mask", "kuwahara", "hist_match",
-    "ts_acf", "ts_trend", "ts_seasonal", "ts_changepoint", "ts_ewma",
-    "welch_ttest", "chaikin_smooth", "snap_to_grid",
-    "min_enclosing_circle", "largest_empty_circle", "mst_boruvka",
-    "ipf_gravity", "visvalingam", "pca_features", "solar_exposure",
-    "isochrone_bands", "dem_hand", "mattr",
+    "chaikin_smooth", "snap_to_grid", "min_enclosing_circle",
+    "largest_empty_circle", "mst_boruvka", "ipf_gravity", "visvalingam",
+    "pca_features", "solar_exposure", "isochrone_bands", "dem_hand",
 ]
 
 
@@ -129,8 +116,8 @@ def main() -> None:
                 "\nReproduce: `python tools/shuffle_audit.py --write`. "
                 "Broadcast-side joins (PIP, kNN, rasterize, overlays) show "
                 "near-zero shuffle — the big side never moves; the "
-                "shuffling queries (polygonize merge, grid bucket explode, "
-                "dedup groupBy) shuffle O(perimeter)/O(candidates), not "
+                "shuffling queries (polygonize merge, grid bucket explode) "
+                "shuffle O(perimeter)/O(candidates), not "
                 "O(pixels)/O(corpus^2).\n"
             )
     print(json.dumps({n: {"read": r, "write": w, "spill_mem": sm,
