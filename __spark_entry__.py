@@ -4175,8 +4175,7 @@ def q_warp_geoloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dst window inside the swath: lon 11..21, lat 38..44
     dst_gt = (11.0, 10.0 / 64, 0.0, 44.0, 0.0, -6.0 / 64)
     out = RAST.warp_to_crs_tiles_dist(tiles, dst_gt, 64, 64, inverse,
-                                      alg="nearest", tile=32,
-                                      edge_samples=5)
+                                      alg="nearest", tile=32)
     return _explode_px(out, tile=32).select(
         "px", "py", F.col("v").cast("long").alias("v")
     )

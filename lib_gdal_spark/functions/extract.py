@@ -30,35 +30,6 @@ _SPAN_GEO_RE = (
 _PARA_RE = r"<p>([^<]*)</p>"
 
 
-def html_to_text(html: pd.Series) -> pd.Series:
-    """Extract canonical text from html (str Series -> str Series)."""
-    title = html.str.extract(_TITLE_RE, expand=False).fillna("")
-    paras = html.str.findall(_PARA_RE).str.join("\n")
-    span = html.str.extract(_SPAN_GEO_RE, expand=True)[2].fillna("")
-    text = title.str.cat(paras, sep="\n")
-    has_span = span.str.len() > 0
-    text = text.where(~has_span, text.str.cat(span, sep="\n"))
-    return text
-
-
-def extract_coords(html: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Mine (lon, lat) from html; NaN when the page carries no coordinates.
-
-    Mirrors the NULL-geometry path of the reference's join semantics
-    (``drivers/ogr_gensql.cpp:1310-1316``): rows without coordinates keep
-    NULL keys and fall out of spatial joins naturally.
-    """
-    meta = html.str.extract(_META_GEO_RE, expand=True)
-    span = html.str.extract(_SPAN_GEO_RE, expand=True)
-    lat = pd.to_numeric(meta[0], errors="coerce").fillna(
-        pd.to_numeric(span[0], errors="coerce")
-    )
-    lon = pd.to_numeric(meta[1], errors="coerce").fillna(
-        pd.to_numeric(span[1], errors="coerce")
-    )
-    return lon.astype(np.float64), lat.astype(np.float64)
-
-
 def decode_html(html_bytes: pd.Series) -> pd.Series:
     """binary -> str (utf-8). Invalid byte sequences decode to U+FFFD, so
     one malformed page keeps its row instead of failing the batch; valid
@@ -68,12 +39,15 @@ def decode_html(html_bytes: pd.Series) -> pd.Series:
 
 
 def extract_enriched(html: pd.Series):
-    """Fused single-pass extraction: (text, lon, lat) with each regex run
-    ONCE over the batch. ``html_to_text`` + ``extract_coords`` run the
-    geo-span regex twice between them; on the flagship pipeline that second
-    full-corpus scan is pure overhead, so the enrich path calls this
-    instead. Outputs are byte/bit-identical to the two-call form (same
-    regexes, same combination order) — the text invariant stays intact.
+    """The extractor: (text, lon, lat) from decoded html (str Series), with
+    each regex run ONCE over the batch.
+
+    ``text`` follows the text contract above; ``lon``/``lat`` are NaN when
+    the page carries no coordinates, mirroring the NULL-geometry path of
+    the reference's join semantics (``drivers/ogr_gensql.cpp:1310-1316``):
+    rows without coordinates keep NULL keys and fall out of spatial joins.
+    ``enrich_pages`` writes its output and ``verify_text_invariant``
+    re-derives text with it, so the invariant checks this very code.
     """
     title = html.str.extract(_TITLE_RE, expand=False).fillna("")
     paras = html.str.findall(_PARA_RE).str.join("\n")

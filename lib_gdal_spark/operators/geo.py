@@ -36,8 +36,6 @@ def enrich_pages(pages: DataFrame, res: int = 12) -> DataFrame:
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             html = X.decode_html(b["html"])
-            # fused single-pass extraction (the geo-span regex would
-            # otherwise scan the corpus twice); bit-identical outputs
             text, lon, lat = X.extract_enriched(html)
             # NaN compares False: missing and out-of-range both drop out
             ok = ((np.abs(lat.to_numpy()) <= 90.0)
@@ -67,13 +65,14 @@ def enrich_pages(pages: DataFrame, res: int = 12) -> DataFrame:
 def verify_text_invariant(pages: DataFrame) -> DataFrame:
     """Rows violating byte-identical extracted text per url (must be empty).
 
-    The check re-runs extraction on ``html`` and compares against the stored
-    ``text`` column byte-for-byte (``BASELINE.json:16``).
+    The check re-runs extraction on ``html`` with ``extract.extract_enriched``,
+    the extractor ``enrich_pages`` writes with, and compares against the
+    stored ``text`` column byte-for-byte (``BASELINE.json:16``).
     """
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            got = X.html_to_text(X.decode_html(b["html"]))
+            got, _, _ = X.extract_enriched(X.decode_html(b["html"]))
             bad = got.str.encode("utf-8") != b["text"].str.encode("utf-8")
             yield pd.DataFrame({"url": b["url"][bad]})
 

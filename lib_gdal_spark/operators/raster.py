@@ -7,9 +7,9 @@
 - ``checksum_rasters``: the GDAL image checksum as a distributed aggregate —
   per-tile partials at the tile's global row-major offset, summed, masked
   (``core/alg/gdalchecksum.cpp`` semantics; see kernels.checksum).
-- ``warp_to_mercator_tiles``: produce web-mercator (z,x,y) output tiles from
-  an EPSG:4326 source raster — the gdalwarp pipeline as a DataFrame program:
-  dst tile grid -> per-dst-tile source window join -> Arrow-UDF kernel.
+- ``warp_to_mercator_tiles_dist`` / ``warp_to_crs_tiles_dist``: gdalwarp as
+  one windowed DataFrame program for either target grid: dst tile grid ->
+  per-dst-tile source window join -> Arrow-UDF kernel.
 """
 
 from __future__ import annotations
@@ -214,106 +214,14 @@ _WARP_MARGIN = {"nearest": 1, "bilinear": 2, "cubic": 3, "cubicspline": 3,
                 "lanczos": 4}  # aggregate algs (R.AGG_ALGS) default to 2
 
 
-def warp_to_mercator_tiles_dist(
-    tiles: DataFrame,
-    z: int,
-    alg: str = "nearest",
-    tile: int = 256,
-    raster_id: str | None = None,
-) -> DataFrame:
-    """Distributed gdalwarp: one task per DST tile with a src-window join.
+def _source_catalog(src: DataFrame) -> DataFrame:
+    """One row per (raster_id, band): nominal tile size, full raster size,
+    dtype, the full-raster origin geotransform ``g0..g5`` and its inverse
+    ``i0..i5`` — the source side of every windowed warp.
 
-    The scale-correct re-expression of ``ChunkAndWarpImage``
-    (``core/alg/gdalwarpoperation.cpp:895`` / SURVEY.md §3.3): the dst tile
-    grid is a DataFrame of (z, x, y) keys; each dst tile inverse-maps its
-    mercator footprint to a source pixel window (+ kernel-radius margin, the
-    role of ComputeSourceWindow), joins exactly the source tiles it needs,
-    and runs the Arrow-UDF kernel on that window. Only O(window) bytes move
-    per dst tile; results are bit-identical to the single-mosaic path
-    because the kernel floors indices in global coordinates
-    (kernels.resample.warp_tile windowed mode).
+    ONE catalog-size aggregate; the origin derives from an anchor tile, and
+    ANY tile works (VERDICT r1 advice: a sparse raster may lack (0,0)).
     """
-    src = tiles if raster_id is None else tiles.where(
-        F.col("raster_id") == raster_id
-    )
-    task_df = mercator_warp_tasks(src, z, alg=alg, tile=tile)
-    joined = task_df.join(
-        src.select("raster_id", "band",
-                   F.col("tile_x").alias("src_tx"),
-                   F.col("tile_y").alias("src_ty"),
-                   "tile_w", "tile_h", "pixels"),
-        ["raster_id", "band", "src_tx", "src_ty"],
-    )
-
-    n = 1 << z
-    span = 2.0 * C.ORIGIN_SHIFT / n
-    res = span / tile
-
-    def warp_dst(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rid, band, txd, tyd = key[0], int(key[1]), int(key[2]), int(key[3])
-        r0 = pdf.iloc[0]
-        wx0, wy0 = int(r0["wx0"]), int(r0["wy0"])
-        wx1, wy1 = int(r0["wx1"]), int(r0["wy1"])
-        W, H = int(r0["full_w"]), int(r0["full_h"])
-        gt = tuple(float(r0[f"g{i}"]) for i in range(6))
-        # NaN init: source tiles missing from a sparse raster must not read
-        # as value 0.0 (VERDICT r1 advice)
-        window = np.full((wy1 - wy0, wx1 - wx0), np.nan, dtype=np.float64)
-        for _, row in pdf.iterrows():
-            tw, th = int(row["tile_w"]), int(row["tile_h"])
-            arr = np.asarray(row["pixels"], dtype=np.float64).reshape(th, tw)
-            gx0 = int(row["src_tx"]) * int(r0["tw_nom"])
-            gy0 = int(row["src_ty"]) * int(r0["th_nom"])
-            sy0, sx0 = max(0, wy0 - gy0), max(0, wx0 - gx0)
-            sy1 = min(th, wy1 - gy0)
-            sx1 = min(tw, wx1 - gx0)
-            if sy1 <= sy0 or sx1 <= sx0:
-                continue
-            window[gy0 + sy0 - wy0 : gy0 + sy1 - wy0,
-                   gx0 + sx0 - wx0 : gx0 + sx1 - wx0] = arr[sy0:sy1, sx0:sx1]
-        minx, miny, maxx_m, maxy_m = C.tile_bounds_mercator(
-            np.array([z]), np.array([txd]), np.array([tyd])
-        )
-        dst_gt = (float(minx[0]), res, 0.0, float(maxy_m[0]), 0.0, -res)
-        if alg in R.AGG_ALGS:
-            out = R.warp_tile_stat(
-                window, gt, (tile, tile), dst_gt, stat=alg,
-                dtype=r0["src_dtype"], transform=merc_inverse,
-                src_origin=(wx0, wy0), src_full_shape=(H, W),
-            )
-        else:
-            out = R.warp_tile(
-                window, gt, (tile, tile), dst_gt, alg=alg,
-                dtype=r0["src_dtype"], transform=merc_inverse,
-                src_origin=(wx0, wy0), src_full_shape=(H, W),
-            )
-        return pd.DataFrame([
-            dict(raster_id=rid, band=band, zoom=z, tile_x=txd, tile_y=tyd,
-                 dtype=r0["src_dtype"], tile_w=tile, tile_h=tile,
-                 gt0=dst_gt[0], gt1=dst_gt[1], gt2=dst_gt[2],
-                 gt3=dst_gt[3], gt4=dst_gt[4], gt5=dst_gt[5],
-                 nodata=None,
-                 pixels=out.astype(np.float64).ravel().tolist())
-        ])
-
-    return joined.groupBy("raster_id", "band", "dst_x", "dst_y").applyInPandas(
-        warp_dst, schema=RASTER_SCHEMA
-    )
-
-
-def mercator_warp_tasks(
-    src: DataFrame, z: int, alg: str = "nearest", tile: int = 256
-) -> DataFrame:
-    """(dst tile, src tile, src window) task frame for the distributed warp.
-
-    Everything except the per-(raster, band) catalog aggregate runs as
-    native column expressions over ``spark.range(4^z)`` — driver memory is
-    flat in z (VERDICT r1 "What's wrong" #3).
-    """
-    spark = src.sparkSession
-    # ONE catalog-size aggregate per (raster_id, band): dims, dtype and an
-    # anchor tile from which the full-raster origin geotransform derives —
-    # ANY tile works (VERDICT r1 advice: a sparse raster may lack (0,0)).
     agg = src.groupBy("raster_id", "band").agg(
         F.max("tile_x").alias("mtx"), F.max("tile_y").alias("mty"),
         F.max("tile_w").alias("tw"), F.max("tile_h").alias("th"),
@@ -341,13 +249,145 @@ def mercator_warp_tasks(
         meta_rows.append((r["raster_id"], int(r["band"]), tw, th, W, H,
                           r["src_dtype"], *map(float, gt), *map(float, iv)))
     from lib_gdal_spark.session import local_df
-    meta_df = local_df(
-        spark, meta_rows,
+    return local_df(
+        src.sparkSession, meta_rows,
         "raster_id string, band int, tw_nom int, th_nom int, "
         "full_w int, full_h int, src_dtype string, "
         "g0 double, g1 double, g2 double, g3 double, g4 double, g5 double, "
         "i0 double, i1 double, i2 double, i3 double, i4 double, i5 double",
     )
+
+
+def _warp_windows(
+    src: DataFrame,
+    tasks: DataFrame,
+    alg: str,
+    transform,
+    dst_tile,
+    zoom: int = 0,
+    out_id: str | None = None,
+    cutline: list | None = None,
+) -> DataFrame:
+    """The kernel half of the windowed warp, shared by every target grid.
+
+    ``tasks`` has one row per (dst tile, src tile) pair, carrying the dst
+    tile's source window ``wx0..wy1`` and the catalog columns of
+    :func:`_source_catalog`. Each dst tile joins exactly the source tiles
+    it needs, assembles its window and resamples it with global-coordinate
+    exactness (kernels.resample.warp_tile windowed mode), so only
+    O(window) bytes move per dst tile. ``dst_tile(tx, ty) -> (tile_gt,
+    (h, w))`` places a dst tile on its grid; ``transform`` maps dst world
+    coordinates to source world coordinates.
+    """
+    joined = tasks.join(
+        src.select("raster_id", "band",
+                   F.col("tile_x").alias("src_tx"),
+                   F.col("tile_y").alias("src_ty"),
+                   "tile_w", "tile_h", "pixels"),
+        ["raster_id", "band", "src_tx", "src_ty"],
+    )
+
+    def warp_dst(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        rid, band, txd, tyd = key[0], int(key[1]), int(key[2]), int(key[3])
+        r0 = pdf.iloc[0]
+        wx0, wy0 = int(r0["wx0"]), int(r0["wy0"])
+        wx1, wy1 = int(r0["wx1"]), int(r0["wy1"])
+        W, H = int(r0["full_w"]), int(r0["full_h"])
+        gt = tuple(float(r0[f"g{i}"]) for i in range(6))
+        # NaN init: source tiles missing from a sparse raster must not read
+        # as value 0.0 (VERDICT r1 advice)
+        window = np.full((wy1 - wy0, wx1 - wx0), np.nan, dtype=np.float64)
+        for _, row in pdf.iterrows():
+            tw, th = int(row["tile_w"]), int(row["tile_h"])
+            arr = np.asarray(row["pixels"], dtype=np.float64).reshape(th, tw)
+            gx0 = int(row["src_tx"]) * int(r0["tw_nom"])
+            gy0 = int(row["src_ty"]) * int(r0["th_nom"])
+            sy0, sx0 = max(0, wy0 - gy0), max(0, wx0 - gx0)
+            sy1 = min(th, wy1 - gy0)
+            sx1 = min(tw, wx1 - gx0)
+            if sy1 <= sy0 or sx1 <= sx0:
+                continue
+            window[gy0 + sy0 - wy0 : gy0 + sy1 - wy0,
+                   gx0 + sx0 - wx0 : gx0 + sx1 - wx0] = arr[sy0:sy1, sx0:sx1]
+        tile_gt, (h, w) = dst_tile(txd, tyd)
+        kw = dict(dtype=r0["src_dtype"], transform=transform,
+                  src_origin=(wx0, wy0), src_full_shape=(H, W))
+        if alg in R.AGG_ALGS:
+            out = R.warp_tile_stat(window, gt, (h, w), tile_gt, stat=alg, **kw)
+        else:
+            out = R.warp_tile(window, gt, (h, w), tile_gt, alg=alg, **kw)
+        if cutline is not None:
+            from lib_gdal_spark.functions import geometry as G2
+            jj2, ii2 = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+            cxs = (tile_gt[0] + (ii2 + 0.5) * tile_gt[1]
+                   + (jj2 + 0.5) * tile_gt[2]).ravel()
+            cys = (tile_gt[3] + (ii2 + 0.5) * tile_gt[4]
+                   + (jj2 + 0.5) * tile_gt[5]).ravel()
+            inside = G2.points_in_rings(cxs, cys, list(cutline))
+            out = np.asarray(out, dtype=np.float64)
+            out[~inside.reshape(h, w)] = np.nan
+        return pd.DataFrame([
+            dict(raster_id=(out_id or rid), band=band, zoom=zoom,
+                 tile_x=txd, tile_y=tyd,
+                 dtype=r0["src_dtype"], tile_w=w, tile_h=h,
+                 gt0=tile_gt[0], gt1=tile_gt[1], gt2=tile_gt[2],
+                 gt3=tile_gt[3], gt4=tile_gt[4], gt5=tile_gt[5],
+                 nodata=None,
+                 pixels=out.astype(np.float64).ravel().tolist())
+        ])
+
+    return joined.groupBy("raster_id", "band", "dst_x", "dst_y").applyInPandas(
+        warp_dst, schema=RASTER_SCHEMA
+    )
+
+
+def warp_to_mercator_tiles_dist(
+    tiles: DataFrame,
+    z: int,
+    alg: str = "nearest",
+    tile: int = 256,
+    raster_id: str | None = None,
+) -> DataFrame:
+    """Distributed gdalwarp: one task per DST tile with a src-window join.
+
+    The scale-correct re-expression of ``ChunkAndWarpImage``
+    (``core/alg/gdalwarpoperation.cpp:895`` / SURVEY.md §3.3): the dst tile
+    grid is a DataFrame of (z, x, y) keys; each dst tile inverse-maps its
+    mercator footprint to a source pixel window (+ kernel-radius margin, the
+    role of ComputeSourceWindow), joins exactly the source tiles it needs,
+    and runs the Arrow-UDF kernel on that window. Output is bit-identical
+    to warping the whole source mosaic with ``kernels.resample.warp_tile``
+    because the kernel floors indices in global coordinates. Dst tiles with
+    no source coverage are not emitted.
+    """
+    src = tiles if raster_id is None else tiles.where(
+        F.col("raster_id") == raster_id
+    )
+    n = 1 << z
+    span = 2.0 * C.ORIGIN_SHIFT / n
+    res = span / tile
+
+    def dst_tile(tx, ty):
+        minx, _, _, maxy = C.tile_bounds_mercator(
+            np.array([z]), np.array([tx]), np.array([ty])
+        )
+        return (float(minx[0]), res, 0.0, float(maxy[0]), 0.0, -res), (tile, tile)
+
+    return _warp_windows(src, mercator_warp_tasks(src, z, alg=alg, tile=tile),
+                         alg, merc_inverse, dst_tile, zoom=z)
+
+
+def mercator_warp_tasks(
+    src: DataFrame, z: int, alg: str = "nearest", tile: int = 256
+) -> DataFrame:
+    """(dst tile, src tile, src window) task frame for the distributed warp.
+
+    Everything except the per-(raster, band) catalog aggregate runs as
+    native column expressions over ``spark.range(4^z)`` — driver memory is
+    flat in z (VERDICT r1 "What's wrong" #3).
+    """
+    spark = src.sparkSession
+    meta_df = _source_catalog(src)
 
     n = 1 << z
     span = 2.0 * C.ORIGIN_SHIFT / n
@@ -414,9 +454,6 @@ def warp_to_crs_tiles_dist(
     tile: int = 64,
     raster_id: str | None = None,
     out_id: str | None = None,
-    edge_samples: int = 7,  # retained for API compat; the window
-    # estimator now maps every dst pixel center (exact), so edge-sample
-    # density no longer matters
     cutline: list | None = None,
 ) -> DataFrame:
     """gdalwarp into an ARBITRARY target CRS grid (round-2, VERDICT #3).
@@ -433,48 +470,17 @@ def warp_to_crs_tiles_dist(
 
     Shape: dst tile keys come from ``spark.range``; each dst tile computes
     its source window inside a *distributed* Arrow batch by inverse-mapping
-    ``edge_samples`` points per tile edge (the role of gdalwarp's 21-point
-    ``ComputeSourceWindow`` sampling, ``core/alg/gdalwarpoperation.cpp:
-    2304``), then explodes the covering source tile keys; the join ships
-    only O(window) pixels per dst tile and the kernel resamples with global
-    -coordinate exactness. No driver-side loops at any grid size.
+    every one of its dst pixel centres (the role of gdalwarp's
+    ``ComputeSourceWindow``, ``core/alg/gdalwarpoperation.cpp:2304``, in its
+    grid-sampling form), then explodes the covering source tile keys; the
+    join ships only O(window) pixels per dst tile and the kernel resamples
+    with global-coordinate exactness. No driver-side loops at any grid size.
     """
     src = tiles if raster_id is None else tiles.where(
         F.col("raster_id") == raster_id
     )
     spark = tiles.sparkSession
-    agg = src.groupBy("raster_id", "band").agg(
-        F.max("tile_x").alias("mtx"), F.max("tile_y").alias("mty"),
-        F.max("tile_w").alias("tw"), F.max("tile_h").alias("th"),
-        F.max_by("tile_w", "tile_x").alias("last_w"),
-        F.max_by("tile_h", "tile_y").alias("last_h"),
-        F.first("dtype").alias("src_dtype"),
-        F.min_by(
-            F.struct("tile_x", "tile_y", "gt0", "gt1", "gt2", "gt3",
-                     "gt4", "gt5"),
-            F.struct("tile_x", "tile_y"),
-        ).alias("anchor"),
-    ).collect()
-    meta_rows = []
-    for r in agg:
-        tw, th = int(r["tw"]), int(r["th"])
-        W = int(r["mtx"]) * tw + int(r["last_w"])
-        H = int(r["mty"]) * th + int(r["last_h"])
-        a = r["anchor"]
-        ax, ay = int(a["tile_x"]) * tw, int(a["tile_y"]) * th
-        gt = (
-            a["gt0"] - ax * a["gt1"] - ay * a["gt2"], a["gt1"], a["gt2"],
-            a["gt3"] - ax * a["gt4"] - ay * a["gt5"], a["gt4"], a["gt5"],
-        )
-        meta_rows.append((r["raster_id"], int(r["band"]), tw, th, W, H,
-                          r["src_dtype"], *map(float, gt)))
-    from lib_gdal_spark.session import local_df
-    meta_df = local_df(
-        spark, meta_rows,
-        "raster_id string, band int, tw_nom int, th_nom int, "
-        "full_w int, full_h int, src_dtype string, "
-        "g0 double, g1 double, g2 double, g3 double, g4 double, g5 double",
-    )
+    meta_df = _source_catalog(src)
     ntx = (dst_w + tile - 1) // tile
     nty = (dst_h + tile - 1) // tile
     margin = _WARP_MARGIN.get(alg, 2)
@@ -513,8 +519,7 @@ def warp_to_crs_tiles_dist(
                 ok = np.isfinite(lon) & np.isfinite(lat)
                 if not ok.any():
                     continue
-                gt = tuple(float(r[f"g{i}"]) for i in range(6))
-                inv = R.gt_invert(gt)
+                inv = tuple(float(r[f"i{i}"]) for i in range(6))
                 sx, sy = R.gt_apply(inv, lon[ok], lat[ok])
                 W, H = int(r["full_w"]), int(r["full_h"])
                 wx0 = max(int(np.floor(sx.min())) - margin, 0)
@@ -550,177 +555,19 @@ def warp_to_crs_tiles_dist(
                "src_dtype string, g0 double, g1 double, g2 double, "
                "g3 double, g4 double, g5 double",
     )
-    joined = task_df.join(
-        src.select("raster_id", "band",
-                   F.col("tile_x").alias("src_tx"),
-                   F.col("tile_y").alias("src_ty"),
-                   "tile_w", "tile_h", "pixels"),
-        ["raster_id", "band", "src_tx", "src_ty"],
-    )
 
-    def warp_dst(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rid, band, txd, tyd = key[0], int(key[1]), int(key[2]), int(key[3])
-        r0 = pdf.iloc[0]
-        wx0, wy0 = int(r0["wx0"]), int(r0["wy0"])
-        wx1, wy1 = int(r0["wx1"]), int(r0["wy1"])
-        W, H = int(r0["full_w"]), int(r0["full_h"])
-        gt = tuple(float(r0[f"g{i}"]) for i in range(6))
-        window = np.full((wy1 - wy0, wx1 - wx0), np.nan, dtype=np.float64)
-        for _, row in pdf.iterrows():
-            tw, th = int(row["tile_w"]), int(row["tile_h"])
-            arr = np.asarray(row["pixels"], dtype=np.float64).reshape(th, tw)
-            gx0 = int(row["src_tx"]) * int(r0["tw_nom"])
-            gy0 = int(row["src_ty"]) * int(r0["th_nom"])
-            sy0, sx0 = max(0, wy0 - gy0), max(0, wx0 - gx0)
-            sy1 = min(th, wy1 - gy0)
-            sx1 = min(tw, wx1 - gx0)
-            if sy1 <= sy0 or sx1 <= sx0:
-                continue
-            window[gy0 + sy0 - wy0 : gy0 + sy1 - wy0,
-                   gx0 + sx0 - wx0 : gx0 + sx1 - wx0] = arr[sy0:sy1, sx0:sx1]
-        x0px, y0px = txd * tile, tyd * tile
-        twd = min(tile, dst_w - x0px)
-        thd = min(tile, dst_h - y0px)
+    def dst_tile(tx, ty):
+        x0px, y0px = tx * tile, ty * tile
         tile_gt = (
             dst_gt[0] + x0px * dst_gt[1] + y0px * dst_gt[2],
             dst_gt[1], dst_gt[2],
             dst_gt[3] + x0px * dst_gt[4] + y0px * dst_gt[5],
             dst_gt[4], dst_gt[5],
         )
-        if alg in R.AGG_ALGS:
-            out = R.warp_tile_stat(
-                window, gt, (thd, twd), tile_gt, stat=alg,
-                dtype=r0["src_dtype"], transform=inverse,
-                src_origin=(wx0, wy0), src_full_shape=(H, W),
-            )
-        else:
-            out = R.warp_tile(
-                window, gt, (thd, twd), tile_gt, alg=alg,
-                dtype=r0["src_dtype"], transform=inverse,
-                src_origin=(wx0, wy0), src_full_shape=(H, W),
-            )
-        if cutline is not None:
-            from lib_gdal_spark.functions import geometry as G2
-            jj2, ii2 = np.meshgrid(np.arange(thd), np.arange(twd),
-                                   indexing="ij")
-            cxs = (tile_gt[0] + (ii2 + 0.5) * tile_gt[1]
-                   + (jj2 + 0.5) * tile_gt[2]).ravel()
-            cys = (tile_gt[3] + (ii2 + 0.5) * tile_gt[4]
-                   + (jj2 + 0.5) * tile_gt[5]).ravel()
-            inside = G2.points_in_rings(cxs, cys, list(cutline))
-            out = np.asarray(out, dtype=np.float64)
-            out[~inside.reshape(thd, twd)] = np.nan
-        return pd.DataFrame([
-            dict(raster_id=(out_id or rid), band=band, zoom=0,
-                 tile_x=txd, tile_y=tyd,
-                 dtype=r0["src_dtype"], tile_w=twd, tile_h=thd,
-                 gt0=tile_gt[0], gt1=tile_gt[1], gt2=tile_gt[2],
-                 gt3=tile_gt[3], gt4=tile_gt[4], gt5=tile_gt[5],
-                 nodata=None,
-                 pixels=out.astype(np.float64).ravel().tolist())
-        ])
+        return tile_gt, (min(tile, dst_h - y0px), min(tile, dst_w - x0px))
 
-    return joined.groupBy("raster_id", "band", "dst_x", "dst_y").applyInPandas(
-        warp_dst, schema=RASTER_SCHEMA
-    )
-
-
-def warp_to_mercator_tiles(
-    tiles: DataFrame,
-    z: int,
-    alg: str = "nearest",
-    tile: int = 256,
-    raster_id: str | None = None,
-) -> DataFrame:
-    """Warp an EPSG:4326 tiled raster into web-mercator (z,x,y) tiles.
-
-    DataFrame program mirroring the gdalwarp pipeline
-    (``apps/gdalwarp_lib.cpp:772`` / SURVEY.md §3.3): the dst tile grid is a
-    DataFrame of (z,x,y) keys; each dst tile inverse-maps its footprint to a
-    lon/lat window (the 21-point edge-sampling of ComputeSourceWindow
-    collapses to exact corner math for the monotone mercator transform);
-    source tiles joining that window feed an Arrow-UDF resample kernel.
-
-    Round-1 scope: source fits per-group (small fixtures); the src-window
-    join keys are the source tile indices intersecting the dst window.
-
-    .. deprecated:: round 3
-        This path reassembles the whole source mosaic for one (raster_id,
-        band) inside a single task. It is guarded (VERDICT r2 #3): if any
-        group exceeds ``max_src_pixels`` it raises and points the caller at
-        :func:`warp_to_mercator_tiles_dist`, the per-dst-tile windowed path
-        whose output is bit-identical.
-    """
-    src = tiles if raster_id is None else tiles.where(F.col("raster_id") == raster_id)
-    max_src_pixels = 16 * 1024 * 1024  # one task holds the mosaic: cap it
-    worst = src.groupBy("raster_id", "band").agg(
-        F.sum(F.col("tile_w").cast("long") * F.col("tile_h")).alias("px")
-    ).agg(F.max("px").alias("px")).collect()
-    if worst and worst[0]["px"] and int(worst[0]["px"]) > max_src_pixels:
-        raise ValueError(
-            f"warp_to_mercator_tiles gathers each (raster_id, band) into one "
-            f"task; largest group has {int(worst[0]['px'])} px "
-            f"(cap {max_src_pixels}). Use warp_to_mercator_tiles_dist — "
-            f"bit-identical output, O(dst-window) memory per task."
-        )
-    n = 1 << z
-
-    def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rid, band = key
-        # Reassemble the (small) source mosaic for this raster/band.
-        tw = int(pdf["tile_w"].max())
-        th = int(pdf["tile_h"].max())
-        maxx = int(pdf["tile_x"].max())
-        maxy = int(pdf["tile_y"].max())
-        W = maxx * tw + int(pdf.loc[pdf["tile_x"] == maxx, "tile_w"].iloc[0])
-        H = maxy * th + int(pdf.loc[pdf["tile_y"] == maxy, "tile_h"].iloc[0])
-        dtype = pdf["dtype"].iloc[0]
-        mosaic = np.full((H, W), np.nan, dtype=np.float64)
-        g0 = None
-        for _, row in pdf.iterrows():
-            arr = _patch(row)
-            y0, x0 = int(row["tile_y"]) * th, int(row["tile_x"]) * tw
-            mosaic[y0 : y0 + arr.shape[0], x0 : x0 + arr.shape[1]] = arr
-            if g0 is None:  # origin derivable from ANY tile
-                g0 = [
-                    row["gt0"] - x0 * row["gt1"] - y0 * row["gt2"],
-                    row["gt1"], row["gt2"],
-                    row["gt3"] - x0 * row["gt4"] - y0 * row["gt5"],
-                    row["gt4"], row["gt5"],
-                ]
-        out_rows = []
-        span = 2.0 * C.ORIGIN_SHIFT / n
-        res = span / tile
-        for ty in range(n):
-            for tx in range(n):
-                minx, miny, maxx_m, maxy_m = C.tile_bounds_mercator(
-                    np.array([z]), np.array([tx]), np.array([ty])
-                )
-                dst_gt = (float(minx[0]), res, 0.0, float(maxy_m[0]), 0.0, -res)
-
-                def transform(gx, gy):
-                    return merc_inverse(gx, gy)
-
-                out = R.warp_tile(
-                    mosaic, g0, (tile, tile), dst_gt, alg=alg,
-                    dtype=dtype, transform=transform,
-                )
-                out_rows.append(
-                    dict(
-                        raster_id=rid, band=int(band), zoom=z,
-                        tile_x=tx, tile_y=ty, dtype=dtype,
-                        tile_w=tile, tile_h=tile,
-                        gt0=dst_gt[0], gt1=dst_gt[1], gt2=dst_gt[2],
-                        gt3=dst_gt[3], gt4=dst_gt[4], gt5=dst_gt[5],
-                        nodata=None,
-                        pixels=out.astype(np.float64).ravel().tolist(),
-                    )
-                )
-        return pd.DataFrame(out_rows)
-
-    return src.groupBy("raster_id", "band").applyInPandas(
-        warp_group, schema=RASTER_SCHEMA
-    )
+    return _warp_windows(src, task_df, alg, inverse, dst_tile, out_id=out_id,
+                         cutline=cutline)
 
 
 _CONV_HALO = {"bilinear": 2, "cubic": 4, "cubicspline": 4, "lanczos": 6}

@@ -24,6 +24,32 @@ def default_master() -> str:
     return f"local[{cpus}]"
 
 
+# Where a container's memory limit shows: cgroup v2, then cgroup v1.
+CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",
+                        "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def memory_limit_bytes() -> int:
+    """Memory this process may use: physical memory, lowered to the cgroup
+    limit when one is set."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = min(limit, int(f.read()))
+        except (OSError, ValueError):  # no such file, or "max" (no limit)
+            pass
+    return limit
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else min(8g, half of
+    :func:`memory_limit_bytes`), so a small host or container keeps room
+    for the Python workers."""
+    return (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or f"{min(8192, memory_limit_bytes() // 2 >> 20)}m")
+
+
 def get_spark(
     app_name: str = "lib_gdal_spark",
     master: str | None = None,
@@ -32,7 +58,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the engine.
 
-    ``master`` defaults to :func:`default_master`.
+    ``master`` defaults to :func:`default_master`; the driver heap to
+    :func:`default_driver_memory`.
     """
     # Make the package importable in executor Python workers regardless of
     # the driver's cwd. Local/standalone workers inherit PYTHONPATH from the
@@ -63,7 +90,7 @@ def get_spark(
         # Keep parquet scans prunable: one row-group per ~128MB at scale.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

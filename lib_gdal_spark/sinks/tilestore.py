@@ -58,8 +58,12 @@ def encode_png_gray(arr: np.ndarray) -> bytes:
 
 
 def decode_png_gray(png: bytes) -> np.ndarray:
-    """Inverse of :func:`encode_png_gray` (accepts filter-0 scanlines)."""
-    assert png[:8] == b"\x89PNG\r\n\x1a\n"
+    """Inverse of :func:`encode_png_gray` (accepts filter-0 scanlines).
+
+    Raises ValueError for anything else: the blobs may come from files on
+    disk (``tiles_from_pngs``, ``read_tms_directory``)."""
+    if png[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG: bad signature")
     off = 8
     w = h = None
     idat = b""
@@ -69,7 +73,10 @@ def decode_png_gray(png: bytes) -> np.ndarray:
         data = png[off + 8 : off + 8 + ln]
         if tag == b"IHDR":
             w, h, bits, ctype = struct.unpack_from(">IIBB", data)
-            assert bits == 8 and ctype == 0, "only 8-bit gray supported"
+            if bits != 8 or ctype != 0:
+                raise ValueError(
+                    f"only 8-bit gray PNG supported (bit depth {bits}, "
+                    f"colour type {ctype})")
         elif tag == b"IDAT":
             idat += data
         off += 12 + ln
@@ -78,7 +85,8 @@ def decode_png_gray(png: bytes) -> np.ndarray:
     stride = w + 1
     for r in range(h):
         row = raw[r * stride : (r + 1) * stride]
-        assert row[0] == 0, "only filter 0 supported"
+        if row[0] != 0:
+            raise ValueError(f"only filter 0 supported (row {r}: {row[0]})")
         out[r] = np.frombuffer(row[1:], dtype=np.uint8)
     return out
 

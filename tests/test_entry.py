@@ -33,6 +33,8 @@ SUBSET = [
     "pip_join_pentagon",
     "knn_kring",
     "warp_bilinear_z2",
+    "warp_average_z2",
+    "warp_utm_nearest",
 ]
 
 

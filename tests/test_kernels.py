@@ -281,24 +281,24 @@ class TestResample:
         assert out.tolist() == [0, 0, 1, 255]
 
 
-def test_warp_dist_matches_mosaic_path(spark):
-    """Distributed dst-tile warp is bit-identical to the single-mosaic path."""
+def test_warp_dist_matches_mosaic_path(spark, mosaic_warp):
+    """The windowed warp is bit-identical to the NumPy warp of the whole
+    source mosaic."""
     import numpy as np
 
     from lib_gdal_spark.operators import raster as RAST
     from lib_gdal_spark.sources import rasters as RS
 
     tiles = RS.fixture_rasters(spark)
+    src, gt = RS.world4326(256)
     for alg in ("nearest", "cubicspline"):
-        old = {(r["tile_x"], r["tile_y"]): np.asarray(r["pixels"])
-               for r in RAST.warp_to_mercator_tiles(
-                   tiles, z=1, alg=alg, tile=64, raster_id="world4326").collect()}
-        new = {(r["tile_x"], r["tile_y"]): np.asarray(r["pixels"])
+        got = {(r["tile_x"], r["tile_y"]): np.asarray(r["pixels"], np.float64)
                for r in RAST.warp_to_mercator_tiles_dist(
                    tiles, z=1, alg=alg, tile=64, raster_id="world4326").collect()}
-        assert set(old) == set(new)
-        for k in old:
-            assert np.array_equal(old[k], new[k])
+        assert set(got) == {(0, 0), (1, 0), (0, 1), (1, 1)}
+        for (tx, ty), px in got.items():
+            ref = mosaic_warp(src, gt, 1, tx, ty, alg, 64)
+            assert np.array_equal(px, ref, equal_nan=True), (alg, tx, ty)
 
 
 def test_overview_gauss_and_mode():

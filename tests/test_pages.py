@@ -1,6 +1,8 @@
-"""Pages generator + extraction invariants (pure pandas, no Spark)."""
+"""Pages generator + extraction invariants (pandas; Spark only for the
+enrich/verify round trip)."""
 
 import numpy as np
+import pandas as pd
 
 from lib_gdal_spark.functions import cells as C
 from lib_gdal_spark.functions import extract as X
@@ -18,14 +20,14 @@ def test_deterministic_across_batching():
 
 def test_text_invariant_byte_identical():
     b = P.build_batch(np.arange(0, 500))
-    got = X.html_to_text(X.decode_html(b["html"]))
+    got, _, _ = X.extract_enriched(X.decode_html(b["html"]))
     assert (got.str.encode("utf-8") == b["text"].str.encode("utf-8")).all()
 
 
 def test_coords_roundtrip():
     ids = np.arange(0, 1000)
     b = P.build_batch(ids)
-    lon_e, lat_e = X.extract_coords(X.decode_html(b["html"]))
+    _, lon_e, lat_e = X.extract_enriched(X.decode_html(b["html"]))
     lon_g, lat_g = P.page_coords(ids)
     has = ~np.isnan(lon_g)
     assert has.mean() > 0.5  # GEO_FRACTION ~ 0.8
@@ -33,6 +35,50 @@ def test_coords_roundtrip():
     # 4-decimal string round trip is exact
     assert np.array_equal(lon_e.to_numpy()[has], lon_g[has])
     assert np.array_equal(lat_e.to_numpy()[has], lat_g[has])
+
+
+# Hand-built pages the generator never emits -> (text, lon, lat) the
+# extractor returns for them. A paragraph with markup inside does not match
+# the text contract's <p> rule and drops out; the meta tag beats the span.
+ADVERSARIAL = {
+    "nested": (b"<title>Nested</title><p>outer <b>bold</b> tail</p>"
+               b"<p>plain</p>", "Nested\nplain", None, None),
+    "empty_p": (b"<title>Empty</title><p></p><p>after</p>",
+                "Empty\n\nafter", None, None),
+    "non_ascii": ("<title>Zürich — 東京</title><p>café</p>".encode(),
+                  "Zürich — 東京\ncafé", None, None),
+    "span_only": (b'<title>Span</title><p>body</p><span data-lat="-33.8688" '
+                  b'data-lon="151.2093">Sydney</span>',
+                  "Span\nbody\nSydney", 151.2093, -33.8688),
+    "disagree": (b'<title>Both</title><meta name="geo.position" '
+                 b'content="48.8566;2.3522"><p>x</p><span data-lat="51.5074" '
+                 b'data-lon="-0.1278">London</span>',
+                 "Both\nx\nLondon", 2.3522, 48.8566),
+    "bad_utf8": (b"<title>Bad\xff</title><p>caf\xe9 ok</p>",
+                 "Bad\ufffd\ncaf\ufffd ok", None, None),
+}
+
+
+def test_adversarial_pages_extract(spark):
+    from lib_gdal_spark.operators import geo
+
+    urls = list(ADVERSARIAL)
+    html = pd.Series([ADVERSARIAL[u][0] for u in urls], dtype=object)
+    text, lon, lat = X.extract_enriched(X.decode_html(html))
+    assert text.tolist() == [ADVERSARIAL[u][1] for u in urls]
+    # None pins "no coordinates", which the extractor returns as NaN
+    want = np.array([ADVERSARIAL[u][2:] for u in urls], dtype=np.float64)
+    assert np.array_equal(np.column_stack([lon, lat]), want, equal_nan=True)
+
+    pages = spark.createDataFrame(
+        [(u, None, bytearray(ADVERSARIAL[u][0]), "", "en") for u in urls],
+        P.PAGES_SCHEMA)
+    enriched = geo.enrich_pages(pages, res=12)
+    stored = enriched.select("url", "text").join(
+        pages.select("url", "html"), "url")
+    assert geo.verify_text_invariant(stored).count() == 0
+    assert {r["url"]: r["text"] for r in enriched.collect()} == {
+        u: ADVERSARIAL[u][1] for u in urls}
 
 
 def test_skew_present():

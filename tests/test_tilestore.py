@@ -3,7 +3,9 @@ pixel-exact round trips (mbtilesdataset.cpp schema + TMS row flip)."""
 
 import os
 import sqlite3
+import struct
 import tempfile
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -11,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.sinks import tilestore as TS
+from lib_gdal_spark.sources import png as PNG
 from lib_gdal_spark.sources import rasters as RX
 
 
@@ -20,6 +23,22 @@ def test_png_codec_roundtrip():
     png = TS.encode_png_gray(arr)
     assert png[:8] == b"\x89PNG\r\n\x1a\n"
     assert np.array_equal(TS.decode_png_gray(png), arr)
+
+
+def test_png_decode_rejects_unsupported_input():
+    """Blobs read from disk are validated with ValueError, not assert
+    (asserts vanish under python -O)."""
+    gray = np.arange(6, dtype=np.uint8).reshape(2, 3)
+    ihdr = struct.pack(">IIBBBBB", 3, 2, 8, 0, 0, 0, 0)
+    sub_filter = (b"\x89PNG\r\n\x1a\n" + TS._png_chunk(b"IHDR", ihdr)
+                  + TS._png_chunk(b"IDAT", zlib.compress(
+                      b"".join(b"\x01" + r.tobytes() for r in gray)))
+                  + TS._png_chunk(b"IEND", b""))
+    for blob, msg in ((b"GIF89a not a png", "signature"),
+                      (PNG.write_png([gray] * 3), "colour type 2"),
+                      (sub_filter, "filter 0")):
+        with pytest.raises(ValueError, match=msg):
+            TS.decode_png_gray(blob)
 
 
 @pytest.fixture()
