@@ -139,28 +139,38 @@ def k_ring(cell: np.ndarray, k: int) -> np.ndarray:
     return np.where(valid, out, np.int64(-1))
 
 
-def cell_expr(lon, lat, res: int):
-    """Native Spark Column for ``lonlat_to_cell`` (JVM, whole-stage codegen).
+def tile_xy_expr(lon, lat, z: int):
+    """Native Spark Columns (x, y) for ``lonlat_to_tile`` (XYZ rows; JVM,
+    whole-stage codegen), with the same op sequence. NULL lon or lat gives
+    NULL x and y: ``least``/``greatest`` skip NULLs, so the math is guarded
+    as a whole."""
+    from pyspark.sql import functions as F
 
-    For the *big* side of candidate-generation joins: keeps 100%-of-rows
-    math out of Python. Java Math.sin/log may differ from NumPy/libm by
-    1 ulp, which can shift a point sitting exactly on a cell edge into the
-    adjacent cell — harmless wherever a k-ring (>=1) or an epsilon-widened
-    cover (``pip_join.COVER_EPS``) absorbs it, which is every call site; use
-    the NumPy path when the cell id itself is the contract.
+    n = 1 << z
+    has = lon.isNotNull() & lat.isNotNull()
+    lat_c = F.least(F.greatest(lat, F.lit(-MAX_MERC_LAT)), F.lit(MAX_MERC_LAT))
+    mx = (lon + 180.0) / 360.0
+    s = F.sin(F.radians(lat_c))
+    my = 0.5 - F.log((1.0 + s) / (1.0 - s)) / F.lit(4.0 * np.pi)
+    return tuple(
+        F.when(has, F.least(F.greatest(F.floor(m * n), F.lit(0)),
+                            F.lit(n - 1)).cast("long"))
+        for m in (mx, my))
+
+
+def cell_expr(lon, lat, res: int):
+    """Native Spark Column for ``lonlat_to_cell``; NULL when lon or lat is.
+
+    The cell key of ``geo.enrich_pages`` and the big side of
+    candidate-generation joins. Java Math.sin/log may differ from NumPy by
+    1 ulp, which could shift a point sitting exactly on a cell edge into
+    the adjacent cell; a k-ring (>=1) or the epsilon-widened cover
+    (``pip_join.COVER_EPS``) absorbs that, and the enrich parity tests pin
+    the key bit for bit against NumPy.
     """
     from pyspark.sql import functions as F
 
-    n = 1 << res
-    lat_c = F.least(F.greatest(lat, F.lit(-MAX_MERC_LAT)), F.lit(MAX_MERC_LAT))
-    mx = (lon + F.lit(180.0)) / F.lit(360.0)
-    s = F.sin(F.radians(lat_c))
-    my = (F.lit(0.5)
-          - F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)) / F.lit(4.0 * np.pi))
-    x = F.least(F.greatest(F.floor(mx * n).cast("long"), F.lit(0)),
-                F.lit(n - 1))
-    y = F.least(F.greatest(F.floor(my * n).cast("long"), F.lit(0)),
-                F.lit(n - 1))
+    x, y = tile_xy_expr(lon, lat, res)
     return (F.lit(res << _RES_SHIFT).cast("long")
             + x * F.lit(1 << _X_SHIFT).cast("long") + y)
 

@@ -2,108 +2,96 @@
 
 This is the engine's "open + decode" stage: html -> text (the invariant
 column), mined (lon, lat), and the int64 spatial cell key that every spatial
-operator joins on. All math runs in Arrow-batched pandas UDFs over NumPy
-(the direct descendant of the reference's batch Python pixel functions,
-``drivers/raster/vrt/vrtderivedrasterband.cpp:63-330`` — whole-buffer, never
-per-row).
+operator joins on. It is one chain of projections of built-in Catalyst
+expressions (whole-stage codegen, no Python worker), the way the
+reference's SQL layer evaluates expressions natively
+(``core/ogr/swq_expr_node.cpp``): ``make_valid_utf8`` for the decode, the
+``functions/extract`` regexes through ``regexp_extract``, and
+``cells.cell_expr`` for the key. The pandas ``extract.extract_enriched``
+and NumPy ``cells.lonlat_to_cell`` are the reference it is tested against.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import cells as C
 from lib_gdal_spark.functions import extract as X
 
-ENRICHED_COLS = "url string, warc_ts timestamp, lang string, text string, lon double, lat double, cell long"
+
+def _extract(pages: DataFrame) -> DataFrame:
+    """``pages`` + (_text, _lon, _lat) and their ``_``-prefixed steps: the
+    extraction contract of ``functions/extract`` over the binary ``html``
+    column, coordinates not yet range-checked. Each step is its own
+    projection, so each regex scans a page once; the coordinates and span
+    text come out of the short meta/span matches. NULL html gives NULL
+    text."""
+
+    def num(match: str, pattern: str, group: int):
+        # no match is "": try_cast makes it NULL where an ANSI cast raises
+        return F.regexp_extract(match, pattern, group).try_cast("double")
+
+    df = pages.withColumn("_h", F.make_valid_utf8(F.col("html").cast("string")))
+    df = df.withColumns({
+        "_title": F.regexp_extract("_h", X.TITLE_RE, 1),
+        "_paras": F.array_join(
+            F.regexp_extract_all("_h", F.lit(X.PARA_RE), F.lit(1)), "\n"),
+        "_span": F.regexp_extract("_h", X.SPAN_GEO_RE, 0),
+        "_meta": F.regexp_extract("_h", X.META_GEO_RE, 0),
+    })
+    span_text = F.nullif(F.regexp_extract("_span", X.SPAN_GEO_RE, 3), F.lit(""))
+    return df.withColumns({
+        # concat_ws skips the NULL (empty) span text; the outer concat keeps
+        # a NULL page NULL
+        "_text": F.concat("_title", F.lit("\n"),
+                          F.concat_ws("\n", "_paras", span_text)),
+        "_lat": F.coalesce(num("_meta", X.META_GEO_RE, 1),
+                           num("_span", X.SPAN_GEO_RE, 1)),
+        "_lon": F.coalesce(num("_meta", X.META_GEO_RE, 2),
+                           num("_span", X.SPAN_GEO_RE, 2)),
+    })
 
 
 def enrich_pages(pages: DataFrame, res: int = 12) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> + (lon, lat, cell@res).
+    """pages(url, warc_ts, html, text, lang) ->
+    (url, warc_ts, lang, text, lon, lat, cell@res).
 
     Rows without coordinates keep NULL lon/lat/cell (NULL-key join-skip
     semantics, ``drivers/ogr_gensql.cpp:1310-1316``). Mined coordinates
     out of range (|lat| > 90 or |lon| > 180) count as no coordinates, so
     they cannot land in an edge cell. Invalid utf-8 in ``html`` decodes to
-    U+FFFD (``extract.decode_html``).
+    U+FFFD as ``extract.decode_html`` does; NULL html gives NULL text.
     """
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            html = X.decode_html(b["html"])
-            text, lon, lat = X.extract_enriched(html)
-            # NaN compares False: missing and out-of-range both drop out
-            ok = ((np.abs(lat.to_numpy()) <= 90.0)
-                  & (np.abs(lon.to_numpy()) <= 180.0))
-            cell = np.full(len(b), -1, dtype=np.int64)
-            if ok.any():
-                cell[ok] = C.lonlat_to_cell(
-                    lon.to_numpy()[ok], lat.to_numpy()[ok], res
-                )
-            out = pd.DataFrame(
-                {
-                    "url": b["url"],
-                    "warc_ts": b["warc_ts"],
-                    "lang": b["lang"],
-                    "text": text,
-                    "lon": lon,
-                    "lat": lat,
-                    "cell": pd.array(cell, dtype="Int64"),
-                }
-            )
-            out.loc[~ok, ["lon", "lat", "cell"]] = None
-            yield out
-
-    return pages.mapInPandas(work, schema=ENRICHED_COLS)
+    # NULL fails the range check too: missing and out-of-range drop out
+    ok = (F.abs("_lat") <= 90.0) & (F.abs("_lon") <= 180.0)
+    out = _extract(pages).select(
+        "url", "warc_ts", "lang", F.col("_text").alias("text"),
+        F.when(ok, F.col("_lon")).alias("lon"),
+        F.when(ok, F.col("_lat")).alias("lat"))
+    return out.withColumn("cell", C.cell_expr(F.col("lon"), F.col("lat"), res))
 
 
 def verify_text_invariant(pages: DataFrame) -> DataFrame:
     """Rows violating byte-identical extracted text per url (must be empty).
 
-    The check re-runs extraction on ``html`` with ``extract.extract_enriched``,
-    the extractor ``enrich_pages`` writes with, and compares against the
-    stored ``text`` column byte-for-byte (``BASELINE.json:16``).
+    The check re-derives text from ``html`` with the expressions
+    ``enrich_pages`` writes with, and compares it with the stored ``text``
+    column byte for byte (``BASELINE.json:16``). A row where either side is
+    NULL (NULL html or NULL stored text) is a violation.
     """
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            got, _, _ = X.extract_enriched(X.decode_html(b["html"]))
-            bad = got.str.encode("utf-8") != b["text"].str.encode("utf-8")
-            yield pd.DataFrame({"url": b["url"][bad]})
-
-    return pages.mapInPandas(work, schema="url string")
+    same = F.coalesce(F.col("_text") == F.col("text"), F.lit(False))
+    return _extract(pages).where(~same).select("url")
 
 
 def with_tile(df: DataFrame, z: int, lon="lon", lat="lat", tms: bool = False) -> DataFrame:
     """Attach web-mercator XYZ tile (z, x, y) columns — NATIVE column math
-    (whole-stage codegen; the exact op sequence of cells.lonlat_to_tile,
+    (``cells.tile_xy_expr``: the exact op sequence of cells.lonlat_to_tile,
     which the driver oracles mirror in SQL). NULL coords yield NULL tiles
     (the NULL-key join-skip path)."""
-    n = 1 << z
-    lo = F.col(lon)
-    # greatest/least skip NULLs, so guard the whole tile math.
-    has = lo.isNotNull() & F.col(lat).isNotNull()
-    la = F.least(F.greatest(F.col(lat), F.lit(-C.MAX_MERC_LAT)),
-                 F.lit(C.MAX_MERC_LAT))
-    mx = (lo + 180.0) / 360.0
-    sin_lat = F.sin(F.radians(la))
-    my = (
-        0.5
-        - F.log((1.0 + sin_lat) / (1.0 - sin_lat))
-        / F.lit(4.0 * float(np.pi))
-    )
-    tx = F.when(has, F.least(
-        F.greatest(F.floor(mx * n), F.lit(0)), F.lit(n - 1)
-    ).cast("long"))
-    ty_raw = F.least(
-        F.greatest(F.floor(my * n), F.lit(0)), F.lit(n - 1)
-    ).cast("long")
-    ty = F.when(has, (F.lit(n - 1) - ty_raw) if tms else ty_raw)
+    tx, ty = C.tile_xy_expr(F.col(lon), F.col(lat), z)
+    if tms:
+        ty = F.lit((1 << z) - 1) - ty
     return df.withColumn("z", F.lit(z)).withColumn("tx", tx).withColumn(
         "ty", ty
     )
@@ -126,8 +114,6 @@ def jsonld_geo(pages: DataFrame, html_col: str = "html",
     JSON — the emitter convention that keeps the corpus and both query
     engines free of float-formatting drift.
     """
-    from lib_gdal_spark.functions import cells as C
-
     body = F.regexp_extract(
         F.col(html_col).cast("string"),
         r'<script type="application/ld\+json">(.*?)</script>', 1)

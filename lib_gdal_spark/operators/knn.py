@@ -27,14 +27,16 @@ from lib_gdal_spark.functions import cells as C
 
 def _haversine_col(lon1, lat1, lon2, lat2) -> F.Column:
     """Haversine distance (km) as a native Spark expression — stays inside
-    whole-stage codegen; must match ``cells.haversine_km`` numerically."""
+    whole-stage codegen; must match ``cells.haversine_km`` numerically.
+    NULL in gives NULL out (``least`` skips NULLs, so guard it all)."""
+    has = lon1.isNotNull() & lat1.isNotNull() & lon2.isNotNull() & lat2.isNotNull()
     rl1, rl2 = F.radians(lat1), F.radians(lat2)
     dlat = rl2 - rl1
     dlon = F.radians(lon2) - F.radians(lon1)
     h = F.pow(F.sin(dlat / 2), 2) + F.cos(rl1) * F.cos(rl2) * F.pow(
         F.sin(dlon / 2), 2
     )
-    return 2.0 * 6371.0088 * F.asin(F.sqrt(F.least(h, F.lit(1.0))))
+    return F.when(has, 2.0 * 6371.0088 * F.asin(F.sqrt(F.least(h, F.lit(1.0)))))
 
 
 def knn_bruteforce(
@@ -54,7 +56,9 @@ def knn_bruteforce(
     """
     qid, qlon, qlat = query_cols
     tid, tlon, tlat = target_cols
-    joined = targets.crossJoin(F.broadcast(queries))
+    # a point with a NULL coordinate is no query and no neighbour
+    joined = targets.dropna(subset=[tlon, tlat]).crossJoin(
+        F.broadcast(queries.dropna(subset=[qlon, qlat])))
     d = _haversine_col(F.col(qlon), F.col(qlat), F.col(tlon), F.col(tlat))
     joined = joined.withColumn("dist_km", F.round(d, round_decimals))
     w = Window.partitionBy(qid).orderBy(F.col("dist_km").asc(), F.col(tid).asc())
@@ -106,7 +110,10 @@ def knn_kring(
             )
 
     qschema = f"{qid} long, {qlon} double, {qlat} double, cell long"
-    qcells = queries.select(qid, qlon, qlat).mapInPandas(explode_rings, schema=qschema)
+    # a query with a NULL coordinate has no neighbours; a NULL target gets
+    # a NULL cell and drops out of the join
+    qcells = queries.select(qid, qlon, qlat).dropna(subset=[qlon, qlat]) \
+        .mapInPandas(explode_rings, schema=qschema)
 
     # Big side stays JVM-native: the cell key is candidate-generation only
     # (a 1-ulp libm difference shifts an edge point one cell, still inside
@@ -168,7 +175,8 @@ def knn_kring_exact(
         res = int(np.clip(np.floor(np.log2(360.0 / max(edge_deg, 1e-9))),
                           2, 20))
 
-    remaining = queries.select(qid, qlon, qlat).localCheckpoint()
+    remaining = queries.select(qid, qlon, qlat).dropna(
+        subset=[qlon, qlat]).localCheckpoint()
     settled = []
     rings = 1
     while rings <= max_rings:

@@ -2,8 +2,8 @@
 
 The reference has no streaming engine (SURVEY §2.10); this is the
 Spark-native layer the north rule's ingest story needs: the SAME
-Arrow-batched enrichment (``operators/geo.enrich_pages``) runs unchanged
-on a streaming DataFrame (mapInPandas is streaming-capable), plus
+enrichment (``operators/geo.enrich_pages``, native column expressions)
+runs unchanged on a streaming DataFrame, plus
 
 - :func:`tile_counts_windowed` — event-time windowed tile rollups with a
   watermark for late data (``warc_ts`` is the event time);

@@ -35,6 +35,7 @@ SUBSET = [
     "warp_bilinear_z2",
     "warp_average_z2",
     "warp_utm_nearest",
+    "pages_enrich",
 ]
 
 

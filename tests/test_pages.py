@@ -56,13 +56,23 @@ ADVERSARIAL = {
                  "Both\nx\nLondon", 2.3522, 48.8566),
     "bad_utf8": (b"<title>Bad\xff</title><p>caf\xe9 ok</p>",
                  "Bad\ufffd\ncaf\ufffd ok", None, None),
+    # digits are ASCII [0-9] in both engines (Python's \d is wider)
+    "arabic_digits": ('<title>Arabic</title><p>x</p><span data-lat="\u0664\u0668'
+                      '.\u0668\u0665" data-lon="\u0662.\u0663\u0665">Paris'
+                      '</span>'.encode(), "Arabic\nx", None, None),
+    "fullwidth_meta": ('<title>Wide</title><meta name="geo.position" content='
+                       '"\uff14\uff18.\uff18;\uff12.\uff13"><p>y</p><span '
+                       'data-lat="45.76" data-lon="4.84">Lyon</span>'.encode(),
+                       "Wide\ny\nLyon", 4.84, 45.76),
+    # Spark half only: NULL html is NULL text and no coordinates
+    "null_html": (None, None, None, None),
 }
 
 
 def test_adversarial_pages_extract(spark):
     from lib_gdal_spark.operators import geo
 
-    urls = list(ADVERSARIAL)
+    urls = [u for u in ADVERSARIAL if ADVERSARIAL[u][0] is not None]
     html = pd.Series([ADVERSARIAL[u][0] for u in urls], dtype=object)
     text, lon, lat = X.extract_enriched(X.decode_html(html))
     assert text.tolist() == [ADVERSARIAL[u][1] for u in urls]
@@ -71,14 +81,16 @@ def test_adversarial_pages_extract(spark):
     assert np.array_equal(np.column_stack([lon, lat]), want, equal_nan=True)
 
     pages = spark.createDataFrame(
-        [(u, None, bytearray(ADVERSARIAL[u][0]), "", "en") for u in urls],
-        P.PAGES_SCHEMA)
+        [(u, None, v[0] and bytearray(v[0]), v[1], "en")
+         for u, v in ADVERSARIAL.items()], P.PAGES_SCHEMA)
     enriched = geo.enrich_pages(pages, res=12)
-    stored = enriched.select("url", "text").join(
-        pages.select("url", "html"), "url")
-    assert geo.verify_text_invariant(stored).count() == 0
-    assert {r["url"]: r["text"] for r in enriched.collect()} == {
-        u: ADVERSARIAL[u][1] for u in urls}
+    # the stored text is the expected one; NULL html is a violation
+    assert [r["url"] for r in geo.verify_text_invariant(pages).collect()] == [
+        "null_html"]
+    got = {r["url"]: r for r in enriched.collect()}
+    assert {u: (r["text"], r["lon"], r["lat"]) for u, r in got.items()} == {
+        u: v[1:] for u, v in ADVERSARIAL.items()}
+    assert got["null_html"]["cell"] is None
 
 
 def test_skew_present():

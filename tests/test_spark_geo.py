@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import cells as C
+from lib_gdal_spark.functions import extract as X
 from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.operators import geo, knn, pip_join
 from lib_gdal_spark.sources import pages as P
@@ -177,6 +178,143 @@ def test_enrich_invalid_utf8_keeps_the_row(spark, pages_df):
         for u in ref)
     stored = bad.withColumn("text", F.lit(r["text"]))
     assert geo.verify_text_invariant(stored).count() == 0
+
+
+# Invalid utf-8 the fuzzed pages splice in: stray continuation and
+# never-valid bytes, overlong forms, surrogates, code points above
+# U+10FFFF, sequences cut short, and valid multi-byte characters.
+_FUZZ_BYTES = [b"\xff", b"\xfe\xfe", b"\x80", b"\xbf\x80", b"\xc0\xaf",
+               b"\xc1\xbf", b"\xe0\x80\xaf", b"\xed\xa0\x80", b"\xed\xbf\xbf",
+               b"\xf4\x90\x80\x80", b"\xf5\x80\x80\x80", b"\xe2\x82",
+               b"\xf0\x9f\x98", b"\xc3", "é".encode(), "東".encode(),
+               "😀".encode()]
+
+
+def _fuzz_pages(n: int, seed: int = 7) -> list[tuple]:
+    """``n`` pages in the generator's layout with invalid utf-8 spliced into
+    every part, numbers in and out of range (some broken by a splice), and
+    one page in ten cut short at a random byte. The stored text is the
+    reference's for even pages, tampered for odd ones, NULL for every 97th."""
+    rng = np.random.default_rng(seed)
+
+    def junk() -> bytes:
+        parts = [_FUZZ_BYTES[rng.integers(len(_FUZZ_BYTES))]
+                 for _ in range(rng.integers(0, 3))]
+        parts.append(rng.integers(0, 256, rng.integers(0, 4),
+                                  dtype=np.uint8).tobytes())
+        return b"w".join(parts)
+
+    def num(bound: float) -> bytes:
+        v = f"{rng.uniform(-bound, bound):.{rng.integers(1, 7)}f}".encode()
+        if rng.random() < 0.1:
+            k = rng.integers(len(v) + 1)
+            v = v[:k] + junk() + v[k:]
+        return v
+
+    pages = []
+    for _ in range(n):
+        html = b"<html><head><title>t" + junk() + b"</title>"
+        if rng.random() < 0.5:
+            html += (b'<meta name="geo.position" content="' + num(100.0)
+                     + b";" + num(200.0) + b'">')
+        html += b"</head><body>" + b"".join(
+            b"<p>" + junk() + b" x" + junk() + b"</p>"
+            for _ in range(rng.integers(0, 4)))
+        if rng.random() < 0.5:
+            html += (b'<span data-lat="' + num(100.0) + b'" data-lon="'
+                     + num(200.0) + b'">' + junk() + b"</span>")
+        html += b"</body></html>"
+        if rng.random() < 0.1:
+            html = html[:rng.integers(len(html))]
+        pages.append(html)
+    texts = [r[0] for r in _reference_enrich(pd.Series(pages, dtype=object))]
+    return [(f"fuzz/{i}", None, bytearray(html),
+             None if i % 97 == 0 else t + ("" if i % 2 == 0 else "!"), "en")
+            for i, (html, t) in enumerate(zip(pages, texts))]
+
+
+def _reference_enrich(html: pd.Series, res: int = 12) -> list[tuple]:
+    """The pandas/NumPy reference of ``enrich_pages``: decode_html ->
+    extract_enriched -> range check -> lonlat_to_cell. Rows of (text, lon,
+    lat, cell), None for NULL; doubles as ``float.hex``, so equal means
+    equal bits."""
+    text, lon, lat = X.extract_enriched(X.decode_html(html))
+    lon, lat = lon.to_numpy(), lat.to_numpy()
+    ok = (np.abs(lat) <= 90.0) & (np.abs(lon) <= 180.0)
+    cell = np.zeros(len(ok), dtype=np.int64)
+    cell[ok] = C.lonlat_to_cell(lon[ok], lat[ok], res)
+    return [(t if isinstance(t, str) else None,
+             *((float(x).hex(), float(y).hex(), int(c)) if k else (None,) * 3))
+            for t, x, y, c, k in zip(text, lon, lat, cell, ok)]
+
+
+def _adversarial_pages(spark):
+    from test_pages import ADVERSARIAL
+
+    return spark.createDataFrame(
+        [(u, None, v[0] and bytearray(v[0]), v[1], "en")
+         for u, v in ADVERSARIAL.items()], P.PAGES_SCHEMA)
+
+
+def test_enrich_native_matches_reference(spark, pages_df):
+    """Every row of the fixture, the adversarial pages and 2k fuzzed
+    invalid-utf-8 pages: text, lon, lat and the int64 cell equal the pandas
+    reference bit for bit, and verify_text_invariant flags exactly the rows
+    the pandas check flags (stored text differs, or either side is NULL)."""
+    pages = pages_df.unionByName(_adversarial_pages(spark)).unionByName(
+        spark.createDataFrame(_fuzz_pages(2000), P.PAGES_SCHEMA))
+    src = pages.select("url", "html", "text").toPandas()
+    ref = _reference_enrich(src["html"])
+    want = dict(zip(src["url"], ref))
+    got = {r["url"]: (r["text"], *(None if v is None else v.hex()
+                                   for v in (r["lon"], r["lat"])), r["cell"])
+           for r in geo.enrich_pages(pages, res=12).collect()}
+    assert got == want
+    fuzz = [v for u, v in want.items() if u.startswith("fuzz/")]
+    assert sum(v[3] is not None for v in fuzz) > 200
+    assert sum(v[0] is None for v in want.values()) == 1  # the NULL html
+
+    want_bad = {u for u, (t, *_), s in zip(src["url"], ref, src["text"])
+                if t is None or s is None or t.encode() != s.encode()}
+    assert "null_html" in want_bad and len(want_bad) > 1000
+    assert {r["url"] for r in geo.verify_text_invariant(pages).collect()} == \
+        want_bad
+
+
+PYTHON_EXEC_NODES = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython",
+                     "BatchEvalPython", "FlatMapGroupsInPandas")
+
+
+def test_enrich_and_verify_plans_run_no_python(spark):
+    pages = _adversarial_pages(spark)
+    for df in (geo.enrich_pages(pages, res=12),
+               geo.verify_text_invariant(pages)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in PYTHON_EXEC_NODES if n in plan], plan
+
+
+def test_cell_expr_null_coordinates_give_null(spark):
+    """greatest/least skip NULLs: without a guard NULL coordinates became
+    cell (12, 0, 4095)."""
+    pts = spark.createDataFrame([(None, None), (2.35, None), (None, 48.85)],
+                                "lon double, lat double")
+    got = pts.select(C.cell_expr(F.col("lon"), F.col("lat"), 12).alias("c"))
+    assert [r["c"] for r in got.collect()] == [None, None, None]
+
+
+def test_knn_skips_null_coordinate_targets(spark):
+    """A NULL target is no neighbour: least() used to turn its NULL
+    distance into pi * R (20,015 km) and rank it."""
+    targets = spark.createDataFrame(
+        [(1, 2.35, 48.85), (2, 2.36, 48.86), (3, None, None)],
+        "tid long, tlon double, tlat double")
+    queries = spark.createDataFrame([(1, 2.35, 48.853)],
+                                    "qid long, qlon double, qlat double")
+    # res 1: one ring covers the globe, so the NULL target reaches ranking
+    for got in (knn.knn_kring(queries, targets, k=3, res=1, rings=1),
+                knn.knn_bruteforce(queries, targets, k=3)):
+        assert [(r["tid"], r["rank"]) for r in got.orderBy("rank").collect()] \
+            == [(1, 1), (2, 2)]
 
 
 def test_knn_bruteforce_vs_kring(spark, enriched):
