@@ -227,6 +227,21 @@ def _spread_bits32(v):
     return v
 
 
+def _lonlat_quant(lon, lat, bits: int):
+    """Native (xq, yq) Columns of lon/lat on a 2^bits grid per axis, each
+    capped at 2^bits - 1 so lon 180 / lat 90 stay on the grid. NULL lon
+    or lat gives NULL xq and yq: ``least`` skips NULLs, so the cap alone
+    would turn a NULL coordinate into the last cell."""
+    from pyspark.sql import functions as F
+
+    n = 1 << bits
+    has = lon.isNotNull() & lat.isNotNull()
+    return tuple(
+        F.when(has, F.least(F.lit(n - 1),
+                            F.floor((c + half) / (2 * half) * n).cast("long")))
+        for c, half in ((lon, 180.0), (lat, 90.0)))
+
+
 def zorder_key(x, y):
     """Morton-interleave two non-negative 32-bit grid coordinates into one
     long sort key — the Z-ORDER layout primitive for writing spatially
@@ -250,15 +265,7 @@ def with_zorder(df, lon_col: str = "lon", lat_col: str = "lat",
     layout degenerates."""
     from pyspark.sql import functions as F
 
-    n = 1 << bits
-    qx = F.least(
-        F.lit(n - 1),
-        F.floor((F.col(lon_col) + 180.0) / 360.0 * n).cast("long"),
-    )
-    qy = F.least(
-        F.lit(n - 1),
-        F.floor((F.col(lat_col) + 90.0) / 180.0 * n).cast("long"),
-    )
+    qx, qy = _lonlat_quant(F.col(lon_col), F.col(lat_col), bits)
     out = df.withColumn(key_col, zorder_key(qx, qy))
     if num_partitions:
         out = out.repartitionByRange(num_partitions, F.col(key_col))
@@ -448,30 +455,20 @@ def _unspread_bits32(v):
     return v
 
 
-def _geohash_quant(lon, lat):
-    """30-bit quantized (xq, yq) grid coords — enough for precision 12
-    (60 interleaved bits). Quantizing at 30 bits and taking bit
-    prefixes is exact for every coarser precision (floor nesting)."""
-    from pyspark.sql import functions as F
-
-    n = 1 << 30
-    xq = F.least(F.lit(n - 1),
-                 F.floor((lon + 180.0) / 360.0 * n).cast("long"))
-    yq = F.least(F.lit(n - 1),
-                 F.floor((lat + 90.0) / 180.0 * n).cast("long"))
-    return xq, yq
-
-
 def geohash_encode(lon, lat, precision: int = 12):
     """Geohash string of ``precision`` chars (1..12) from lon/lat
     Columns: longitude takes the even interleave positions starting at
     the MSB (the published bit order), then 5-bit groups map through
-    the geohash base-32 alphabet."""
+    the geohash base-32 alphabet. NULL lon or lat gives NULL.
+
+    The grid is 30 bits per axis — enough for precision 12 (60
+    interleaved bits); taking bit prefixes is exact for every coarser
+    precision (floor nesting)."""
     from pyspark.sql import functions as F
 
     if not 1 <= precision <= 12:
         raise ValueError("geohash precision must be in 1..12")
-    xq, yq = _geohash_quant(lon, lat)
+    xq, yq = _lonlat_quant(lon, lat, 30)
     m = F.shiftleft(_spread_bits32(xq), 1).bitwiseOR(_spread_bits32(yq))
     chars = [
         F.substr(
@@ -555,13 +552,14 @@ MGRS_BAND_MIN_NORTHING = [
 
 def mgrs_band_index(lat):
     """Latitude-band index 0..19 (C..X) of a latitude Column. 8° bands
-    from −80°; band X absorbs 80..84°N (NGA TM 8358.1 §3-2)."""
+    from −80°; band X absorbs 80..84°N (NGA TM 8358.1 §3-2). NULL for a
+    NULL latitude (the clamp alone would make it band 19)."""
     from pyspark.sql import functions as F
 
-    return F.greatest(
+    return F.when(lat.isNotNull(), F.greatest(
         F.lit(0),
         F.least(F.lit(19), F.floor((lat + 80.0) / 8.0).cast("int")),
-    )
+    ))
 
 
 def mgrs_encode(zone, band_idx, easting, northing, precision: int = 5):

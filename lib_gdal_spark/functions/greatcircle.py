@@ -24,7 +24,23 @@ METER2RAD = 1.0 / RAD2METER
 
 
 def _safe_acos(x: Column) -> Column:
+    """acos of ``x`` clamped to [-1, 1]. ``least``/``greatest`` skip
+    NULLs, so a NULL ``x`` gives acos(-1) = pi: callers wrap their result
+    in :func:`_guard`."""
     return F.acos(F.least(F.greatest(x, F.lit(-1.0)), F.lit(1.0)))
+
+
+def _guard(value: Column, *inputs: Column) -> Column:
+    """``value``, or NULL when any input is NULL (a NULL coordinate must
+    not read as a half-globe distance through a clamp). It tests the
+    inputs, not the clamped value, so each nested acos keeps one copy of
+    its argument in the plan; testing the argument doubled them, and the
+    dead-reckoned position of ``great_circle`` outgrew codegen's 64 KB
+    method limit."""
+    has = inputs[0].isNotNull()
+    for c in inputs[1:]:
+        has = has & c.isNotNull()
+    return F.when(has, value)
 
 
 def great_circle_distance(lat_a: Column, lon_a: Column,
@@ -35,7 +51,8 @@ def great_circle_distance(lat_a: Column, lon_a: Column,
     lat_br = lat_b * F.lit(DEG2RAD)
     cos_angle = (F.sin(lat_ar) * F.sin(lat_br)
                  + F.cos(lat_ar) * F.cos(lat_br) * cos_p)
-    return _safe_acos(cos_angle) * F.lit(RAD2METER)
+    return _guard(_safe_acos(cos_angle) * F.lit(RAD2METER),
+                  lat_a, lon_a, lat_b, lon_b)
 
 
 def great_circle_initial_heading(lat_a: Column, lon_a: Column,
@@ -113,12 +130,13 @@ def great_circle_extend_position(lat_a: Column, lon_a: Column,
         .otherwise(lon_a - dist_rad * F.lit(RAD2DEG)).alias("lon"),
     )
     same = F.struct(lat_a.alias("lat"), lon_a.alias("lon"))
-    return (
+    return _guard(
         F.when(distance_m == 0.0, same)
         .when(F.abs(lat_a) >= 90.0, same)
         .when(F.abs(sin_h) < 1e-8, north_south)
         .when((F.abs(cos_comp_a) < 1e-8) & (F.abs(cos_h) < 1e-8), east_west)
-        .otherwise(F.struct(lat_gen.alias("lat"), lon_gen.alias("lon")))
+        .otherwise(F.struct(lat_gen.alias("lat"), lon_gen.alias("lon"))),
+        lat_a, lon_a, distance_m, heading_deg
     )
 
 
@@ -362,10 +380,10 @@ def gc_intermediate_point(lat_a: Column, lon_a: Column,
     z = A * F.sin(p1) + B * F.sin(p2)
     lat = F.degrees(F.atan2(z, F.sqrt(x * x + y * y)))
     lon = F.degrees(F.atan2(y, x))
-    return F.struct(
+    return _guard(F.struct(
         F.when(sd == 0.0, lat_a).otherwise(lat).alias("lat"),
         F.when(sd == 0.0, lon_a).otherwise(lon).alias("lon"),
-    )
+    ), lat_a, lon_a, lat_b, lon_b)
 
 
 def cross_track_distance(lat_a: Column, lon_a: Column,
@@ -384,10 +402,10 @@ def cross_track_distance(lat_a: Column, lon_a: Column,
         great_circle_initial_heading(lat_a, lon_a, lat_p, lon_p))
     th_ab = F.radians(
         great_circle_initial_heading(lat_a, lon_a, lat_b, lon_b))
-    return F.asin(
+    return _guard(F.asin(
         F.least(F.greatest(F.sin(d_ap) * F.sin(th_ap - th_ab),
                            F.lit(-1.0)), F.lit(1.0))
-    ) * RAD2METER
+    ) * RAD2METER, lat_a, lon_a, lat_b, lon_b, lat_p, lon_p)
 
 
 def along_track_distance(lat_a: Column, lon_a: Column,
@@ -401,7 +419,8 @@ def along_track_distance(lat_a: Column, lon_a: Column,
     d_ap = great_circle_distance(lat_a, lon_a, lat_p, lon_p) * METER2RAD
     xtd = cross_track_distance(lat_a, lon_a, lat_b, lon_b,
                                lat_p, lon_p) * METER2RAD
-    return _safe_acos(F.cos(d_ap) / F.cos(xtd)) * RAD2METER
+    return _guard(_safe_acos(F.cos(d_ap) / F.cos(xtd)) * RAD2METER,
+                  lat_a, lon_a, lat_b, lon_b, lat_p, lon_p)
 
 
 def rhumb_destination(lat_a: Column, lon_a: Column,

@@ -133,21 +133,3 @@ def cell_running_counts(enriched: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def quality_stream(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """Streaming twin of the round-4 document-quality stack: Gopher
-    §A1.1 signals (operators/textops.gopher_quality_signals) + Flesch /
-    Flesch-Kincaid readability (readability_scores), joined on the
-    page's url. Both operators are zero-shuffle narrow projections, so
-    they stream UNCHANGED under Structured Streaming (stateless map —
-    no watermark needed); parity with the batch path is the test
-    contract (tests/test_pages_stream.py)."""
-    from pyspark.sql import functions as F
-
-    from lib_gdal_spark.operators import textops as TXT
-
-    base = pages.select(F.col("url"), F.col(text_col).alias("text"))
-    g = TXT.gopher_quality_signals(base, id_col="url")
-    r = TXT.readability_scores(base, id_col="url")
-    return g.join(r.drop("n_words"), "url")

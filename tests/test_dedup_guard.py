@@ -57,65 +57,6 @@ def test_minhash_lsh_unpersists(spark):
     assert after - before <= 1
 
 
-def test_repetition_filters(spark):
-    """Gopher-style repetition fractions vs hand-computed values."""
-    from lib_gdal_spark.operators import textops as TX
-
-    docs = _docs(spark, [
-        "a a a a",                # dup_word 3/4; top bigram 'a a' 3/3
-        "x y z w",                # no repetition
-        "p q p q p q",            # bigrams: pq qp pq qp pq -> top 3/5
-        "one",                    # single token: no bigrams/trigrams
-    ])
-    out = {r["doc_id"]: r for r in TX.with_repetition(docs).collect()}
-    assert abs(out[0]["dup_word_frac"] - 0.75) < 1e-12
-    assert out[0]["top_bigram_frac"] == 1.0
-    assert out[0]["dup_trigram_frac"] == 1.0
-    assert out[1]["dup_word_frac"] == 0.0
-    assert out[1]["dup_trigram_frac"] == 0.0
-    assert abs(out[2]["top_bigram_frac"] - 3.0 / 5.0) < 1e-12
-    # trigrams of doc2: pqp qpq pqp qpq -> all duplicated
-    assert out[2]["dup_trigram_frac"] == 1.0
-    assert out[3]["top_bigram_frac"] == 0.0
-
-
-def test_canonical_url(spark):
-    from pyspark.sql import functions as F
-
-    from lib_gdal_spark.operators import textops as TX
-
-    cases = [
-        ("HTTP://WWW.Example.com:80/Path/?utm_source=x&q=1#frag",
-         "http://example.com/Path/?q=1"),
-        ("https://example.com/", "https://example.com"),
-        ("https://example.com/a?utm_campaign=z", "https://example.com/a"),
-        ("https://example.com/a?fbclid=abc&q=2&utm_x=1",
-         "https://example.com/a?q=2"),
-        ("not a url", "not a url"),
-    ]
-    df = spark.createDataFrame([(c[0],) for c in cases], "u string")
-    got = [r["c"] for r in
-           df.select(TX.canonical_url(F.col("u")).alias("c")).collect()]
-    assert got == [c[1] for c in cases], got
-
-
-def test_dedup_by_canonical_url(spark):
-    import datetime
-
-    from lib_gdal_spark.operators import textops as TX
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = [
-        ("http://www.a.com/x?utm_source=1", t0, "first"),
-        ("http://a.com/x", t0 + datetime.timedelta(hours=1), "dup-later"),
-        ("http://b.com/y", t0, "other"),
-    ]
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, tag string")
-    out = TX.dedup_by_canonical_url(df)
-    got = {r["__canon"]: r["tag"] for r in out.collect()}
-    assert got == {"http://a.com/x": "first", "http://b.com/y": "other"}
-
-
 def test_decontaminate_flags_overlap(spark):
     from lib_gdal_spark.operators.dedup import decontaminate
 
@@ -157,93 +98,6 @@ def test_fuzzy_dedup_clusters_min_id(spark):
     assert all(out[i]["canonical_id"] == 10 for i in (10, 11, 12))
     assert all(out[i]["cluster_size"] == 3 for i in (10, 11, 12))
     assert out[10]["keep"] and not out[11]["keep"] and not out[12]["keep"]
-
-
-def test_bm25_hand_computed(spark):
-    """BM25 vs a straight-line reference on a 4-doc corpus; result is
-    identical at 1 and 16 partitions (fixed-order float assembly)."""
-    import math
-
-    from lib_gdal_spark.operators import textops as TX
-
-    texts = ["cat dog cat", "dog dog dog bird", "fish bird", "cat"]
-    terms = ("cat", "dog")
-    k1, b = 1.2, 0.75
-    n = len(texts)
-    dls = [len(t.split()) for t in texts]
-    avgdl = sum(dls) / n
-    want = {}
-    for i, t in enumerate(texts):
-        toks = t.split()
-        score, nm = 0.0, 0
-        for term in terms:
-            tf = toks.count(term)
-            if tf == 0:
-                continue
-            nm += 1
-            df = sum(1 for x in texts if term in x.split())
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            score += idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * (1.0 - b + b * dls[i] / avgdl))
-        if nm:
-            want[i] = (nm, round(score, 6))
-
-    for parts in (1, 16):
-        df_in = _docs(spark, texts).repartition(parts)
-        got = {r["doc_id"]: (r["n_matched"], r["score"])
-               for r in TX.bm25_scores(df_in, terms).collect()}
-        assert got == want, (parts, got, want)
-
-
-def test_bm25_empty_terms(spark):
-    import pytest
-
-    from lib_gdal_spark.operators import textops as TX
-
-    with pytest.raises(ValueError):
-        TX.bm25_scores(_docs(spark, ["x"]), ())
-
-
-def test_c4_clean_rules(spark):
-    """Every C4 rule (Raffel et al. 2020 SS2.2) on hand-built pages."""
-    from lib_gdal_spark.operators import textops as TX
-
-    pages = [
-        # kept: 3 good lines; the unterminated and short lines drop
-        "one two three four five six.\n"
-        "seven eight nine ten eleven twelve!\n"
-        "unterminated line with plenty of words here\n"
-        "short line.\n"
-        'quoted line has exactly five words."',
-        # dropped: only 2 surviving lines
-        "alpha beta gamma delta epsilon.\nzeta eta theta iota kappa.",
-        # dropped: curly brace at page level (lines otherwise fine)
-        "one two three four five.\nsix seven eight nine ten.\n"
-        "brace { eleven twelve thirteen fourteen.",
-        # dropped: lorem ipsum, case-insensitive
-        "one two three four five.\nsix seven eight nine ten.\n"
-        "this quotes LoReM IpSuM filler text.",
-        # dropped: blocklist word
-        "one two three four five.\nsix seven eight nine ten.\n"
-        "naughty appears in this line today.",
-        # javascript LINE drops but the page survives on the rest
-        "enable javascript to view this page.\n"
-        "one two three four five.\nsix seven eight nine ten.\n"
-        "eleven twelve thirteen fourteen fifteen.",
-    ]
-    df = _docs(spark, pages)
-    out = {r["doc_id"]: r.asDict()
-           for r in TX.c4_clean(df, blocklist=("naughty",)).collect()}
-    assert out[0]["kept"] == 1 and out[0]["n_kept"] == 3
-    assert out[0]["clean_text"].count("\n") == 2
-    assert "unterminated" not in out[0]["clean_text"]
-    assert "short line." not in out[0]["clean_text"]
-    assert out[1]["kept"] == 0 and out[1]["n_kept"] == 2
-    assert out[2]["kept"] == 0   # '{'
-    assert out[3]["kept"] == 0   # lorem ipsum
-    assert out[4]["kept"] == 0   # blocklist
-    assert out[5]["kept"] == 1 and out[5]["n_kept"] == 3
-    assert "javascript" not in out[5]["clean_text"]
 
 
 def test_simhash_pairs_matches_bruteforce(spark):

@@ -1,11 +1,10 @@
-"""Triangle counting + inverted index / phrase search."""
+"""Triangle counting."""
 
 import itertools
 
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.graph import triangle_counts
-from lib_gdal_spark.operators.index import inverted_index, phrase_search
 from lib_gdal_spark.session import local_df
 
 
@@ -50,38 +49,3 @@ def test_triangles_hub_skew(spark):
     out = triangle_counts(local_df(spark, edges, "u long, v long"))
     got = {r["node"]: r["triangles"] for r in out.collect()}
     assert got == {0: 1, 1: 1, 2: 1}
-
-
-DOCS = [
-    (1, "the quick brown fox jumps over the lazy dog"),
-    (2, "The   quick quick fox"),
-    (3, "lazy dog sleeps"),
-    (4, ""),
-]
-
-
-def test_inverted_index_postings(spark):
-    docs = local_df(spark, DOCS, "doc_id long, text string")
-    idx = {r["term"]: r for r in inverted_index(docs).collect()}
-    assert idx["the"]["df"] == 2 and idx["the"]["tf"] == 3
-    assert idx["the"]["postings"] == "1:0,6;2:0"
-    assert idx["quick"]["postings"] == "1:1;2:1,2"
-    assert idx["dog"]["postings"] == "1:8;3:1"
-    assert "" not in idx
-
-
-def test_inverted_index_min_df(spark):
-    docs = local_df(spark, DOCS, "doc_id long, text string")
-    terms = {r["term"] for r in inverted_index(docs, min_df=2).collect()}
-    assert terms == {"the", "quick", "fox", "lazy", "dog"}
-
-
-def test_phrase_search(spark):
-    docs = local_df(spark, DOCS, "doc_id long, text string")
-    got = {r["doc_id"]: (r["n_hits"], r["first_pos"])
-           for r in phrase_search(docs, "Quick", "fox").collect()}
-    # doc 1: "quick fox" absent (quick brown); doc 2: quick@2 fox@3
-    assert got == {2: (1, 2)}
-    got2 = {r["doc_id"]: (r["n_hits"], r["first_pos"])
-            for r in phrase_search(docs, "lazy", "dog").collect()}
-    assert got2 == {1: (1, 7), 3: (1, 0)}

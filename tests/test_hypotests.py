@@ -123,27 +123,6 @@ def test_bh_fdr_monotone_and_clipped(spark):
     assert qs == sorted(qs)
 
 
-def test_smith_waterman_known_scores(spark):
-    from lib_gdal_spark.operators.textops import smith_waterman_pairs
-    # A = "ACACACTA", B = "AGCACACA": classic SW example — with
-    # match 2 / mismatch -1 / gap 1 the optimal local score is 12
-    a, b = "ACACACTA", "AGCACACA"
-    rows = ([(0, i + 1, ch) for i, ch in enumerate(a)]
-            + [(1, i + 1, ch) for i, ch in enumerate(b)])
-    chars = spark.createDataFrame(rows, "tid long, pos long, ch string")
-    pairs = spark.createDataFrame([(0, 1)], "tid_a long, tid_b long")
-    r = smith_waterman_pairs(chars, pairs, match=2, mismatch=-1,
-                             gap=1).collect()[0]
-    assert r["sw_score"] == 12
-    # identical sequences: score = len * match
-    rows2 = ([(0, i + 1, ch) for i, ch in enumerate(a)]
-             + [(2, i + 1, ch) for i, ch in enumerate(a)])
-    chars2 = spark.createDataFrame(rows2, "tid long, pos long, ch string")
-    pairs2 = spark.createDataFrame([(0, 2)], "tid_a long, tid_b long")
-    assert smith_waterman_pairs(chars2, pairs2, match=2, mismatch=-1,
-                                gap=1).collect()[0]["sw_score"] == 16
-
-
 def test_page_hinkley_detects_shift(spark):
     from lib_gdal_spark.operators.timeseries import page_hinkley
     # flat 10s then a jump to 100: alarm fires after the shift

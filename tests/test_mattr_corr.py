@@ -1,39 +1,9 @@
-"""MATTR lexical diversity and exact-moment correlation matrix."""
+"""Exact-moment correlation matrix, trimmed mean and Benford test."""
 
 import numpy as np
 import pandas as pd
 
 from lib_gdal_spark.operators.quantiles import corr_matrix
-from lib_gdal_spark.operators.textops import mattr
-
-
-def test_mattr_hand_computed(spark):
-    docs = spark.createDataFrame(
-        pd.DataFrame([
-            (1, "a b c d e f"),        # n=6 >= W=4: windows abcd bcde cdef
-            (2, "a a a a a a"),        # all same: every window distinct=1
-            (3, "x y z"),              # short: whole-doc TTR = 1
-            (4, "x x y"),              # short: TTR = 2/3
-        ], columns=["doc_id", "text"]),
-        schema="doc_id long, text string")
-    got = {r["doc_id"]: r for r in mattr(docs, window=4).collect()}
-    assert got[1]["n_windows"] == 3 and got[1]["sum_distinct"] == 12
-    assert abs(got[1]["mattr"] - 1.0) < 1e-12
-    assert got[2]["sum_distinct"] == 3
-    assert abs(got[2]["mattr"] - 0.25) < 1e-12
-    assert got[3]["n_windows"] == 1 and abs(got[3]["mattr"] - 1.0) < 1e-12
-    assert abs(got[4]["mattr"] - round(2 / 3, 9)) < 1e-9
-
-
-def test_mattr_length_invariance(spark):
-    # repeating the same text shifts plain TTR but barely moves MATTR
-    base = "the cat sat on the mat with a hat and a bat"
-    docs = spark.createDataFrame(
-        pd.DataFrame([(1, base), (2, " ".join([base] * 10))],
-                     columns=["doc_id", "text"]),
-        schema="doc_id long, text string")
-    got = {r["doc_id"]: r["mattr"] for r in mattr(docs, window=6).collect()}
-    assert abs(got[1] - got[2]) < 0.15
 
 
 def test_corr_matrix_matches_numpy(spark):

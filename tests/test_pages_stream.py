@@ -140,22 +140,3 @@ def test_stream_restart_resumes_state(spark):
     n2 = out.count()
     assert out.select("url").distinct().count() == n2  # no re-emits
     assert n2 == 3000  # 2000 from run 1 + exactly the 1000 new urls
-
-
-def test_stream_quality_signals_match_batch(spark, staged):
-    """Round-4 quality stack (Gopher signals + readability) streams
-    with exact batch parity — stateless narrow maps need no watermark."""
-    d, src = staged
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-    got = _run_stream(spark, PS.quality_stream(stream), "qual_stream",
-                      "append", os.path.join(d, "ck_qual"))
-    batch = PS.quality_stream(spark.read.parquet(src))
-    probe = [
-        F.count(F.lit(1)),
-        F.sum("n_words"), F.sum("n_stop_hits"), F.sum("gopher_pass"),
-        F.sum("n_syllables"), F.sum("n_sentences"),
-        F.round(F.sum("fre"), 3), F.round(F.sum("mean_word_len"), 6),
-    ]
-    assert tuple(got.agg(*probe).collect()[0]) == \
-        tuple(batch.agg(*probe).collect()[0])
-    assert got.count() == 5000

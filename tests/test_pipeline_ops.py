@@ -1,14 +1,10 @@
 """Tests for the round-3 pipeline additions: k-means / SemDeDup,
-TF-IDF, PII redaction, Bloom membership, line dedup."""
-
-import math
+Bloom membership, line dedup."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators import cluster as CL
-from lib_gdal_spark.operators import textops as TX
 
 
 def _vecs(spark, arrs, ids=None):
@@ -73,54 +69,6 @@ def _docs(spark, n=60):
     rows = [(i, f"src{i % 3}", "w%d " % i * ((i % 7) + 1))
             for i in range(n)]
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
-
-
-def test_tfidf_hand_case(spark):
-    d = spark.createDataFrame(
-        [(0, "apple apple banana"), (1, "banana cherry"), (2, "cherry")],
-        "doc_id long, text string")
-    out = {(r["doc_id"], r["term"]): r for r in
-           TX.tfidf_top_terms(d, k=2).collect()}
-    idf_apple = math.log(4.0 / 2.0) + 1.0     # df=1 -> ln((3+1)/(1+1))+1
-    assert abs(out[(0, "apple")]["tfidf"] - round(2 * idf_apple, 6)) < 1e-9
-    assert out[(0, "apple")]["rank"] == 1
-    # banana appears in 2 docs -> lower idf than apple
-    assert out[(0, "banana")]["rank"] == 2
-
-
-def test_redact_pii_all_categories(spark):
-    d = spark.createDataFrame([(0,
-        "mail a.b-c@x-y.org ip 10.0.0.255 card 4111-1111-1111-1111 "
-        "ssn 078-05-1120 call +44 201 555 0199 done")],
-        "doc_id long, text string")
-    r = TX.redact_pii(d).first()
-    assert (r["n_email"], r["n_ip"], r["n_card"], r["n_ssn"], r["n_phone"]) \
-        == (1, 1, 1, 1, 1)
-    assert r["redacted"] == ("mail <EMAIL> ip <IP> card <CARD> "
-                             "ssn <SSN> call <PHONE> done")
-    clean = TX.redact_pii(
-        spark.createDataFrame([(1, "no pii here")], "doc_id long, text string")
-    ).first()
-    assert clean["redacted"] == "no pii here" and clean["n_email"] == 0
-
-
-def test_ngram_lm_perplexity_hand_case(spark):
-    """Hand-computed add-0.5 bigram LM: C1 = {a:3, b:3, z:2, only:1},
-    V = 4 (k*V = 2), C2 = {(a,b):3, (b,a):1, (z,z):1}."""
-    d = spark.createDataFrame(
-        [(0, "a b a b"), (1, "a b"), (2, "z z"), (3, "only")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict()
-           for r in TX.ngram_lm_perplexity(d, k=0.5).collect()}
-    q_ab = round(math.log(3.5 / 5.0) * 1e6)          # P(b|a)
-    q_ba = round(math.log(1.5 / 5.0) * 1e6)          # P(a|b)
-    q_zz = round(math.log(1.5 / 4.0) * 1e6)          # P(z|z)
-    h0 = round(-(2 * q_ab + q_ba) / 3e6, 6)
-    assert out[0]["n_bigrams"] == 3
-    assert abs(out[0]["cross_entropy"] - h0) < 1e-12
-    assert abs(out[0]["ppl"] - round(math.exp(h0), 6)) < 1e-12
-    assert abs(out[2]["cross_entropy"] - round(-q_zz / 1e6, 6)) < 1e-12
-    assert out[3]["n_bigrams"] == 0 and out[3]["cross_entropy"] is None
 
 
 def test_bloom_membership_no_false_negatives(spark):
@@ -194,26 +142,3 @@ def test_line_dedup_min_chars_exemption(spark):
     # default dedups within AND across docs
     out2 = {r["doc_id"]: r["text"] for r in DD.line_dedup(d).collect()}
     assert out2 == {1: "aa\nbb\naa".replace("\naa", "") , 2: ""}
-
-
-def test_nb_classifier_separable_and_deterministic(spark):
-    rows = (
-        [(i, "good clean prose sentence", True) for i in range(20)]
-        + [(100 + i, "spam junk casino pills", False) for i in range(20)]
-        + [(200, "good clean prose", None),      # unlabeled, pos-ish
-           (201, "casino pills spam", None),     # unlabeled, neg-ish
-           (202, "", None)]                      # empty -> bare prior
-    )
-    d = spark.createDataFrame(rows, "doc_id long, text string, y boolean")
-    out = {r["doc_id"]: r
-           for r in TX.nb_classifier(d, F.col("y")).collect()}
-    assert all(out[i]["pred_pos"] for i in range(20))
-    assert not any(out[100 + i]["pred_pos"] for i in range(20))
-    assert out[200]["pred_pos"] and not out[201]["pred_pos"]
-    assert out[202]["n_grams"] == 0
-    # empty doc scores exactly the prior: ln(21) - ln(21) = 0 -> not > 0
-    assert out[202]["log_odds"] == 0.0 and not out[202]["pred_pos"]
-    # exact integer math: identical at any parallelism
-    out2 = {r["doc_id"]: r["log_odds"] for r in
-            TX.nb_classifier(d.repartition(13), F.col("y")).collect()}
-    assert out2 == {k: v["log_odds"] for k, v in out.items()}

@@ -7,38 +7,6 @@ from hypothesis import strategies as st
 
 from lib_gdal_spark.functions import s2cells as S2
 from lib_gdal_spark.functions.cells import hilbert_xy2d
-from lib_gdal_spark.operators.textops import _CP1252_REV, _repair_mojibake_str
-
-_CP1252_FWD = {b: chr(cp) for cp, b in _CP1252_REV.items()}
-
-
-def _sloppy_cp1252_decode(raw: bytes) -> str:
-    """Bytes read as sloppy-cp1252 (specials from the table, everything
-    else latin-1 identity) — how mojibake is born."""
-    return "".join(_CP1252_FWD.get(b, chr(b)) for b in raw)
-
-
-_TEXT = st.text(
-    alphabet=st.sampled_from(
-        "abc XYZ09.,!?" + "éüñàßçøΩλЖ手—“”€™•…"
-    ),
-    min_size=1, max_size=40,
-)
-
-
-class TestMojibakeProperty:
-    @given(_TEXT)
-    @settings(max_examples=200, deadline=None)
-    def test_repair_inverts_single_mojibake_layer(self, s):
-        moji = _sloppy_cp1252_decode(s.encode("utf-8"))
-        assert _repair_mojibake_str(moji) == s
-
-    @given(st.text(alphabet=st.characters(min_codepoint=32,
-                                          max_codepoint=126),
-                   max_size=40))
-    @settings(max_examples=100, deadline=None)
-    def test_ascii_is_fixed_point(self, s):
-        assert _repair_mojibake_str(s) == s
 
 
 class TestS2Property:

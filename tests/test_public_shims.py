@@ -1,7 +1,7 @@
 """Exercise the thin public convenience APIs that larger queries bypass:
 file-path GPX/KML readers, the OGR two-valued comparators, the HSTORE
-getter, merc_forward/inverse, and the fingerprint / lang-id column
-helpers — so no public entry point ships untested."""
+getter and merc_forward/inverse — so no public entry point ships
+untested."""
 
 import os
 import tempfile
@@ -10,7 +10,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.raster import merc_forward, merc_inverse
-from lib_gdal_spark.operators.textops import with_fingerprint, with_lang_id
 from lib_gdal_spark.plans import ogr_sql as Q
 from lib_gdal_spark.session import local_df
 from lib_gdal_spark.sources.gpx import read_gpx
@@ -90,16 +89,3 @@ def test_merc_roundtrip_and_clip():
     # poles clip to the web-mercator square instead of diverging
     _, ypole = merc_forward(np.array([0.0]), np.array([90.0]))
     assert np.isfinite(ypole[0])
-
-
-def test_with_fingerprint_and_lang_id(spark):
-    df = local_df(spark, [
-        (1, "The Quick   Brown fox"),
-        (2, "the quick brown fox"),          # same after normalization
-        (3, "der und die das ist nicht von mit"),
-    ], "doc_id long, text string")
-    fp = {r["doc_id"]: r["fingerprint"]
-          for r in with_fingerprint(df).collect()}
-    assert fp[1] == fp[2] != fp[3]
-    lang = {r["doc_id"]: r["lang_pred"] for r in with_lang_id(df).collect()}
-    assert lang[3] == "de"

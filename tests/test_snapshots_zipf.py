@@ -1,11 +1,9 @@
-"""Crawl-snapshot delta (operators/snapshots), Zipf rank-frequency fit
-(operators/textops.zipf_fit), and the hex k-ring pair join
-(operators/knn.hex_ring_pairs).
+"""Crawl-snapshot delta (operators/snapshots) and the hex k-ring pair
+join (operators/knn.hex_ring_pairs).
 
 snapshot_delta is pinned against a hand-built capture history with every
-status class (new/changed/unchanged/gone); zipf_fit against a
-closed-form OLS on a synthetic exact-Zipf corpus; hex_ring_pairs against
-a brute-force O(n^2) oracle (completeness of the ring-1 covering)."""
+status class (new/changed/unchanged/gone); hex_ring_pairs against a
+brute-force O(n^2) oracle (completeness of the ring-1 covering)."""
 
 import math
 
@@ -18,7 +16,6 @@ from lib_gdal_spark.operators.knn import hex_ring_pairs
 from lib_gdal_spark.operators.snapshots import (snapshot_delta,
                                                 snapshot_gone,
                                                 snapshot_history)
-from lib_gdal_spark.operators.textops import zipf_fit
 
 
 class TestSnapshotDelta:
@@ -57,42 +54,6 @@ class TestSnapshotDelta:
         assert d.count() == 8 + 1
         gone = d.filter(F.col("status") == "gone").collect()
         assert [(r["url"], r["crawl"]) for r in gone] == [("c", 2)]
-
-
-class TestZipfFit:
-    def test_exact_zipf_slope(self, spark):
-        # freq(rank) = round(6000 / rank) for 40 distinct tokens; the
-        # fitted slope must come out near -1 and match the closed-form
-        # OLS computed on the identical (rank, count) table.
-        toks = []
-        for r in range(1, 41):
-            toks.extend([f"w{r:02d}"] * round(6000 / r))
-        docs = spark.createDataFrame(
-            [("xx", " ".join(toks))], "lang string, text string")
-        row = zipf_fit(docs, top_k=40).collect()[0]
-        ranks = np.arange(1, 41, dtype=float)
-        counts = np.array([round(6000 / r) for r in range(1, 41)], float)
-        x, y = np.log(ranks), np.log(counts)
-        n = 40.0
-        slope = (n * (x * y).sum() - x.sum() * y.sum()) / \
-            (n * (x * x).sum() - x.sum() ** 2)
-        intercept = (y.sum() - slope * x.sum()) / n
-        assert row["lang"] == "xx"
-        assert row["n_types"] == 40
-        assert row["n_tokens"] == int(counts.sum())
-        assert row["slope"] == pytest.approx(round(slope, 6), abs=1e-6)
-        assert row["intercept"] == pytest.approx(round(intercept, 6),
-                                                 abs=1e-6)
-        assert -1.1 < row["slope"] < -0.9
-
-    def test_tie_break_deterministic(self, spark):
-        # equal counts rank alphabetically — two engines must agree
-        docs = spark.createDataFrame(
-            [("yy", "b a c a b c")], "lang string, text string")
-        row = zipf_fit(docs, top_k=2).collect()[0]
-        # ranks: a=1, b=2 (ties broken by token asc); both count 2
-        assert row["n_types"] == 3 and row["n_tokens"] == 6
-        assert row["slope"] == 0.0  # equal counts -> flat fit
 
 
 class TestHexRingPairs:

@@ -317,6 +317,44 @@ def test_knn_skips_null_coordinate_targets(spark):
             == [(1, 1), (2, 2)]
 
 
+def test_cell_keys_and_distance_null_coordinates_give_null(spark):
+    """least/greatest skip NULLs: without a guard a NULL row got geohash
+    'zzzzzz', z-order key 4294967295, MGRS band 19 and a half-globe
+    great-circle distance. The real row beside it keeps its values."""
+    import math
+
+    from lib_gdal_spark.functions import greatcircle as GC
+
+    lon, lat = 10.40744, 57.64911
+    df = spark.createDataFrame([(0, lon, lat), (1, None, None)],
+                               "id long, lon double, lat double")
+    a, o, z = F.col("lat"), F.col("lon"), F.lit(0.0)
+    got = {r["id"]: r for r in C.with_zorder(df, bits=16).select(
+        "id", "zkey",
+        C.geohash_encode(o, a, 6).alias("gh"),
+        C.mgrs_band_index(a).alias("band"),
+        GC.great_circle_distance(a, o, z, z).alias("d"),
+        GC.great_circle_extend_position(a, o, F.lit(1e5), F.lit(45.0))
+        .alias("pos"),
+        GC.gc_intermediate_point(a, o, z, z, F.lit(0.5)).alias("mid"),
+        GC.cross_track_distance(z, z, F.lit(1.0), z, a, o).alias("xtd"),
+        GC.along_track_distance(z, z, F.lit(1.0), z, a, o).alias("atd"),
+    ).collect()}
+    keys = ("zkey", "gh", "band", "d", "pos", "mid", "xtd", "atd")
+    assert [got[1][k] for k in keys] == [None] * len(keys)
+    assert all(got[0][k] is not None for k in keys)
+
+    n = 1 << 16
+    qx = min(n - 1, math.floor((lon + 180.0) / 360.0 * n))
+    qy = min(n - 1, math.floor((lat + 90.0) / 180.0 * n))
+    zkey = sum((((qx >> i) & 1) << (2 * i)) | (((qy >> i) & 1) << (2 * i + 1))
+               for i in range(16))
+    d = math.acos(math.cos(math.radians(lat)) * math.cos(math.radians(lon))) \
+        * GC.RAD2METER
+    assert (got[0]["zkey"], got[0]["gh"], got[0]["band"]) == (zkey, "u4pruy", 17)
+    assert got[0]["d"] == pytest.approx(d, rel=1e-12)
+
+
 def test_knn_bruteforce_vs_kring(spark, enriched):
     pts = (
         enriched.where(F.col("lon").isNotNull())
