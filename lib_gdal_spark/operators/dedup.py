@@ -1,6 +1,7 @@
 """Deduplication operators for training-data pipelines over document tables.
 
 - exact: hash-groupBy on the text bytes (md5), map-side combinable.
+- canonical_url: URL normalization for URL-level exact dedup, pure JVM.
 - minhash_lsh: shingle -> minhash -> band-bucket join, the standard
   near-duplicate pipeline (MMDS ch.3 construction, public knowledge). All
   hashing is NumPy over Arrow batches.
@@ -17,7 +18,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _MERSENNE = (1 << 61) - 1
@@ -33,6 +34,49 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
             F.min(id_col).alias("min_doc_id"),
         )
         .where(F.col("n_docs") > 1)
+    )
+
+
+def canonical_url(col: Column) -> Column:
+    """Canonical URL for dedup keys, pure JVM (the standard CC-pipeline
+    normalization): lowercase scheme+host, strip a leading 'www.', drop
+    the fragment, drop utm_*/fbclid/gclid tracking params, collapse a
+    trailing '/', default-port removal. Returns a string column."""
+    u = F.trim(col)
+    # split off fragment
+    u = F.regexp_replace(u, r"#.*$", "")
+    # scheme + host lowercased; keep path/query case
+    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    rest = F.regexp_replace(u, r"^[A-Za-z][A-Za-z0-9+.-]*://", "")
+    host = F.lower(F.regexp_extract(rest, r"^([^/?]*)", 1))
+    host = F.regexp_replace(host, r"^www\.", "")
+    host = F.regexp_replace(host, r":(80|443)$", "")
+    tail = F.regexp_replace(rest, r"^[^/?]*", "")
+    # strip tracking params (handles first/middle/last positions)
+    tail = F.regexp_replace(
+        tail, r"([?&])(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*", "$1")
+    tail = F.regexp_replace(tail, r"[?&]+$", "")
+    tail = F.regexp_replace(tail, r"\?&", "?")
+    tail = F.regexp_replace(tail, r"&&+", "&")
+    # collapse trailing slash on a bare path
+    tail = F.when(tail == "/", F.lit("")).otherwise(tail)
+    return F.when(
+        scheme == "", u  # not a URL; pass through untouched
+    ).otherwise(F.concat(scheme, F.lit("://"), host, tail))
+
+
+def dedup_by_canonical_url(pages: DataFrame,
+                           url_col: str = "url") -> DataFrame:
+    """First page per canonical URL wins (storage order via warc_ts then
+    raw url — deterministic), the URL-level exact-dedup stage every CC
+    pipeline runs before content dedup."""
+    key = canonical_url(F.col(url_col)).alias("__canon")
+    w = Window.partitionBy("__canon").orderBy("warc_ts", url_col)
+    return (
+        pages.withColumn("__canon", key)
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
     )
 
 
