@@ -6756,29 +6756,6 @@ def q_min_enclosing_circle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return min_enclosing_circles(pts)
 
 
-def q_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum spanning tree by distributed Borůvka over a 120-node
-    deterministic graph (ring + two functional shuffles) with DISTINCT
-    integer weights w = u*200+v, so the MST is unique and the oracle —
-    sequential Prim as a 119-step recursive CTE picking the min
-    crossing edge — must produce the identical edge set."""
-    from lib_gdal_spark.operators.graph import boruvka_mst
-
-    r = spark.range(0, 120)
-    u = F.col("id")
-    raw = (
-        r.select(u.alias("u"), ((u + 1) % 120).alias("v"))
-        .unionByName(r.select(u.alias("u"), ((u * 7 + 3) % 120).alias("v")))
-        .unionByName(r.select(u.alias("u"), ((u * 13 + 5) % 120).alias("v")))
-    )
-    e = raw.where(F.col("u") != F.col("v")).select(
-        "u", "v", (F.col("u") * 200 + F.col("v")).alias("w"))
-    out = boruvka_mst(e)
-    return out.select(F.col("ea").cast("long").alias("ea"),
-                      F.col("eb").cast("long").alias("eb"),
-                      F.col("w").cast("long").alias("w"))
-
-
 def q_ipf_gravity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doubly-constrained gravity model: 4 IPF iterations over a 12x12
     integer milli-unit seed matrix with equal row/column target
@@ -7407,7 +7384,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chaikin_smooth": q_chaikin_smooth,
         "snap_to_grid": q_snap_to_grid,
         "min_enclosing_circle": q_min_enclosing_circle,
-        "mst_boruvka": q_mst_boruvka,
         "ipf_gravity": q_ipf_gravity,
         "visvalingam": q_visvalingam,
         "hausdorff_pairs": q_hausdorff_pairs,
@@ -17227,48 +17203,6 @@ def oracle_sql() -> dict[str, str]:
           PARTITION BY gid
           ORDER BY CAST(rr AS DOUBLE) / CAST(den * den AS DOUBLE) ASC,
                    i1 ASC, i2 ASC, i3 ASC) = 1
-    """
-
-    # mst_boruvka: Prim's algorithm as a recursive CTE — the LIST of
-    # in-tree nodes is the frontier state; distinct weights make the
-    # MST unique, so Borůvka (Spark) and Prim (SQL) agree edge-for-edge.
-    sqls["mst_boruvka"] = """
-        WITH RECURSIVE raw AS (
-          SELECT g.u AS u, (g.u + 1) % 120 AS v
-          FROM generate_series(0, 119) g(u)
-          UNION ALL
-          SELECT g.u, (g.u * 7 + 3) % 120 FROM generate_series(0, 119) g(u)
-          UNION ALL
-          SELECT g.u, (g.u * 13 + 5) % 120 FROM generate_series(0, 119) g(u)
-        ),
-        und AS (
-          SELECT least(u, v) AS a, greatest(u, v) AS b,
-                 MIN(u * 200 + v) AS w
-          FROM raw WHERE u <> v GROUP BY 1, 2
-        ),
-        dir AS (
-          SELECT a AS u, b AS v, w FROM und
-          UNION ALL
-          SELECT b AS u, a AS v, w FROM und
-        ),
-        prim(step, intree, ea, eb, w) AS (
-          SELECT 0, [CAST(0 AS BIGINT)], CAST(NULL AS BIGINT),
-                 CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-          UNION ALL
-          SELECT p.step + 1, list_append(p.intree, e.v),
-                 least(e.u, e.v), greatest(e.u, e.v), e.w
-          FROM prim p JOIN dir e
-            ON list_contains(p.intree, e.u)
-           AND NOT list_contains(p.intree, e.v)
-          WHERE p.step < 119
-            AND e.w = (
-              SELECT MIN(e2.w) FROM dir e2
-              WHERE list_contains(p.intree, e2.u)
-                AND NOT list_contains(p.intree, e2.v))
-        )
-        SELECT CAST(ea AS BIGINT) AS ea, CAST(eb AS BIGINT) AS eb,
-               CAST(w AS BIGINT) AS w
-        FROM prim WHERE step > 0
     """
 
     # ipf_gravity: the 8 IPF half-steps unrolled as CTE stages; the

@@ -1358,93 +1358,3 @@ def link_prediction(edges: DataFrame, min_common: int = 2,
          .alias("jaccard"),
         (F.col("deg_a") * F.col("deg_b")).alias("pref_attach"),
     )
-
-
-def boruvka_mst(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
-    """Minimum spanning forest by distributed Borůvka (Borůvka 1926;
-    the standard MST for Pregel/MapReduce-scale graphs — O(log V)
-    rounds, each round pure joins/aggregations, no priority queue).
-
-    ``edges``: undirected (u, v, w); **weights must be distinct** so
-    the MSF is unique — required for the exact oracle and asserted
-    nowhere (the caller's contract). Ties in the per-component argmin
-    additionally break on (w, u, v), so even equal weights resolve
-    deterministically, they just lose MST uniqueness.
-
-    Per round: (1) look up both endpoints' component labels, (2) every
-    component picks its cheapest outgoing edge, (3) the chosen edges
-    form a pseudo-forest whose 2-cycles break toward the smaller label,
-    (4) pointer-jumping contracts every merge tree to its root (log
-    hops), (5) relabel. All shuffles key on node/component ids; the
-    edge list is never collected.
-
-    Returns the MSF edge rows (ea, eb, w) with ea < eb."""
-    from pyspark.sql import Window
-
-    e = edges.select(
-        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"), "w"
-    ).where(F.col("a") != F.col("b")).groupBy("a", "b").agg(
-        F.min("w").alias("w"))
-    nodes = (e.select(F.col("a").alias("node"))
-             .unionByName(e.select(F.col("b").alias("node"))).distinct())
-    comp = nodes.select("node", F.col("node").alias("comp"))
-    chosen = None
-    # pointer-jump depth: merge chains are bounded by the component
-    # count, so ceil(log2(n)) doublings always reach the root
-    n_nodes = nodes.count()
-    jumps = max(3, int(n_nodes - 1).bit_length())
-
-    for _ in range(max_rounds):
-        ec = (e.join(comp.select(F.col("node").alias("a"),
-                                 F.col("comp").alias("ca")), "a")
-               .join(comp.select(F.col("node").alias("b"),
-                                 F.col("comp").alias("cb")), "b")
-               .where(F.col("ca") != F.col("cb")))
-        ec = ec.persist()
-        if ec.limit(1).count() == 0:
-            ec.unpersist()
-            break
-        # each component nominates its cheapest crossing edge
-        cand = (ec.select(F.col("ca").alias("c"), F.col("cb").alias("o"),
-                          "a", "b", "w")
-                  .unionByName(
-                      ec.select(F.col("cb").alias("c"),
-                                F.col("ca").alias("o"), "a", "b", "w")))
-        win = Window.partitionBy("c").orderBy("w", "a", "b")
-        sel = (cand.withColumn("rn", F.row_number().over(win))
-                   .where(F.col("rn") == 1).drop("rn"))
-        picked = sel.select("a", "b", "w").distinct()
-        chosen = picked if chosen is None else (
-            chosen.unionByName(picked).distinct())
-
-        # merge graph: parent[c] = o; break mutual pairs toward min id
-        par = sel.select("c", F.col("o").alias("p"))
-        mutual = (par.alias("x")
-                  .join(par.alias("y"),
-                        (F.col("x.p") == F.col("y.c"))
-                        & (F.col("y.p") == F.col("x.c"))))
-        roots = (mutual.where(F.col("x.c") < F.col("x.p"))
-                 .select(F.col("x.c").alias("c")))
-        par = (par.join(roots, "c", "left_anti")
-               .unionByName(roots.select("c", F.col("c").alias("p"))))
-        # components without a crossing edge keep themselves
-        allc = comp.select(F.col("comp").alias("c")).distinct()
-        par = (allc.join(par, "c", "left")
-               .select("c", F.coalesce("p", F.col("c")).alias("p")))
-        # pointer jumping to the root
-        for _ in range(jumps):
-            par = (par.alias("l")
-                   .join(par.alias("r").select(
-                       F.col("c").alias("p"), F.col("p").alias("gp")), "p")
-                   .select(F.col("c"), F.col("gp").alias("p")))
-        comp = (comp.join(par.select(F.col("c").alias("comp"), "p"), "comp")
-                .select("node", F.col("p").alias("comp")))
-        comp = comp.localCheckpoint(eager=True)
-        chosen = chosen.localCheckpoint(eager=True)
-        ec.unpersist()
-
-    if chosen is None:
-        return e.select(F.col("a").alias("ea"), F.col("b").alias("eb"),
-                        "w").limit(0)
-    return chosen.select(F.col("a").alias("ea"),
-                         F.col("b").alias("eb"), "w")

@@ -4,7 +4,6 @@ task ever holding more than one tile (VERDICT r2 fix #1)."""
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from lib_gdal_spark.kernels import checksum as K
 from lib_gdal_spark.operators import raster as RAST

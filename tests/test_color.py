@@ -2,7 +2,6 @@
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators import color as CL
 from lib_gdal_spark.sources.rasters import RASTER_SCHEMA, multiband_tiles

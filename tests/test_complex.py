@@ -7,7 +7,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import complexfn as CF
-from lib_gdal_spark.kernels import checksum as K
 from lib_gdal_spark.kernels import complexpx as CX
 from lib_gdal_spark.operators import raster as RAST
 from lib_gdal_spark.sources import rasters as RX

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from lib_gdal_spark.kernels import contour as CK
 from lib_gdal_spark.operators import contour as CO

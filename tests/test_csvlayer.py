@@ -1,6 +1,5 @@
 """OGR CSV layer codec (drivers/vector/csv semantics)."""
 
-from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.functions.wkt import wkt_to_wkb
 from lib_gdal_spark.sources.csvlayer import parse_csv_layer, write_csv_layer
 

@@ -3,7 +3,6 @@ known cores/borders/noise, determinism under repartitioning, and the
 min-label tie-break for a border point touching two clusters."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.cluster import dbscan
 from lib_gdal_spark.session import local_df

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import random
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 

@@ -7,7 +7,10 @@ column set, and order-insensitive exact value equality.
 from __future__ import annotations
 
 import importlib
+import importlib.util
+import pathlib
 import pkgutil
+import sys
 
 import duckdb
 import pandas as pd
@@ -91,3 +94,16 @@ def test_every_query_has_an_oracle():
     """No orphan oracles and no unchecked queries; ``feature_matching`` is
     rows-only because its matcher is sequential by reference semantics."""
     assert set(E.queries()) - {"feature_matching"} == set(E.oracle_sql())
+
+
+def test_check_correctness_checks_its_own_checkout(monkeypatch):
+    """tools/check_correctness.py imports the registry of the checkout it
+    lives in, so a second checkout checks its own code."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.delitem(sys.modules, "__spark_entry__", raising=False)
+    spec = importlib.util.spec_from_file_location(
+        "check_correctness", root / "tools" / "check_correctness.py")
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    assert pathlib.Path(tool.E.__file__).resolve().is_relative_to(root)

@@ -3,7 +3,6 @@ local references; histogram matching identity + monotonicity."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.dem import dem_op_k
 from lib_gdal_spark.operators.filters import (

@@ -1,12 +1,9 @@
-"""D8 flow direction kernel + co-citation / bibliographic coupling."""
+"""D8 flow direction kernel and D8 drainage basins."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators import dem as D
-from lib_gdal_spark.operators.links import bibliographic_coupling, co_citation
-from lib_gdal_spark.session import local_df
 from lib_gdal_spark.sources import rasters as RS
 
 
@@ -55,40 +52,6 @@ def test_diagonal_vs_cardinal_distance(spark):
     arr[33, 33] = 40.0   # SE drop 10 -> 7.07 effective
     out = _run(spark, arr)
     assert out[32, 32] == 1.0
-
-
-def _edges(spark, pairs):
-    return local_df(spark, [(int(a), int(b)) for a, b in pairs],
-                    "src long, dst long")
-
-
-def test_co_citation_counts(spark):
-    # sources 1,2 both cite {10, 11}; 3 cites {10, 12}
-    e = _edges(spark, [(1, 10), (1, 11), (2, 10), (2, 11), (3, 10),
-                       (3, 12), (1, 10)])   # duplicate edge ignored
-    out = {(r["dst_a"], r["dst_b"]): r["n_common"]
-           for r in co_citation(e).collect()}
-    assert out[(10, 11)] == 2
-    assert out[(10, 12)] == 1
-    assert (11, 12) not in out
-
-
-def test_degree_cap_drops_hubs(spark):
-    hub = [(99, d) for d in range(20)]
-    e = _edges(spark, hub + [(1, 0), (1, 1)])
-    out = {(r["dst_a"], r["dst_b"]): r["n_common"]
-           for r in co_citation(e, max_out_degree=10).collect()}
-    assert out == {(0, 1): 1}  # the 20-out-degree hub contributes nothing
-
-
-def test_bibliographic_coupling(spark):
-    # sources 1 and 2 share targets {10, 11}; 3 shares only 10 with them
-    e = _edges(spark, [(1, 10), (1, 11), (2, 10), (2, 11), (3, 10)])
-    out = {(r["src_a"], r["src_b"]): r["n_common"]
-           for r in bibliographic_coupling(e).collect()}
-    assert out[(1, 2)] == 2
-    assert out[(1, 3)] == 1
-    assert out[(2, 3)] == 1
 
 
 def _basins(spark, arr, tile=32, lo=1, hi=62):

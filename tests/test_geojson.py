@@ -5,10 +5,6 @@ import json
 import os
 import tempfile
 
-import pytest
-from pyspark.sql import functions as F
-
-from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.functions.wkt import wkb_to_wkt
 from lib_gdal_spark.sources import geojson as GJ
 

@@ -1,7 +1,5 @@
 """GML codec (gml2ogrgeometry.cpp / ogr2gmlgeometry.cpp parity)."""
 
-import numpy as np
-
 from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.functions.wkt import wkb_to_wkt, wkt_to_wkb
 from lib_gdal_spark.sources.gml import (

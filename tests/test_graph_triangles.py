@@ -2,8 +2,6 @@
 
 import itertools
 
-from pyspark.sql import functions as F
-
 from lib_gdal_spark.operators.graph import triangle_counts
 from lib_gdal_spark.session import local_df
 

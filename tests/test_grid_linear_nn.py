@@ -1,9 +1,7 @@
 """grid 'linear' (Delaunay) and 'invdistnn' vs single-process references."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
-from lib_gdal_spark.functions import delaunay as DT
 from lib_gdal_spark.operators import grid as GR
 from lib_gdal_spark.operators.rasterize import GridSpec
 

@@ -11,7 +11,7 @@ from lib_gdal_spark.kernels.checksum import gdal_checksum
 from lib_gdal_spark.sources.gtiff import (
     COMP_DEFLATE, COMP_LZW, COMP_NONE, COMP_PACKBITS,
     lzw_decode, lzw_encode, packbits_decode, packbits_encode,
-    parse_geotiff, parse_geotiff_documents, read_geotiff, write_geotiff,
+    parse_geotiff, read_geotiff, write_geotiff,
 )
 from lib_gdal_spark.sources.rasters import BYTE20_GT, byte20
 

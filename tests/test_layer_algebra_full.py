@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.operators import layer_algebra as LA

@@ -4,8 +4,6 @@ wins; dense ring -> center wins)."""
 
 import random
 
-from pyspark.sql import functions as F
-
 from lib_gdal_spark.operators.enclosing import largest_empty_circles
 from lib_gdal_spark.session import local_df
 

@@ -8,9 +8,7 @@ scale factor 35/40 = 0.875; the unmeasured head/tail parts (arc 0-5 and
 """
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.operators import lineref as LR

@@ -1,8 +1,6 @@
 """LPA community detection: planted-block recovery, determinism under
 repartitioning, and the contrast with connected components."""
 
-from collections import Counter
-
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.components import connected_components

@@ -4,7 +4,6 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.kernels import surf
 from lib_gdal_spark.operators.matching import (

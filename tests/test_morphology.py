@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from lib_gdal_spark.operators.dem import dem_op, morphology
+from lib_gdal_spark.operators.dem import morphology
 from lib_gdal_spark.sources.rasters import RASTER_SCHEMA, tiles_from_array
 
 

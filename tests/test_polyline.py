@@ -4,8 +4,6 @@ partitioning invariance of the per-line assembly."""
 
 import random
 
-from pyspark.sql import functions as F
-
 from lib_gdal_spark.functions.polyline import (
     polyline_decode,
     polyline_encode,

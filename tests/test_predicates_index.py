@@ -1,7 +1,6 @@
 """Spatial predicates, tile index, cutline warp, LIKE ESCAPE."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import crs as CRS

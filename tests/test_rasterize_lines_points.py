@@ -1,7 +1,6 @@
 """Line / point burn + ALL_TOUCHED rasterize vs single-process references."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.kernels import scanline as S

@@ -3,7 +3,6 @@ unmatched keys, duplicate rows), the how-guard, detect_hot_keys on a
 planted hot key, and spatial_repartition count preservation."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.skew import (
     detect_hot_keys,

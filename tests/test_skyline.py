@@ -1,7 +1,5 @@
 """Skyline (Pareto frontier): brute-force equality, invariances, guard."""
 
-import itertools
-
 import pytest
 
 from lib_gdal_spark.operators.skyline import skyline

@@ -5,8 +5,6 @@ snapshot_delta is pinned against a hand-built capture history with every
 status class (new/changed/unchanged/gone); hex_ring_pairs against a
 brute-force O(n^2) oracle (completeness of the ring-1 covering)."""
 
-import math
-
 import numpy as np
 import pandas as pd
 import pytest

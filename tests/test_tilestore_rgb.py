@@ -4,7 +4,6 @@ import sqlite3
 
 import numpy as np
 
-from lib_gdal_spark.session import local_df
 from lib_gdal_spark.sinks.tilestore import write_mbtiles
 from lib_gdal_spark.sources.png import parse_png
 from lib_gdal_spark.sources.rasters import byte20, BYTE20_GT, tiles_from_array

@@ -1,7 +1,6 @@
 """Toponym resolution (operators/toponym.py) on a hand-built fixture."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators import toponym as T
 

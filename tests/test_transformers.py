@@ -7,7 +7,6 @@ round-trips; Approx matches the exact transform within tol.
 """
 
 import numpy as np
-import pytest
 
 from lib_gdal_spark.functions import transforms as T
 

@@ -3,7 +3,6 @@ unreachable nodes get exactly 0, mass stays bounded by scale, seeds
 outside the graph are ignored, and an all-outside seed set raises."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.graph import pagerank, personalized_pagerank
 from lib_gdal_spark.session import local_df

@@ -1,44 +1,11 @@
-"""Closed-form checks for periodogram, Holt smoothing, the trajectory
-distances (Hausdorff, DTW, Frechet, LCSS), circular statistics and the
-Jonckheere trend test."""
+"""Closed-form checks for the trajectory distances (Hausdorff, DTW,
+Frechet, LCSS) and circular statistics."""
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from lib_gdal_spark.operators.timeseries import holt_smoothing, periodogram
 from lib_gdal_spark.operators.trajectory import hausdorff_pairs
-
-
-def test_periodogram_detects_harmonic(spark):
-    n = 48
-    rows = [(t, 10 + round(8 * math.cos(2 * math.pi * 2 * t / n)))
-            for t in range(n)]
-    s = spark.createDataFrame(rows, "t long, x long")
-    out = {r["k"]: r["power"] for r in periodogram(s, 6).collect()}
-    assert out[2] == max(out.values())
-    assert out[2] > 100 * max(v for k, v in out.items() if k != 2)
-
-
-def test_periodogram_constant_is_flat(spark):
-    s = spark.createDataFrame([(t, 7) for t in range(24)], "t long, x long")
-    for r in periodogram(s, 5).collect():
-        assert abs(r["power"]) < 1e-6
-
-
-def test_holt_alpha1(spark):
-    s = spark.createDataFrame([(t, t * t) for t in range(10)],
-                              "t long, x long")
-    out = holt_smoothing(s, alpha=1.0, beta=0.0).orderBy("t").collect()
-    for r in out:
-        assert r["level"] == r["x"]        # alpha=1 tracks exactly
-        assert r["trend"] == 1.0           # b stays at x1 - x0 = 1
-    assert out[0]["fitted"] is None
-    assert out[3]["fitted"] == out[2]["level"] + 1.0
 
 
 def test_hausdorff_known_pair(spark):
@@ -173,17 +140,3 @@ def test_circular_stats_directed_vs_uniform(spark):
         "tid long, vi long, x long, y long")
     r2 = circular_stats(pts2).collect()[0]
     assert r2["r_len"] == pytest.approx(0.0, abs=1e-9)
-
-
-def test_jonckheere_monotone_groups(spark):
-    from lib_gdal_spark.operators.hypotests import jonckheere_terpstra
-    # strictly increasing group levels -> J maximal, z strongly positive
-    rows = [(g, g * 100 + i) for g in range(3) for i in range(20)]
-    d = spark.createDataFrame(rows, "g int, v long")
-    r = jonckheere_terpstra(d, "g", "v", [0, 1, 2]).collect()[0]
-    # every cross-pair concordant: J = 3 * 20*20 = 1200 -> j_x2 = 2400
-    assert r["j_x2"] == 2400
-    assert r["z"] > 5
-    # reversed order -> strongly negative
-    r2 = jonckheere_terpstra(d, "g", "v", [2, 1, 0]).collect()[0]
-    assert r2["z"] < -5

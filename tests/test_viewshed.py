@@ -4,7 +4,6 @@ reference implementing the identical sampled-LOS definition."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.viewshed import viewshed
 

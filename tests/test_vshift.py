@@ -4,7 +4,6 @@ gdalflattenmask.c)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from lib_gdal_spark.operators.vshift import (
     apply_vertical_shift_grid, flatten_mask)

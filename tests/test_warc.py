@@ -1,9 +1,7 @@
 """WARC source (sources/warc.py) — CC-style gzip members + pages head."""
 
-import pandas as pd
-
 from lib_gdal_spark.sources.warc import (
-    parse_warc, parse_warc_documents, warc_response_pages, write_warc,
+    parse_warc, warc_response_pages, write_warc,
 )
 
 RECS = [

@@ -3,9 +3,6 @@ GeometryCollection, Z variants, and the OGR 2.5D type-flag import."""
 
 import struct
 
-import numpy as np
-import pytest
-
 from lib_gdal_spark.functions import geometry as G
 from lib_gdal_spark.functions import wkt as W
 

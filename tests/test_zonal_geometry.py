@@ -5,7 +5,6 @@ import math
 import numpy as np
 import pytest
 
-from lib_gdal_spark.operators.rasterize import GridSpec
 from lib_gdal_spark.operators.stats import zonal_geometry
 
 

@@ -18,6 +18,7 @@ arguments) still gates session end; this mode is for iterating.
 
 from __future__ import annotations
 
+import pathlib
 import re
 import sys
 import time
@@ -25,7 +26,8 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as E  # noqa: E402
 from lib_gdal_spark.session import get_spark  # noqa: E402
@@ -37,8 +39,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 def _module_graph() -> dict[str, set[str]]:
     """module basename -> set of module basenames it imports, scanned
     textually over every lib_gdal_spark/*.py (no execution)."""
-    import pathlib
-    pkg = pathlib.Path("/root/repo/lib_gdal_spark")
+    pkg = REPO / "lib_gdal_spark"
     names = {p.stem for p in pkg.rglob("*.py") if p.stem != "__init__"}
     pat = re.compile(
         r"from lib_gdal_spark(?:\.\w+)* import (\w+)|"
@@ -65,7 +66,7 @@ def _entry_diff_queries(ref: str):
     import subprocess
     out = subprocess.run(
         ["git", "diff", "-U0", ref, "--", "__spark_entry__.py"],
-        capture_output=True, text=True, cwd="/root/repo", check=True)
+        capture_output=True, text=True, cwd=REPO, check=True)
     hunks = []
     for m in re.finditer(r"^@@ -\d+(?:,\d+)? \+(\d+)(?:,(\d+))? @@",
                          out.stdout, re.M):
@@ -74,7 +75,7 @@ def _entry_diff_queries(ref: str):
         hunks.append((start, start + max(n, 1) - 1))
     if not hunks:
         return set()
-    lines = open("/root/repo/__spark_entry__.py").read().splitlines()
+    lines = open(REPO / "__spark_entry__.py").read().splitlines()
     # top-level def spans
     defs = []  # (name, start_line_1based)
     for i, ln in enumerate(lines, 1):
@@ -124,7 +125,7 @@ def _affected_queries(ref: str) -> set[str]:
     import subprocess
     out = subprocess.run(
         ["git", "diff", "--name-only", ref, "--", "*.py"],
-        capture_output=True, text=True, cwd="/root/repo", check=True)
+        capture_output=True, text=True, cwd=REPO, check=True)
     touched = {f.rsplit("/", 1)[-1][:-3] for f in out.stdout.split()
                if f.startswith("lib_gdal_spark/") and f.endswith(".py")}
     entry_hits: set[str] = set()
