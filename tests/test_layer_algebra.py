@@ -322,21 +322,3 @@ class TestContainmentPretest:
         inputs = _poly_df(spark, [(1, G.box_ring(10, 10, 20, 20))])
         methods = _poly_df(spark, [(10, G.box_ring(0, 0, 50, 50))])
         assert LA.erase(inputs, methods).collect() == []
-
-
-def test_compactness_square_vs_sliver(spark):
-    import numpy as np
-    from lib_gdal_spark.functions import geometry as G
-    from lib_gdal_spark.operators.layer_algebra import compactness
-    sq = G.wkb_polygon([np.asarray(G.box_ring(0, 0, 10, 10))])
-    sliver = G.wkb_polygon([np.asarray(G.box_ring(0, 0, 100, 1))])
-    layer = spark.createDataFrame(
-        [(0, bytearray(sq)), (1, bytearray(sliver))],
-        "fid long, geom_wkb binary")
-    got = {r["fid"]: r for r in compactness(layer).collect()}
-    import math
-    assert got[0]["polsby_popper"] == pytest.approx(
-        4 * math.pi * 100 / 1600, abs=1e-9)
-    assert got[0]["polsby_popper"] > got[1]["polsby_popper"] * 5
-    # schwartzberg is inverse-sense: sliver bigger
-    assert got[1]["schwartzberg"] > got[0]["schwartzberg"]
