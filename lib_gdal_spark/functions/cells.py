@@ -139,15 +139,29 @@ def k_ring(cell: np.ndarray, k: int) -> np.ndarray:
     return np.where(valid, out, np.int64(-1))
 
 
+def finite_expr(*cols):
+    """Native Spark Column: every input is non-NULL and finite. Spark orders
+    NaN above +inf, so ``abs(c) < inf`` is false for NaN and for +-inf, and
+    NULL for NULL (a NULL ``when`` or ``where`` condition keeps nothing)."""
+    from pyspark.sql import functions as F
+
+    has = None
+    for c in cols:
+        ok = F.abs(c) < F.lit(float("inf"))
+        has = ok if has is None else has & ok
+    return has
+
+
 def tile_xy_expr(lon, lat, z: int):
     """Native Spark Columns (x, y) for ``lonlat_to_tile`` (XYZ rows; JVM,
-    whole-stage codegen), with the same op sequence. NULL lon or lat gives
-    NULL x and y: ``least``/``greatest`` skip NULLs, so the math is guarded
-    as a whole."""
+    whole-stage codegen), with the same op sequence. A NULL, NaN or
+    infinite lon or lat gives NULL x and y: ``least``/``greatest`` skip
+    NULLs and order NaN above every number, so the inputs are tested
+    (``finite_expr``) and the math is guarded as a whole."""
     from pyspark.sql import functions as F
 
     n = 1 << z
-    has = lon.isNotNull() & lat.isNotNull()
+    has = finite_expr(lon, lat)
     lat_c = F.least(F.greatest(lat, F.lit(-MAX_MERC_LAT)), F.lit(MAX_MERC_LAT))
     mx = (lon + 180.0) / 360.0
     s = F.sin(F.radians(lat_c))
@@ -158,8 +172,17 @@ def tile_xy_expr(lon, lat, z: int):
         for m in (mx, my))
 
 
+def pack_cell_expr(res: int, x, y):
+    """Native Spark Column for ``pack_cell``: long (x, y) at ``res``."""
+    from pyspark.sql import functions as F
+
+    return (F.lit(res << _RES_SHIFT).cast("long")
+            + x * F.lit(1 << _X_SHIFT).cast("long") + y)
+
+
 def cell_expr(lon, lat, res: int):
-    """Native Spark Column for ``lonlat_to_cell``; NULL when lon or lat is.
+    """Native Spark Column for ``lonlat_to_cell``; NULL when lon or lat is
+    NULL or not finite.
 
     The cell key of ``geo.enrich_pages`` and the big side of
     candidate-generation joins. Java Math.sin/log may differ from NumPy by
@@ -168,11 +191,7 @@ def cell_expr(lon, lat, res: int):
     (``pip_join.COVER_EPS``) absorbs that, and the enrich parity tests pin
     the key bit for bit against NumPy.
     """
-    from pyspark.sql import functions as F
-
-    x, y = tile_xy_expr(lon, lat, res)
-    return (F.lit(res << _RES_SHIFT).cast("long")
-            + x * F.lit(1 << _X_SHIFT).cast("long") + y)
+    return pack_cell_expr(res, *tile_xy_expr(lon, lat, res))
 
 
 def tile_bounds_mercator(

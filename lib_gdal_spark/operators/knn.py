@@ -1,6 +1,6 @@
 """k-nearest-neighbor joins.
 
-Two strategies, mirroring SURVEY.md §2.3 (reference analog: quadtree radius
+Three functions, mirroring SURVEY.md §2.3 (reference analog: quadtree radius
 growth, ``core/alg/gdalgrid.cpp:281-301,631``):
 
 - ``knn_bruteforce``: exact broadcast nested-loop — the correct baseline when
@@ -11,6 +11,14 @@ growth, ``core/alg/gdalgrid.cpp:281-301,631``):
   results are exact whenever the true k-th neighbor lies within
   ``k * cell_width`` of the query's cell boundary; callers size (res, k)
   from the data density (``cells.cell_radius_km``).
+- ``knn_kring_exact``: ``knn_kring`` with the resolution sized from target
+  density and rings escalated per query until a distance guard proves the
+  result exact.
+
+All three are Catalyst column expressions: no Python worker runs. Queries
+are ``(qid, qlon, qlat)``, targets ``(tid, tlon, tlat)``; the output is
+``(qid, tid, rank, dist_km)``, rank 1..k by (distance, tid). A point with a
+NULL or non-finite coordinate is no query and no neighbour.
 """
 
 from __future__ import annotations
@@ -24,12 +32,21 @@ from pyspark.sql import functions as F
 
 from lib_gdal_spark.functions import cells as C
 
+QID, QLON, QLAT = "qid", "qlon", "qlat"
+TID, TLON, TLAT = "tid", "tlon", "tlat"
+# distances are rounded to µm before ranking, so that 1-ulp libm
+# differences across engines/platforms cannot flip ranks
+ROUND_DECIMALS = 6
+# the exact form escalates rings 1, 4, 16, 64, then falls back to brute force
+MAX_RINGS = 64
+
 
 def _haversine_col(lon1, lat1, lon2, lat2) -> F.Column:
     """Haversine distance (km) as a native Spark expression — stays inside
     whole-stage codegen; must match ``cells.haversine_km`` numerically.
-    NULL in gives NULL out (``least`` skips NULLs, so guard it all)."""
-    has = lon1.isNotNull() & lat1.isNotNull() & lon2.isNotNull() & lat2.isNotNull()
+    A NULL or non-finite input gives NULL out (``least`` skips NULLs and
+    orders NaN last, so the inputs are tested)."""
+    has = C.finite_expr(lon1, lat1, lon2, lat2)
     rl1, rl2 = F.radians(lat1), F.radians(lat2)
     dlat = rl2 - rl1
     dlon = F.radians(lon2) - F.radians(lon1)
@@ -39,217 +56,164 @@ def _haversine_col(lon1, lat1, lon2, lat2) -> F.Column:
     return F.when(has, 2.0 * 6371.0088 * F.asin(F.sqrt(F.least(h, F.lit(1.0)))))
 
 
-def knn_bruteforce(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int,
-    query_cols: tuple[str, str, str] = ("qid", "qlon", "qlat"),
-    target_cols: tuple[str, str, str] = ("tid", "tlon", "tlat"),
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Exact kNN: broadcast the (small) query side, scan targets once.
-
-    Output: (qid, tid, rank, dist_km) — rank 1..k by (distance, tid).
-    Distances are rounded to ``round_decimals`` (µm scale at 6) *before*
-    ranking so that 1-ulp libm differences across engines/platforms cannot
-    flip ranks; residual ties break on tid.
-    """
-    qid, qlon, qlat = query_cols
-    tid, tlon, tlat = target_cols
-    # a point with a NULL coordinate is no query and no neighbour
-    joined = targets.dropna(subset=[tlon, tlat]).crossJoin(
-        F.broadcast(queries.dropna(subset=[qlon, qlat])))
-    d = _haversine_col(F.col(qlon), F.col(qlat), F.col(tlon), F.col(tlat))
-    joined = joined.withColumn("dist_km", F.round(d, round_decimals))
-    w = Window.partitionBy(qid).orderBy(F.col("dist_km").asc(), F.col(tid).asc())
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Rank (query, target) candidates by (distance, tid) and keep 1..k."""
+    d = _haversine_col(F.col(QLON), F.col(QLAT), F.col(TLON), F.col(TLAT))
+    w = Window.partitionBy(QID).orderBy(F.col("dist_km").asc(), F.col(TID).asc())
     return (
-        joined.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("dist_km", F.round(d, ROUND_DECIMALS))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(qid, tid, "rank", "dist_km")
+        .select(QID, TID, "rank", "dist_km")
     )
 
 
-def knn_kring(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int,
-    res: int = 6,
-    rings: int = 1,
-    query_cols: tuple[str, str, str] = ("qid", "qlon", "qlat"),
-    target_cols: tuple[str, str, str] = ("tid", "tlon", "tlat"),
-    round_decimals: int = 6,
-) -> DataFrame:
+def knn_bruteforce(queries: DataFrame, targets: DataFrame, k: int) -> DataFrame:
+    """Exact kNN: broadcast the (small) query side, scan targets once."""
+    return _top_k(
+        targets.where(C.finite_expr(F.col(TLON), F.col(TLAT))).crossJoin(
+            F.broadcast(queries.where(C.finite_expr(F.col(QLON), F.col(QLAT))))),
+        k)
+
+
+def _ring_cells(queries: DataFrame, res: int, rings: int) -> DataFrame:
+    """One (qid, qlon, qlat, cell) row per cell within Chebyshev distance
+    ``rings`` of each query's own cell, each cell once: ``cells.k_ring``
+    without its repeats and its -1 rows. x wraps at the antimeridian, and
+    a ring at least as wide as the grid takes every column once; rows off
+    the top or bottom of the grid are left out."""
+    n = 1 << res
+    cx, cy = C.tile_xy_expr(F.col(QLON), F.col(QLAT), res)
+    # a NULL or non-finite query has NULL (cx, cy) and no ring
+    q = queries.select(QID, QLON, QLAT, cx.alias("cx"), cy.alias("cy")) \
+        .where(F.col("cy").isNotNull())
+    if 2 * rings + 1 >= n:
+        x0, x1 = F.lit(0).cast("long"), F.lit(n - 1).cast("long")
+    else:
+        x0, x1 = F.col("cx") - rings, F.col("cx") + rings
+    y0 = F.greatest(F.col("cy") - rings, F.lit(0))
+    y1 = F.least(F.col("cy") + rings, F.lit(n - 1))
+    return q.select(
+        QID, QLON, QLAT, "cy", F.explode(F.sequence(x0, x1)).alias("x"),
+    ).select(
+        QID, QLON, QLAT, F.pmod(F.col("x"), F.lit(n)).alias("x"),
+        F.explode(F.sequence(y0, y1)).alias("y"),
+    ).select(QID, QLON, QLAT,
+             C.pack_cell_expr(res, F.col("x"), F.col("y")).alias("cell"))
+
+
+def knn_kring(queries: DataFrame, targets: DataFrame, k: int, res: int = 6,
+              rings: int = 1) -> DataFrame:
     """Approximate-exact kNN via k-ring expansion equi-join.
 
-    Each query explodes to its (2*rings+1)^2 ring cells (a pandas UDF over
-    the query side only); targets carry their cell key; an equi-join on cell
-    generates candidates; exact Haversine + window keeps top-k. Hot cells
-    are handled by AQE skew-join splitting; queries are typically the small
-    side and broadcast.
+    Each query explodes to its ring cells (at most (2*rings+1)^2); targets
+    carry their cell key; an equi-join on cell generates candidates; exact
+    Haversine + window keeps top-k. Hot cells are handled by AQE skew-join
+    splitting; queries are typically the small side and broadcast. Query
+    ring and target key come from the same ``cells.tile_xy_expr``.
     """
-    qid, qlon, qlat = query_cols
-    tid, tlon, tlat = target_cols
-
-    def explode_rings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            lon = b[qlon].to_numpy(dtype=np.float64)
-            lat = b[qlat].to_numpy(dtype=np.float64)
-            cell = C.lonlat_to_cell(lon, lat, res)
-            ring = C.k_ring(cell, rings)  # (n, (2r+1)^2)
-            n, m = ring.shape
-            rep = np.repeat(np.arange(n), m)
-            flat = ring.ravel()
-            okm = flat >= 0
-            yield pd.DataFrame(
-                {
-                    qid: b[qid].to_numpy()[rep][okm],
-                    qlon: lon[rep][okm],
-                    qlat: lat[rep][okm],
-                    "cell": flat[okm],
-                }
-            )
-
-    qschema = f"{qid} long, {qlon} double, {qlat} double, cell long"
-    # a query with a NULL coordinate has no neighbours; a NULL target gets
-    # a NULL cell and drops out of the join
-    qcells = queries.select(qid, qlon, qlat).dropna(subset=[qlon, qlat]) \
-        .mapInPandas(explode_rings, schema=qschema)
-
-    # Big side stays JVM-native: the cell key is candidate-generation only
-    # (a 1-ulp libm difference shifts an edge point one cell, still inside
-    # the ring), so no Python runs over the target table at all.
+    qcells = _ring_cells(queries, res, rings)
     tcells = targets.select(
-        tid, tlon, tlat,
-        C.cell_expr(F.col(tlon), F.col(tlat), res).alias("cell"),
+        TID, TLON, TLAT,
+        C.cell_expr(F.col(TLON), F.col(TLAT), res).alias("cell"),
     )
+    return _top_k(tcells.join(F.broadcast(qcells), "cell", "inner"), k)
 
-    cand = tcells.join(F.broadcast(qcells), "cell", "inner")
-    d = _haversine_col(F.col(qlon), F.col(qlat), F.col(tlon), F.col(tlat))
-    cand = cand.withColumn("dist_km", F.round(d, round_decimals))
-    w = Window.partitionBy(qid).orderBy(F.col("dist_km").asc(), F.col(tid).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid, tid, "rank", "dist_km")
+
+def _with_ring_guard_km(queries: DataFrame, res: int, rings: int) -> DataFrame:
+    """``queries`` plus ``guard_km``: the EXACT distance from the query point
+    to the boundary of the lon/lat box its ring covers. Meridian edges are
+    geodesics; for parallel edges the same-longitude point minimizes
+    haversine. The grid's top or bottom row, and a ring spanning every
+    column, bound nothing (+inf when nothing does). Staged selects keep
+    each edge latitude one expression in the plan."""
+    n = 1 << res
+    cx, cy = C.tile_xy_expr(F.col(QLON), F.col(QLAT), res)
+    lon, lat = F.col(QLON), F.col(QLAT)
+
+    def clip01(v):
+        return F.least(F.greatest(v, F.lit(0.0)), F.lit(1.0))
+
+    def edge_lat(y):
+        return F.degrees(F.atan(F.sinh(F.lit(np.pi) * (1 - 2 * y))))
+
+    q = queries.select("*", cx.alias("_cx"), cy.alias("_cy")).select(
+        "*",
+        clip01((F.col("_cy") - rings) / n).alias("_y0"),
+        clip01((F.col("_cy") + rings + 1) / n).alias("_y1"),
+    ).select(
+        "*",
+        edge_lat(F.col("_y0")).alias("_lat_top"),
+        edge_lat(F.col("_y1")).alias("_lat_bot"),
     )
+    top, bot = F.col("_lat_top"), F.col("_lat_bot")
+    edges = [
+        F.when(F.col("_y0") != 0.0, _haversine_col(lon, lat, lon, top)),
+        F.when(F.col("_y1") != 1.0, _haversine_col(lon, lat, lon, bot)),
+    ]
+    if 2 * rings + 1 < n:  # meridian edges (clamped-latitude nearest point)
+        cl = F.least(F.greatest(lat, bot), top)
+        for x in (F.col("_cx") - rings, F.col("_cx") + rings + 1):
+            edges.append(_haversine_col(lon, lat, x / n * 360.0 - 180.0, cl))
+    return q.select(*queries.columns,
+                    F.least(F.lit(float("inf")), *edges).alias("guard_km"))
 
 
-def knn_kring_exact(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int,
-    res: int | None = None,
-    query_cols: tuple[str, str, str] = ("qid", "qlon", "qlat"),
-    target_cols: tuple[str, str, str] = ("tid", "tlon", "tlat"),
-    round_decimals: int = 6,
-    max_rings: int = 64,
-) -> DataFrame:
+def knn_kring_exact(queries: DataFrame, targets: DataFrame, k: int,
+                    res: int | None = None) -> DataFrame:
     """kNN with AUTO-sized (res, rings) and a per-query exactness proof.
 
     Resolution: when None, sized from target density so the expected cell
     population is ~2k (the quadtree-growth heuristic of
     ``gdalgrid.cpp:281-301``). Rings escalate per query — after each pass
-    a query's result is PROVABLY exact when its k-th distance is within
-    the Chebyshev-safe radius ``rings * min-cell-width`` at the query's
-    latitude; unsettled queries re-run with doubled rings. The escalation
+    a query's result is PROVABLY exact when it has k neighbours and its
+    k-th distance is below the distance to the edge of its ring's box;
+    unsettled queries re-run with four times the rings. The escalation
     set shrinks geometrically, and only the (small) query side iterates —
     the target table is re-joined only for unsettled queries.
     """
-    qid, qlon, qlat = query_cols
-
     if res is None:
-        stats = targets.agg(
+        stats = targets.where(C.finite_expr(F.col(TLON), F.col(TLAT))).agg(
             F.count(F.lit(1)).alias("n"),
-            F.min(target_cols[1]).alias("ln0"),
-            F.max(target_cols[1]).alias("ln1"),
-            F.min(target_cols[2]).alias("lt0"),
-            F.max(target_cols[2]).alias("lt1"),
+            F.min(TLON).alias("ln0"),
+            F.max(TLON).alias("ln1"),
+            F.min(TLAT).alias("lt0"),
+            F.max(TLAT).alias("lt1"),
         ).first()
-        n = max(int(stats["n"]), 1)
-        area_deg2 = max(
-            (stats["ln1"] - stats["ln0"]) * (stats["lt1"] - stats["lt0"]),
-            1e-9,
-        )
+        n = int(stats["n"])
+        area_deg2 = ((stats["ln1"] - stats["ln0"]) * (stats["lt1"] - stats["lt0"])
+                     if n else 0.0)
         # cell edge (deg) so that density * edge^2 ~ 2k
-        edge_deg = float(np.sqrt(2.0 * k * area_deg2 / n))
+        edge_deg = float(np.sqrt(2.0 * k * max(area_deg2, 1e-9) / max(n, 1)))
         res = int(np.clip(np.floor(np.log2(360.0 / max(edge_deg, 1e-9))),
                           2, 20))
 
-    remaining = queries.select(qid, qlon, qlat).dropna(
-        subset=[qlon, qlat]).localCheckpoint()
+    remaining = queries.select(QID, QLON, QLAT).where(
+        C.finite_expr(F.col(QLON), F.col(QLAT))).localCheckpoint()
     settled = []
     rings = 1
-    while rings <= max_rings:
-        got = knn_kring(remaining, targets, k, res=res, rings=rings,
-                        query_cols=query_cols, target_cols=target_cols,
-                        round_decimals=round_decimals).localCheckpoint()
-        # exactness bound: the EXACT distance from the query point to the
-        # boundary of the ring-covered lon/lat box (meridian edges are
-        # geodesics; for parallel edges the same-longitude point minimizes
-        # haversine) — computed on the small query side only
-        per_q = got.groupBy(qid).agg(
+    while rings <= MAX_RINGS:
+        got = knn_kring(remaining, targets, k, res=res,
+                        rings=rings).localCheckpoint()
+        per_q = got.groupBy(QID).agg(
             F.max("dist_km").alias("kth"),
             F.count(F.lit(1)).alias("got_n"),
         )
-
-        def guard_udf(batches):
-            n_cells = 1 << res
-            for b in batches:
-                lon = b[qlon].to_numpy(np.float64)
-                lat = b[qlat].to_numpy(np.float64)
-                cell = C.lonlat_to_cell(lon, lat, res)
-                _, cx, cy = C.unpack_cell(cell)
-                x0 = (cx - rings) / n_cells
-                x1 = (cx + rings + 1) / n_cells
-                y0 = np.clip((cy - rings) / n_cells, 0.0, 1.0)
-                y1 = np.clip((cy + rings + 1) / n_cells, 0.0, 1.0)
-                lon0 = x0 * 360.0 - 180.0
-                lon1 = x1 * 360.0 - 180.0
-                lat1v = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * y0))))
-                lat0v = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * y1))))
-                d = np.full(len(b), np.inf)
-                # parallel edges (same-longitude nearest point)
-                at_top = np.isclose(y0, 0.0)
-                at_bot = np.isclose(y1, 1.0)
-                d = np.minimum(
-                    d, np.where(at_top, np.inf,
-                                C.haversine_km(lon, lat, lon, lat1v)))
-                d = np.minimum(
-                    d, np.where(at_bot, np.inf,
-                                C.haversine_km(lon, lat, lon, lat0v)))
-                # meridian edges (clamped-latitude nearest point); skip when
-                # the ring wraps the full globe in x
-                full_wrap = (x1 - x0) >= 1.0
-                cl = np.clip(lat, lat0v, lat1v)
-                d = np.minimum(
-                    d, np.where(full_wrap, np.inf,
-                                C.haversine_km(lon, lat, lon0, cl)))
-                d = np.minimum(
-                    d, np.where(full_wrap, np.inf,
-                                C.haversine_km(lon, lat, lon1, cl)))
-                yield pd.DataFrame({qid: b[qid], "guard_km": d})
-
-        guards = remaining.mapInPandas(
-            guard_udf, schema=f"{qid} long, guard_km double"
-        )
-        qmeta = remaining.join(per_q, qid, "left").join(guards, qid)
+        qmeta = _with_ring_guard_km(remaining.join(per_q, QID, "left"),
+                                    res, rings)
         ok = (F.col("got_n") == k) & (F.col("kth") < F.col("guard_km"))
         settled.append(
-            got.join(qmeta.where(ok).select(qid), qid, "leftsemi")
+            got.join(qmeta.where(ok).select(QID), QID, "leftsemi")
         )
         remaining = qmeta.where(~F.coalesce(ok, F.lit(False))).select(
-            qid, qlon, qlat
+            QID, QLON, QLAT
         ).localCheckpoint()
         if remaining.isEmpty():
             break
         rings *= 4
     else:
         # fall back to exact brute force for anything still unsettled
-        settled.append(
-            knn_bruteforce(remaining, targets, k, query_cols=query_cols,
-                           target_cols=target_cols,
-                           round_decimals=round_decimals)
-        )
+        settled.append(knn_bruteforce(remaining, targets, k))
     out = settled[0]
     for s in settled[1:]:
         out = out.unionByName(s)

@@ -110,15 +110,19 @@ def test_with_tile_matches_oracle(enriched):
 
 
 def test_with_tile_null_coords_get_null_tile(spark):
-    """greatest/least skip NULLs: without a guard a NULL coordinate would
-    land in tile (0, 2^z-1)."""
+    """greatest/least skip NULLs and order NaN above every number: without
+    a guard a NULL coordinate would land in tile (0, 2^z-1), lon NaN in
+    x 0, lat NaN in row 0 and lon +inf in x 2^z-1."""
+    nan, inf = float("nan"), float("inf")
     pts = spark.createDataFrame(
-        [(1, None, None), (2, 2.35, None), (3, None, 48.85), (4, 2.35, 48.85)],
+        [(1, None, None), (2, 2.35, None), (3, None, 48.85), (4, 2.35, 48.85),
+         (5, nan, 48.85), (6, 2.35, nan), (7, inf, 48.85), (8, -inf, 48.85),
+         (9, 2.35, inf), (10, 2.35, -inf)],
         "pid long, lon double, lat double")
     for tms in (False, True):
         got = {r["pid"]: (r["tx"], r["ty"])
                for r in geo.with_tile(pts, z=8, tms=tms).collect()}
-        assert got[1] == got[2] == got[3] == (None, None)
+        assert all(got[p] == (None, None) for p in (1, 2, 3, 5, 6, 7, 8, 9, 10))
         ex, ey = C.lonlat_to_tile(np.array([2.35]), np.array([48.85]), 8, tms=tms)
         assert got[4] == (ex[0], ey[0])
 
@@ -294,27 +298,96 @@ def test_enrich_and_verify_plans_run_no_python(spark):
 
 
 def test_cell_expr_null_coordinates_give_null(spark):
-    """greatest/least skip NULLs: without a guard NULL coordinates became
-    cell (12, 0, 4095)."""
-    pts = spark.createDataFrame([(None, None), (2.35, None), (None, 48.85)],
-                                "lon double, lat double")
+    """greatest/least skip NULLs and order NaN last: without a guard NULL
+    coordinates became cell (12, 0, 4095), and NaN or +-inf ones real
+    cells too."""
+    nan, inf = float("nan"), float("inf")
+    bad = [(None, None), (2.35, None), (None, 48.85), (nan, 48.85),
+           (2.35, nan), (nan, nan), (inf, 48.85), (-inf, 48.85), (2.35, inf),
+           (2.35, -inf)]
+    pts = spark.createDataFrame(bad + [(2.35, 48.85)], "lon double, lat double")
     got = pts.select(C.cell_expr(F.col("lon"), F.col("lat"), 12).alias("c"))
-    assert [r["c"] for r in got.collect()] == [None, None, None]
+    assert [r["c"] for r in got.collect()] == [None] * len(bad) + [
+        C.lonlat_to_cell(np.array([2.35]), np.array([48.85]), 12)[0]]
 
 
 def test_knn_skips_null_coordinate_targets(spark):
-    """A NULL target is no neighbour: least() used to turn its NULL
-    distance into pi * R (20,015 km) and rank it."""
+    """A NULL, NaN or infinite target is no neighbour and such a query has
+    none: least() used to turn a NULL distance into pi * R (20,015 km) and
+    rank it, and a NaN target got a real cell and that distance too."""
+    nan, inf = float("nan"), float("inf")
     targets = spark.createDataFrame(
-        [(1, 2.35, 48.85), (2, 2.36, 48.86), (3, None, None)],
+        [(1, 2.35, 48.85), (2, 2.36, 48.86), (3, None, None), (4, nan, nan),
+         (5, nan, 48.85), (6, inf, 48.85), (7, 2.35, -inf)],
         "tid long, tlon double, tlat double")
-    queries = spark.createDataFrame([(1, 2.35, 48.853)],
-                                    "qid long, qlon double, qlat double")
-    # res 1: one ring covers the globe, so the NULL target reaches ranking
+    queries = spark.createDataFrame(
+        [(1, 2.35, 48.853), (2, nan, 48.85), (3, 2.35, inf), (4, None, 1.0)],
+        "qid long, qlon double, qlat double")
+    # res 1: one ring covers the globe, so a bad target reaches ranking
     for got in (knn.knn_kring(queries, targets, k=3, res=1, rings=1),
-                knn.knn_bruteforce(queries, targets, k=3)):
-        assert [(r["tid"], r["rank"]) for r in got.orderBy("rank").collect()] \
-            == [(1, 1), (2, 2)]
+                knn.knn_bruteforce(queries, targets, k=3),
+                knn.knn_kring_exact(queries, targets, k=3),
+                knn.knn_kring_exact(queries, targets, k=3, res=1)):
+        assert [(r["qid"], r["tid"], r["rank"])
+                for r in got.orderBy("qid", "rank").collect()] \
+            == [(1, 1, 1), (1, 2, 2)]
+    # no usable target: the auto-sized form has no extent to size from
+    bad = targets.where(F.col("tid") >= 3)
+    assert knn.knn_kring_exact(queries, bad, k=3).count() == 0
+
+
+def test_knn_kring_exact_no_duplicate_neighbours(spark):
+    """Rings wider than the grid (2*16+1 columns of 16 at res 4) used to
+    repeat columns, so one target came back at ranks 1, 2 and 3."""
+    targets = spark.createDataFrame([("a", 10.6, 20.6), ("b", -150.0, -60.0)],
+                                    "tid string, tlon double, tlat double")
+    queries = spark.createDataFrame([(1, 10.5, 20.5)],
+                                    "qid long, qlon double, qlat double")
+    want = [(r["tid"], r["rank"], r["dist_km"]) for r in
+            knn.knn_bruteforce(queries, targets, k=3).orderBy("rank").collect()]
+    assert [w[:2] for w in want] == [("a", 1), ("b", 2)]
+    got = knn.knn_kring_exact(queries, targets, k=3, res=4)
+    assert [(r["tid"], r["rank"], r["dist_km"])
+            for r in got.orderBy("rank").collect()] == want
+
+
+@pytest.mark.parametrize("res", [1, 2, 3, 5])
+def test_ring_cells_match_k_ring(spark, res):
+    """The native ring explode gives each query the de-duplicated
+    ``cells.k_ring`` cells, at the grid's edge columns and rows and with
+    rings as wide as the grid or wider."""
+    n = 1 << res
+    xs = sorted({0, 1, n // 2, n - 1})
+    ys = sorted({0, 1, n // 2, n - 1})
+    cells = np.array([C.pack_cell(res, np.int64(x), np.int64(y))
+                      for x in xs for y in ys], dtype=np.int64)
+    lon, lat = C.cell_center(cells)
+    q = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
+        "qid long, qlon double, qlat double")
+    for rings in (1, 2, n // 2, n):
+        got: dict[int, list[int]] = {}
+        for r in knn._ring_cells(q, res, rings).collect():
+            got.setdefault(r["qid"], []).append(r["cell"])
+        ring = C.k_ring(cells, rings)
+        for i in range(len(cells)):
+            want = set(ring[i][ring[i] >= 0].tolist())
+            assert sorted(got[i]) == sorted(want), (res, rings, i)
+
+
+def test_knn_plans_run_no_python(spark):
+    """The ring explode and the exactness guard are Catalyst expressions:
+    no Python worker in the kNN plans."""
+    targets = spark.createDataFrame(
+        [(1, 2.35, 48.85), (2, 2.36, 48.86), (3, -74.0, 40.7)],
+        "tid long, tlon double, tlat double")
+    queries = spark.createDataFrame([(1, 2.35, 48.853), (2, 139.7, 35.7)],
+                                    "qid long, qlon double, qlat double")
+    for df in (knn.knn_kring(queries, targets, k=2, res=6, rings=1),
+               knn.knn_kring_exact(queries, targets, k=2),
+               knn.knn_bruteforce(queries, targets, k=2)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in PYTHON_EXEC_NODES if n in plan], plan
 
 
 def test_cell_keys_and_distance_null_coordinates_give_null(spark):
