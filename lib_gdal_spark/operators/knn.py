@@ -166,21 +166,22 @@ def knn_kring_exact(queries: DataFrame, targets: DataFrame, k: int,
     Resolution: when None, sized from target density so the expected cell
     population is ~2k (the quadtree-growth heuristic of
     ``gdalgrid.cpp:281-301``). Rings escalate per query — after each pass
-    a query's result is PROVABLY exact when it has k neighbours and its
-    k-th distance is below the distance to the edge of its ring's box;
-    unsettled queries re-run with four times the rings. The escalation
-    set shrinks geometrically, and only the (small) query side iterates —
-    the target table is re-joined only for unsettled queries.
+    a query's result is PROVABLY exact when it holds every finite target
+    (fewer than k in the table), or k neighbours whose k-th distance is
+    below the distance to the edge of its ring's box; unsettled queries
+    re-run with four times the rings. The escalation set shrinks
+    geometrically, and only the (small) query side iterates — the target
+    table is re-joined only for unsettled queries.
     """
+    stats = targets.where(C.finite_expr(F.col(TLON), F.col(TLAT))).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(TLON).alias("ln0"),
+        F.max(TLON).alias("ln1"),
+        F.min(TLAT).alias("lt0"),
+        F.max(TLAT).alias("lt1"),
+    ).first()
+    n = int(stats["n"])
     if res is None:
-        stats = targets.where(C.finite_expr(F.col(TLON), F.col(TLAT))).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(TLON).alias("ln0"),
-            F.max(TLON).alias("ln1"),
-            F.min(TLAT).alias("lt0"),
-            F.max(TLAT).alias("lt1"),
-        ).first()
-        n = int(stats["n"])
         area_deg2 = ((stats["ln1"] - stats["ln0"]) * (stats["lt1"] - stats["lt0"])
                      if n else 0.0)
         # cell edge (deg) so that density * edge^2 ~ 2k
@@ -201,7 +202,10 @@ def knn_kring_exact(queries: DataFrame, targets: DataFrame, k: int,
         )
         qmeta = _with_ring_guard_km(remaining.join(per_q, QID, "left"),
                                     res, rings)
-        ok = (F.col("got_n") == k) & (F.col("kth") < F.col("guard_km"))
+        # exact once it holds min(k, n) neighbours: all n targets, or k
+        # whose k-th is nearer than any target outside the searched box
+        ok = (F.coalesce(F.col("got_n"), F.lit(0)) == min(k, n)) & (
+            F.lit(n <= k) | (F.col("kth") < F.col("guard_km")))
         settled.append(
             got.join(qmeta.where(ok).select(QID), QID, "leftsemi")
         )

@@ -12,19 +12,21 @@ Schemas follow the reference drivers:
   ``(id, zoom_level, tile_column, tile_row, tile_data)``; rows are
   top-down (NOT flipped).
 
-Tile payloads are real 8-bit grayscale PNGs written by a dependency-free
-encoder (zlib + the public PNG spec) so any standard client can open the
-files. The CPU-heavy part — PNG encoding — runs DISTRIBUTED in an Arrow
-batch map; only the compressed blobs funnel to the single SQLite writer,
-which is inherent to both formats (one .sqlite file). ``max_bytes``
-guards the driver-side funnel; beyond it, shard by zoom into multiple
-files (the standard practice for planet-scale tile sets).
+Tile payloads are real PNGs (8-bit gray from a dependency-free zlib
+encoder, multi-band via sources/png.py) or baseline JPEGs, encoded
+DISTRIBUTED in an Arrow batch map. Every file is written by the executor
+task that owns its tiles (``_write_shards``): no tile bytes reach the
+driver, which reads a small manifest and renames each finished temp file
+into place. ``path``/``out_dir`` must therefore be on a filesystem the
+driver and the executors share, as it is under ``local[N]``.
 """
 
 from __future__ import annotations
 
+import os
 import sqlite3
 import struct
+import uuid
 import zlib
 from collections.abc import Iterator
 
@@ -32,6 +34,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lib_gdal_spark.sources.jpeg import write_jpeg
+from lib_gdal_spark.sources.png import write_png
 
 ORIGIN_SHIFT = 20037508.342789244  # mbtilesdataset.cpp:61
 
@@ -95,88 +100,98 @@ def _encoded_tiles(tiles: DataFrame, raster_id: str,
                    band: int | tuple, fmt: str = "png") -> DataFrame:
     """Distributed tile encode -> (zoom, tile_x, tile_y, png binary).
 
-    ``band`` an int -> 8-bit grayscale tiles; a tuple of 2/3/4 band
-    numbers -> gray+alpha / RGB / RGBA tiles via the full PNG encoder
-    (sources/png.py), bands regrouped per tile key first (a keys+pixels
-    shuffle bounded by the tile table itself). ``fmt`` = 'png' or 'jpg'
-    (baseline JPEG via sources/jpeg.py — the common choice for imagery
-    MBTiles; gray or exactly 3 bands, JPEG has no alpha channel)."""
+    ``band`` an int -> 8-bit grayscale tiles; a tuple of band numbers ->
+    gray / gray+alpha / RGB / RGBA tiles via sources/png.py, regrouped per
+    tile key when more than one distinct band is read. ``fmt`` = 'png' or
+    'jpg' (baseline JPEG via sources/jpeg.py; gray or exactly 3 bands)."""
     if fmt not in ("png", "jpg"):
         raise ValueError("fmt must be 'png' or 'jpg'")
-    if isinstance(band, int):
-        src = tiles.where(
-            (F.col("raster_id") == raster_id) & (F.col("band") == band)
-        ).select("zoom", "tile_x", "tile_y", "tile_w", "tile_h", "pixels")
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                rows = []
-                for _, r in b.iterrows():
-                    arr = np.asarray(r["pixels"], np.float64).reshape(
-                        int(r["tile_h"]), int(r["tile_w"]))
-                    a8 = np.clip(arr, 0, 255)
-                    if fmt == "jpg":
-                        from lib_gdal_spark.sources.jpeg import write_jpeg
-                        blob = write_jpeg(a8.astype(np.uint8))
-                    else:
-                        blob = encode_png_gray(a8)
-                    rows.append((int(r["zoom"]), int(r["tile_x"]),
-                                 int(r["tile_y"]), blob))
-                yield pd.DataFrame(
-                    rows, columns=["zoom", "tile_x", "tile_y", "png"])
-
-        return src.mapInPandas(
-            work, schema="zoom int, tile_x int, tile_y int, png binary")
-
-    from lib_gdal_spark.sources.png import write_png
-
-    bands = tuple(band)
-    if fmt == "jpg" and len(bands) != 3:
+    gray = isinstance(band, int)
+    bands = (band,) if gray else tuple(band)
+    if fmt == "jpg" and not gray and len(bands) != 3:
         raise ValueError("fmt='jpg' supports grayscale or exactly 3 "
                          "bands (JPEG has no alpha channel)")
-    grouped = tiles.where(
-        (F.col("raster_id") == raster_id)
-        & F.col("band").isin(list(bands))
-    ).groupBy("zoom", "tile_x", "tile_y").agg(
-        F.collect_list(F.struct("band", "tile_w", "tile_h", "pixels"))
-        .alias("bs"))
+    read = sorted(set(bands))
+    src = tiles.where(
+        (F.col("raster_id") == raster_id) & F.col("band").isin(read))
+    planes = F.struct("band", "tile_w", "tile_h", "pixels")
+    if len(read) > 1:
+        src = src.groupBy("zoom", "tile_x", "tile_y").agg(
+            F.collect_list(planes).alias("bs"))
+    else:
+        src = src.select("zoom", "tile_x", "tile_y",
+                         F.array(planes).alias("bs"))
 
-    def work_rgb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(arrs: list[np.ndarray]) -> bytes:
+        if fmt == "jpg":
+            return write_jpeg(arrs[0] if gray else np.stack(arrs, axis=2))
+        return encode_png_gray(arrs[0]) if gray else write_png(arrs)
+
+    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = []
-            for _, r in b.iterrows():
-                per = {int(x["band"]): np.asarray(x["pixels"], np.float64)
-                       .reshape(int(x["tile_h"]), int(x["tile_w"]))
-                       for x in r["bs"]}
-                arrs = [np.clip(per[bi], 0, 255).astype(np.uint8)
-                        for bi in bands]
-                if fmt == "jpg":
-                    from lib_gdal_spark.sources.jpeg import write_jpeg
-                    blob = write_jpeg(np.stack(arrs, axis=2))
-                else:
-                    blob = write_png(arrs)
-                rows.append((int(r["zoom"]), int(r["tile_x"]),
-                             int(r["tile_y"]), blob))
-            yield pd.DataFrame(
-                rows, columns=["zoom", "tile_x", "tile_y", "png"])
+            blobs = []
+            for bs in b["bs"]:
+                per = {int(p["band"]): np.clip(
+                    np.asarray(p["pixels"], np.float64).reshape(
+                        int(p["tile_h"]), int(p["tile_w"])), 0, 255)
+                    .astype(np.uint8) for p in bs}
+                blobs.append(encode([per[i] for i in bands]))
+            yield pd.DataFrame({"zoom": b["zoom"], "tile_x": b["tile_x"],
+                                "tile_y": b["tile_y"], "png": blobs})
 
-    return grouped.mapInPandas(
-        work_rgb, schema="zoom int, tile_x int, tile_y int, png binary")
+    return src.mapInPandas(
+        work, schema="zoom int, tile_x int, tile_y int, png binary")
 
 
-def _guard_payload_size(enc: DataFrame, max_bytes: int, label: str) -> int:
-    """Aggregate total encoded-tile bytes ON THE CLUSTER and raise BEFORE
-    any row reaches the driver. This is the 512 MB funnel guard — it must
-    precede the collect, otherwise it can't protect the driver (round-3
-    verdict 'What's wrong #1'). Returns the total for logging."""
-    agg = enc.agg(F.coalesce(F.sum(F.length("png")), F.lit(0))).first()
-    total = int(agg[0])
-    if total > max_bytes:
-        raise ValueError(
-            f"{label} payload {total} B exceeds max_bytes={max_bytes}; "
-            "shard by zoom into multiple files for larger sets "
-            "(write_mbtiles_sharded) or use the distributed TMS/MVT sinks")
-    return total
+_MANIFEST = "file string, tiles long, bytes long"
+
+
+def _write_shards(enc: DataFrame, out_dir: str, keys: list | None,
+                  shard_file, write_file, max_bytes: int,
+                  limit: str) -> pd.DataFrame:
+    """The one tile-store writer; returns the (file, tiles, bytes) manifest.
+
+    The executor task owning a group of ``enc`` by ``keys`` (``None``: one
+    file, even for no tiles) sums its bytes and, within ``max_bytes``,
+    writes ``write_file(tmp, key, records)`` to a fresh temp file next to
+    ``out_dir/shard_file(key)``. If any shard is over, the driver drops
+    the temp files and raises ValueError naming ``limit``; else it renames
+    each temp file over its target."""
+    token = uuid.uuid4().hex
+
+    def tmp_of(fname: str) -> str:
+        return os.path.join(out_dir, f".{fname}.{token}.tmp")
+
+    def write(key, pdf):
+        fname = shard_file(key)
+        total = int(pdf["png"].map(len).sum())
+        if total <= max_bytes:
+            tmp = tmp_of(fname)
+            if os.path.exists(tmp):  # a retried task starts afresh
+                os.remove(tmp)
+            write_file(tmp, key, pdf.to_dict("records"))
+        return pd.DataFrame({"file": [fname], "tiles": [len(pdf)],
+                             "bytes": [total]})
+
+    try:
+        rows = enc.groupBy(*(keys or [F.lit(0).alias("file")])) \
+            .applyInPandas(write, _MANIFEST).collect()
+        man = pd.DataFrame(rows, columns=["file", "tiles", "bytes"])
+        if man.empty and keys is None:
+            man = write((0,), pd.DataFrame({"png": []}))
+        over = man[man["bytes"] > max_bytes]
+        if len(over):
+            raise ValueError(
+                f"{', '.join(over['file'])}: {over['bytes'].max()} B > "
+                f"{limit}; shard (write_mbtiles_sharded) or use TMS/MVT")
+    except BaseException:
+        for f in os.listdir(out_dir):
+            if f".{token}.tmp" in f:
+                os.remove(os.path.join(out_dir, f))
+        raise
+    for f in man["file"]:
+        os.replace(tmp_of(f), os.path.join(out_dir, f))
+    return man
 
 
 def write_mbtiles(
@@ -195,20 +210,17 @@ def write_mbtiles(
     ``fmt`` = 'png' (lossless, default) or 'jpg' (baseline JPEG tiles —
     the common imagery choice; recorded in the metadata table).
 
-    The encoded payload size is aggregated cluster-side and checked
-    against ``max_bytes`` BEFORE anything is collected; the collect that
-    feeds the single SQLite writer is therefore bounded by ``max_bytes``.
+    The one-shard case of ``_write_shards``: nothing is written past
+    ``max_bytes`` (ValueError), and an existing ``path`` is replaced whole.
     """
     enc = _encoded_tiles(tiles, raster_id, band, fmt=fmt)
-    enc.persist()
-    try:
-        _guard_payload_size(enc, max_bytes, "MBTiles")
-        rows = enc.collect()
-    finally:
-        enc.unpersist()
-    # TMS row flip happens in the shared writer (mbtilesdataset.cpp:1136)
-    return _write_mbtiles_file(
-        path, (r.asDict() for r in rows), fmt, name or raster_id)
+    out_dir, fname = os.path.split(os.path.abspath(path))
+    man = _write_shards(
+        enc, out_dir, None, lambda key: fname,
+        lambda tmp, key, rows: _write_mbtiles_file(
+            tmp, rows, fmt, name or raster_id),
+        max_bytes, f"max_bytes={max_bytes}")
+    return int(man["tiles"].sum())
 
 
 def write_gpkg_tiles(
@@ -221,16 +233,21 @@ def write_gpkg_tiles(
     max_bytes: int = 512 * 1024 * 1024,
 ) -> int:
     """Tile table -> a GeoPackage with one tile-pyramid table; returns
-    tile count. Web-mercator (EPSG:3857) tile matrix set.
-
-    Size-guarded cluster-side before the collect (see write_mbtiles)."""
+    tile count. Web-mercator (EPSG:3857) tile matrix set; written,
+    size-guarded and replaced like write_mbtiles."""
     enc = _encoded_tiles(tiles, raster_id, band)
-    enc.persist()
-    try:
-        _guard_payload_size(enc, max_bytes, "GPKG")
-        rows = enc.collect()
-    finally:
-        enc.unpersist()
+    out_dir, fname = os.path.split(os.path.abspath(path))
+    man = _write_shards(
+        enc, out_dir, None, lambda key: fname,
+        lambda tmp, key, rows: _write_gpkg_file(
+            tmp, rows, raster_id, table_name, tile_px),
+        max_bytes, f"max_bytes={max_bytes}")
+    return int(man["tiles"].sum())
+
+
+def _write_gpkg_file(path: str, rows: list, raster_id: str,
+                     table_name: str, tile_px: int) -> None:
+    """One GeoPackage tile file from (zoom, tile_x, tile_y, png) records."""
     zooms = sorted({r["zoom"] for r in rows}) or [0]
     con = sqlite3.connect(path)
     try:
@@ -300,14 +317,11 @@ def write_gpkg_tiles(
         con.commit()
     finally:
         con.close()
-    return len(rows)
 
 
-def _write_mbtiles_file(path: str, rows, fmt: str, name: str) -> int:
-    """Shared single-file MBTiles writer used by both the driver-side sink
-    and the per-shard executor tasks. ``rows`` yields dicts/records with
-    zoom, tile_x, tile_y, png (TMS flip applied here)."""
-    rows = list(rows)
+def _write_mbtiles_file(path: str, rows: list, fmt: str, name: str) -> None:
+    """One MBTiles file from (zoom, tile_x, tile_y, png) records (TMS
+    flip applied here); the write task of ``_write_shards`` calls it."""
     zooms = [int(r["zoom"]) for r in rows] or [0]
     con = sqlite3.connect(path)
     try:
@@ -335,7 +349,6 @@ def _write_mbtiles_file(path: str, rows, fmt: str, name: str) -> int:
         con.commit()
     finally:
         con.close()
-    return len(rows)
 
 
 def write_mbtiles_sharded(
@@ -351,42 +364,30 @@ def write_mbtiles_sharded(
     """Distributed multi-file MBTiles sink: one .mbtiles per (zoom[, x-stripe]).
 
     This is the scale path the single-file sink's guard message points to.
-    Each shard is written BY THE EXECUTOR TASK that owns its tile group —
-    no bytes ever funnel through the driver, so there is no driver-side
-    size cap at all; ``max_shard_bytes`` bounds a single task's shard
-    instead (raise ``stripes`` to split hot zooms across more files/tasks).
+    Each shard is written by the executor task that owns its tile group
+    (``_write_shards``); ``max_shard_bytes`` bounds one shard, and if any
+    is over it no file is written (ValueError; raise ``stripes`` to split
+    hot zooms across more files/tasks).
 
     Files are ``{out_dir}/z{z}.mbtiles`` (stripes=1) or
     ``{out_dir}/z{z}_s{i}.mbtiles``; each is a fully standard MBTiles file
     covering its zoom slice (the reference reads per-zoom shards the same
-    way any client does — one dataset per file). Returns a small DataFrame
-    (file, tiles, bytes) — the shard manifest.
+    way any client does — one dataset per file). Writes at call time and
+    returns the shard manifest (file, tiles, bytes) as a local DataFrame.
     """
-    import os
-
     os.makedirs(out_dir, exist_ok=True)
     enc = _encoded_tiles(tiles, raster_id, band, fmt=fmt)
     stripes = max(1, int(stripes))
-    keyed = enc.withColumn(
-        "stripe", F.pmod(F.col("tile_x"), F.lit(stripes)).cast("int"))
-    title = name or raster_id
-
-    def write_shard(key, pdf):
-        z, s = int(key[0]), int(key[1])
-        total = int(pdf["png"].map(len).sum())
-        if total > max_shard_bytes:
-            raise ValueError(
-                f"shard z={z} stripe={s} is {total} B > "
-                f"max_shard_bytes={max_shard_bytes}; raise stripes=")
-        fname = (f"z{z}.mbtiles" if stripes == 1 else f"z{z}_s{s}.mbtiles")
-        path = os.path.join(out_dir, fname)
-        n = _write_mbtiles_file(
-            path, pdf.to_dict("records"), fmt, f"{title}-z{z}")
-        return pd.DataFrame({"file": [fname], "tiles": [n],
-                             "bytes": [total]})
-
-    return keyed.groupBy("zoom", "stripe").applyInPandas(
-        write_shard, schema="file string, tiles long, bytes long")
+    man = _write_shards(
+        enc, out_dir,
+        [F.col("zoom"),
+         F.pmod(F.col("tile_x"), F.lit(stripes)).cast("int").alias("stripe")],
+        lambda key: (f"z{key[0]}.mbtiles" if stripes == 1
+                     else f"z{key[0]}_s{key[1]}.mbtiles"),
+        lambda tmp, key, rows: _write_mbtiles_file(
+            tmp, rows, fmt, f"{name or raster_id}-z{key[0]}"),
+        max_shard_bytes, f"max_shard_bytes={max_shard_bytes}")
+    return tiles.sparkSession.createDataFrame(man, _MANIFEST)
 
 
 def read_mbtiles(spark, path: str) -> DataFrame:
@@ -420,8 +421,6 @@ def write_tms_directory(
     tiles: DataFrame, root: str, raster_id: str, band: int | tuple = 1
 ) -> int:
     """Tile table -> {root}/{z}/{x}/{y}.png files (TMS row flip)."""
-    import os
-
     enc = _encoded_tiles(tiles, raster_id, band)
 
     def write_part(rows) -> Iterator[pd.DataFrame]:

@@ -336,6 +336,37 @@ def test_knn_skips_null_coordinate_targets(spark):
     assert knn.knn_kring_exact(queries, bad, k=3).count() == 0
 
 
+def test_knn_kring_exact_settles_with_fewer_than_k_targets(spark,
+                                                           monkeypatch):
+    """With fewer than k finite targets no query can hold k neighbours; the
+    exact form used to run rings 1, 4, 16 and 64 and then brute force."""
+    calls = {"kring": 0, "brute": 0}
+    kring, brute = knn.knn_kring, knn.knn_bruteforce
+
+    def counted(name, fn):
+        def call(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+        return call
+
+    monkeypatch.setattr(knn, "knn_kring", counted("kring", kring))
+    monkeypatch.setattr(knn, "knn_bruteforce", counted("brute", brute))
+    targets = spark.createDataFrame(
+        [(1, 2.35, 48.85), (2, 2.36, 48.86), (3, None, None),
+         (4, float("nan"), 48.85)], "tid long, tlon double, tlat double")
+    queries = spark.createDataFrame([(1, 2.35, 48.853), (2, 2.355, 48.855)],
+                                    "qid long, qlon double, qlat double")
+    got = knn.knn_kring_exact(queries, targets, k=3)
+    assert calls == {"kring": 1, "brute": 0}
+    assert sorted(got.collect()) \
+        == sorted(brute(queries, targets, k=3).collect())
+    assert got.count() == 4
+    calls.update(kring=0)
+    none = targets.where(F.col("tid") >= 3)
+    assert knn.knn_kring_exact(queries, none, k=3).count() == 0
+    assert calls == {"kring": 1, "brute": 0}
+
+
 def test_knn_kring_exact_no_duplicate_neighbours(spark):
     """Rings wider than the grid (2*16+1 columns of 16 at res 4) used to
     repeat columns, so one target came back at ranks 1, 2 and 3."""

@@ -246,3 +246,104 @@ def test_mbtiles_jpg_rejects_alpha_bands(spark, merc_tiles):
     with pytest.raises(ValueError, match="alpha"):
         TS.write_mbtiles(merc_tiles, os.path.join(d, "x.mbtiles"), "m",
                          band=(1, 1, 1, 1), fmt="jpg")
+
+
+def test_rewrite_replaces_the_old_file(spark, merc_tiles):
+    """A second write to one path used to merge into the first file: both
+    tile sets stayed and every metadata key got a second row."""
+    z1 = merc_tiles.where((F.col("tile_x") < 2) & (F.col("tile_y") < 2)) \
+        .withColumn("zoom", F.lit(1))
+    d = tempfile.mkdtemp()
+    mb = os.path.join(d, "x.mbtiles")
+    TS.write_mbtiles(merc_tiles, mb, "m", name="one")
+    assert TS.write_mbtiles(z1, mb, "m", name="two") == 4
+    con = sqlite3.connect(mb)
+    meta = con.execute("SELECT name, value FROM metadata").fetchall()
+    keys = con.execute(
+        "SELECT zoom_level, tile_column, tile_row FROM tiles").fetchall()
+    con.close()
+    assert len(meta) == len(dict(meta)) == 7
+    assert dict(meta)["name"] == "two" and dict(meta)["minzoom"] == "1"
+    assert sorted(keys) == [(1, x, y) for x in range(2) for y in range(2)]
+
+    gp = os.path.join(d, "x.gpkg")
+    TS.write_gpkg_tiles(merc_tiles, gp, "m", tile_px=64)
+    assert TS.write_gpkg_tiles(z1, gp, "m", tile_px=64) == 4
+    con = sqlite3.connect(gp)
+    contents = con.execute("SELECT identifier FROM gpkg_contents").fetchall()
+    matrix = con.execute("SELECT zoom_level FROM gpkg_tile_matrix").fetchall()
+    keys = con.execute(
+        "SELECT zoom_level, tile_column, tile_row FROM tiles").fetchall()
+    con.close()
+    assert contents == [("m",)] and matrix == [(1,)]
+    assert sorted(keys) == [(1, x, y) for x in range(2) for y in range(2)]
+    assert sorted(os.listdir(d)) == ["x.gpkg", "x.mbtiles"]
+
+
+def test_failed_sharded_write_leaves_no_file(spark):
+    """Only stripe 1 is over max_shard_bytes: the write used to raise the
+    worker's PythonException and leave stripe 0's file in out_dir."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for ty in range(4):
+        for tx in range(4):
+            arr = (rng.integers(0, 256, (64, 64)) if tx % 2
+                   else np.zeros((64, 64))).astype(np.float64)
+            rows.append(dict(
+                raster_id="n", band=1, zoom=2, tile_x=tx, tile_y=ty,
+                dtype="uint8", tile_w=64, tile_h=64,
+                gt0=0.0, gt1=1.0, gt2=0.0, gt3=0.0, gt4=0.0, gt5=-1.0,
+                nodata=None, pixels=arr.ravel().tolist()))
+    tiles = spark.createDataFrame(pd.DataFrame(rows),
+                                  schema=RX.RASTER_SCHEMA)
+    d = tempfile.mkdtemp()
+    with pytest.raises(ValueError, match="max_shard_bytes"):
+        TS.write_mbtiles_sharded(tiles, d, "n", stripes=2,
+                                 max_shard_bytes=4096).collect()
+    assert os.listdir(d) == []
+    # stripe 0 alone is within the bound
+    man = TS.write_mbtiles_sharded(tiles.where(F.col("tile_x") % 2 == 0), d,
+                                   "n", stripes=2, max_shard_bytes=4096)
+    assert [r["file"] for r in man.collect()] == ["z2_s0.mbtiles"]
+    assert os.listdir(d) == ["z2_s0.mbtiles"]
+
+
+class _NoDriverRows:
+    """DataFrame proxy on which every action that returns rows raises."""
+
+    def __init__(self, df):
+        self._df = df
+
+    def __getattr__(self, k):
+        if k in ("collect", "toPandas", "toLocalIterator", "take", "first",
+                 "head", "tail"):
+            raise AssertionError(f"{k}() brings tile bytes to the driver")
+        return getattr(self._df, k)
+
+
+def test_no_tile_bytes_reach_the_driver(spark, merc_tiles, monkeypatch):
+    """Every tile-store file is written by an executor task: with each
+    row-returning action on the encoded tiles booby-trapped, the writes
+    under budget still succeed and their files hold the fixture pixels."""
+    real = TS._encoded_tiles
+    monkeypatch.setattr(
+        TS, "_encoded_tiles", lambda *a, **k: _NoDriverRows(real(*a, **k)))
+    d = tempfile.mkdtemp()
+    mb, gp = os.path.join(d, "x.mbtiles"), os.path.join(d, "x.gpkg")
+    assert TS.write_mbtiles(merc_tiles, mb, "m") == 16
+    assert TS.write_gpkg_tiles(merc_tiles, gp, "m", tile_px=64) == 16
+    man = TS.write_mbtiles_sharded(merc_tiles, os.path.join(d, "s"), "m")
+    assert [(r["file"], r["tiles"]) for r in man.collect()] \
+        == [("z2.mbtiles", 16)]
+    j, i = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
+    for path, flip in ((mb, True), (gp, False)):
+        con = sqlite3.connect(path)
+        got = con.execute("SELECT tile_column, tile_row, tile_data FROM tiles "
+                          "WHERE zoom_level = 2").fetchall()
+        con.close()
+        assert len(got) == 16
+        for tx, row, blob in got:
+            ty = 3 - row if flip else row
+            assert np.array_equal(TS.decode_png_gray(bytes(blob)),
+                                  ((i + j + 17 * tx + 29 * ty) % 256)
+                                  .astype(np.uint8))
