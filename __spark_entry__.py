@@ -767,9 +767,11 @@ def q_mbtiles_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ))
     tiles = spark.createDataFrame(pd.DataFrame(rows),
                                   schema=RS.RASTER_SCHEMA)
-    path = tempfile.mktemp(suffix=".mbtiles")
-    TS.write_mbtiles(tiles, path, "m")
-    back = TS.read_mbtiles(spark, path)
+    # read_mbtiles collects the file on the driver, so it can go at once
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/m.mbtiles"
+        TS.write_mbtiles(tiles, path, "m")
+        back = TS.read_mbtiles(spark, path)
 
     def sums(batches):
         for b in batches:
@@ -2063,43 +2065,6 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     return CLU.pq_topk(emb, query_id=0, topk=20, m=4, k=4, iters=2)
-
-
-def q_dwell_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trajectory dwell segmentation (stay-point detection) per user over
-    the events stream: integer-valued planar coordinates hashed from
-    event_id, steps classified stay/move by dist <= v_max * dt, maximal
-    stay runs >= 1 h emitted with centroids. One window + one combinable
-    groupBy; coordinates are integer-valued doubles so the centroid sums
-    are exact in any aggregation order, and the oracle spells the
-    identical window/threshold arithmetic."""
-    from lib_gdal_spark.operators.trajectory import dwell_segments
-
-    ev = _t(spark, sf_dir, "events")
-    track = ev.select(
-        F.col("user_id").alias("eid"), "ts",
-        ((F.col("event_id") * 7919) % 1000).cast("double").alias("x"),
-        ((F.col("event_id") * 104729) % 1000).cast("double").alias("y"),
-    )
-    return dwell_segments(track, v_max=0.04, min_dwell_s=3600.0)
-
-
-def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Origin-destination flow matrix over the same hashed planar
-    tracks as dwell_segments, binned to 100-unit cells: per user, every
-    consecutive step (ordered ts, x, y) that crosses a cell boundary
-    becomes a transition; flows aggregate exact trip and distinct-user
-    counts per (origin, destination) cell pair. The oracle spells the
-    identical window-lag + floor-division pipeline."""
-    from lib_gdal_spark.operators.trajectory import od_matrix
-
-    ev = _t(spark, sf_dir, "events")
-    track = ev.select(
-        F.col("user_id").alias("eid"), "ts",
-        ((F.col("event_id") * 7919) % 1000).cast("double").alias("x"),
-        ((F.col("event_id") * 104729) % 1000).cast("double").alias("y"),
-    )
-    return od_matrix(track, cell=100.0)
 
 
 def q_skyline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6065,113 +6030,6 @@ def q_gml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # driver contract
 # ---------------------------------------------------------------------------
 
-def _stat_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-degree lattice cell counts over the _points coordinates, derived
-    with INTEGER division on the pre-float hundredth-degree keys so cell
-    assignment has no float-floor boundary risk in either engine."""
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    return (
-        ev.select(
-            ((k1 - k1 % 1000) / 1000).cast("int").alias("gx"),
-            ((k2 - k2 % 1000) / 1000).cast("int").alias("gy"),
-        )
-        .groupBy("gx", "gy")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-
-
-def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global Moran's I spatial autocorrelation (Moran 1950; Cliff & Ord
-    1981 normality moments) of per-cell page counts on a 10-degree lattice
-    with queen contiguity. Beyond the reference (GDAL has no spatial-stats
-    layer; nearest analog is gdalgrid.cpp:1183 data-metrics). All partials
-    are exact int64 aggregates (one keyed shuffle over the AGGREGATED cell
-    table); the oracle spells the identical final float expression, so the
-    match is bit-level, not tolerance-level."""
-    from lib_gdal_spark.operators.spatialstats import morans_i
-
-    return morans_i(_stat_cells(spark, sf_dir), queen=True)
-
-
-def q_getis_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local Getis-Ord Gi* hotspot z-scores (Getis & Ord 1992) per occupied
-    10-degree cell, queen-star neighborhoods. nbr_sum/w_i are exact int64
-    join-aggregates over the aggregated cell lattice; the one-row global
-    moments broadcast; a single final float expression per cell that the
-    oracle reproduces exactly."""
-    from lib_gdal_spark.operators.spatialstats import getis_gi_star
-
-    return getis_gi_star(_stat_cells(spark, sf_dir), queen=True)
-
-
-def q_std_ellipse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centrography per group (mean center, standard distance, standard
-    deviational ellipse — Lefever 1926 / the ESRI directional-distribution
-    toolset) over the integer hundredth-degree keys: all partials are
-    exact int64 groupBy aggregates; rotation uses the algebraic cos/sin
-    (no transcendentals in the axes), oracle-identical."""
-    from lib_gdal_spark.operators.spatialstats import centrography
-
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    pts = ev.select((F.col("event_id") % 4).alias("g"),
-                    k1.alias("x"), k2.alias("y"))
-    return centrography(pts, by="g")
-
-
-def q_variogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical Matheron semivariogram over a pid%7 systematic subsample
-    of the integer-key points: the 3x3 cell-ring covering join is proven
-    complete against the oracle's brute-force pair join; (vi-vj)^2 / d2
-    sums are exact int64, so gamma matches bit-for-bit."""
-    from lib_gdal_spark.operators.spatialstats import empirical_variogram
-
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.where(F.col("event_id") % 7 == 0).select(
-        F.col("event_id").alias("pid"),
-        ((F.col("event_id") * 7919) % 1200).alias("x"),
-        ((F.col("event_id") * 104729) % 1200).alias("y"),
-        (F.col("event_id") % 97).alias("v"),
-    )
-    return empirical_variogram(pts, max_dist=150.0, n_bins=6)
-
-
-def q_variogram_directional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directional semivariogram (4 azimuth sectors, 45-deg windows,
-    directions mod 180) over the same subsampled integer-key points as
-    variogram: identical covering join + exact int64 sums; sector via
-    the shared degrees(atan2) fold, identical in SQL."""
-    from lib_gdal_spark.operators.spatialstats import directional_variogram
-
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.where(F.col("event_id") % 7 == 0).select(
-        F.col("event_id").alias("pid"),
-        ((F.col("event_id") * 7919) % 1200).alias("x"),
-        ((F.col("event_id") * 104729) % 1200).alias("y"),
-        (F.col("event_id") % 97).alias("v"),
-    )
-    return directional_variogram(pts, max_dist=150.0, n_bins=6)
-
-
-def q_morans_by_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental spatial autocorrelation: Moran's I + normality z per
-    distance band over the integer-key subsample (directed band weights
-    from the covering pair join; all partials exact int64)."""
-    from lib_gdal_spark.operators.spatialstats import morans_by_distance
-
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.where(F.col("event_id") % 7 == 0).select(
-        F.col("event_id").alias("pid"),
-        ((F.col("event_id") * 7919) % 1200).alias("x"),
-        ((F.col("event_id") * 104729) % 1200).alias("y"),
-        (F.col("event_id") % 97).alias("v"),
-    )
-    return morans_by_distance(pts, max_dist=150.0, n_bins=6)
-
-
 def q_zonal_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal geometry (ArcGIS ZonalGeometry analog): per-zone pixel/ground
     area, ground perimeter from 4-neighbor exposed edges (halo-exchange
@@ -6191,306 +6049,6 @@ def q_zonal_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zonal_geometry(tiles)
 
 
-def q_trajectory_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete Fréchet (Eiter & Mannila 1994) + Hausdorff distances,
-    SQUARED on integer lattices — every DP cell exact int64; the oracle
-    unrolls the full coupling recurrence as generated lateral-alias SQL,
-    so the match is integer-exact."""
-    from lib_gdal_spark.operators.trajectory import trajectory_similarity
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 96)
-    k = F.col("event_id")
-    tracks = ev.select(
-        (k % 12).alias("tid"),
-        (((k - k % 12) / 12)).cast("int").alias("seq"),
-        ((k * 7919) % 500).alias("x"),
-        ((k * 104729) % 500).alias("y"),
-    )
-    return trajectory_similarity(tracks)
-
-
-def _traj_oracle_sql() -> str:
-    """Generated fully-unrolled discrete-Fréchet DP + Hausdorff over the
-    12 fixed-length-8 fixture tracks: the same recurrence loop emits the
-    SQL (lateral aliases carry the in-row dependency), all int64."""
-    L = 8
-    xcols = ", ".join(
-        f"max(CASE WHEN seq = {i} THEN x END) AS x{i}, "
-        f"max(CASE WHEN seq = {i} THEN y END) AS y{i}"
-        for i in range(L))
-    d2 = {(i, j): (f"((ax{i}-bx{j})*(ax{i}-bx{j})"
-                   f" + (ay{i}-by{j})*(ay{i}-by{j}))")
-          for i in range(L) for j in range(L)}
-    m0 = ", ".join(f"{e} AS d{i}_{j}" for (i, j), e in d2.items())
-    least_rows = [f"least({', '.join(f'd{i}_{j}' for j in range(L))})"
-                  for i in range(L)]
-    least_cols = [f"least({', '.join(f'd{i}_{j}' for i in range(L))})"
-                  for j in range(L)]
-    haus = f"greatest({', '.join(least_rows + least_cols)})"
-    # DP rows as chained CTEs; within a row, lateral aliases carry cur[j-1]
-    ctes = []
-    row0 = [f"d0_0 AS f0_0"]
-    for j in range(1, L):
-        row0.append(f"greatest(f0_{j-1}, d0_{j}) AS f0_{j}")
-    ctes.append(f"r0 AS (SELECT *, {', '.join(row0)} FROM m0)")
-    for i in range(1, L):
-        row = [f"greatest(f{i-1}_0, d{i}_0) AS f{i}_0"]
-        for j in range(1, L):
-            row.append(
-                f"greatest(d{i}_{j}, least(f{i-1}_{j}, f{i-1}_{j-1}, "
-                f"f{i}_{j-1})) AS f{i}_{j}")
-        ctes.append(f"r{i} AS (SELECT *, {', '.join(row)} FROM r{i-1})")
-    chain = ",\n        ".join(ctes)
-    return f"""
-        WITH tr AS (
-          SELECT event_id % 12 AS tid, {xcols}
-          FROM (SELECT event_id,
-                       CAST((event_id - event_id % 12) / 12 AS INT) AS seq,
-                       (event_id * 7919) % 500 AS x,
-                       (event_id * 104729) % 500 AS y
-                FROM events WHERE event_id < 96)
-          GROUP BY 1
-        ),
-        p AS (
-          SELECT a.tid AS tid_a, b.tid AS tid_b,
-                 {', '.join(f'a.x{i} AS ax{i}, a.y{i} AS ay{i}, '
-                            f'b.x{i} AS bx{i}, b.y{i} AS by{i}'
-                            for i in range(L))}
-          FROM tr a JOIN tr b ON a.tid < b.tid
-        ),
-        m0 AS (SELECT tid_a, tid_b, {m0} FROM p),
-        {chain}
-        SELECT tid_a, tid_b, CAST({L} AS BIGINT) AS len_a,
-               CAST({L} AS BIGINT) AS len_b,
-               CAST({haus} AS BIGINT) AS hausdorff2,
-               CAST(f{L-1}_{L-1} AS BIGINT) AS frechet2
-        FROM r{L-1}
-    """
-
-
-def q_variogram_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted-least-squares spherical variogram fit (Cressie 1985
-    weighting) over the empirical variogram, candidate-range grid search:
-    per candidate a closed-form 2x2 Cramer solve; argmin WSS."""
-    from lib_gdal_spark.operators.spatialstats import (
-        empirical_variogram, fit_variogram)
-
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.where(F.col("event_id") % 7 == 0).select(
-        F.col("event_id").alias("pid"),
-        ((F.col("event_id") * 7919) % 1200).alias("x"),
-        ((F.col("event_id") * 104729) % 1200).alias("y"),
-        (F.col("event_id") % 97).alias("v"),
-    )
-    vgm = empirical_variogram(pts, max_dist=150.0, n_bins=6)
-    fit = fit_variogram(vgm, [50.0, 75.0, 100.0, 125.0, 150.0],
-                        max_dist=150.0, n_bins=6)
-    # re-round at magnitude-appropriate precision: the 6-bin double sums
-    # are engine-order-dependent at ~1e-14 relative, and wss is O(1e8)
-    return fit.select("vrange", F.round("nugget", 5).alias("nugget"),
-                      F.round("psill", 5).alias("psill"),
-                      F.round("wss", 2).alias("wss"))
-
-
-HUFF_STORES: list[tuple[int, int, int, float]] = [
-    (1, 5, 4, 100.0), (2, 20, 8, 200.0), (3, 30, 12, 150.0)]
-
-
-def q_huff_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Huff gravity model (Huff 1964) over the 10-degree demand lattice:
-    capture shares and primary-catchment cell counts for 3 competing
-    stores; beta=2 exact 1/d2 weights, broadcast store dim."""
-    from lib_gdal_spark.operators.spatialstats import huff_model
-
-    cells = _stat_cells(spark, sf_dir)
-    demand = cells.select(
-        (F.col("gx").cast("long") * 100 + F.col("gy")).alias("cid"),
-        F.col("gx").cast("long").alias("x"),
-        F.col("gy").cast("long").alias("y"),
-        F.col("x").alias("pop"))
-    stores = local_df(spark, HUFF_STORES,
-                      "fid long, x long, y long, attr double")
-    return huff_model(demand, stores, beta=2.0)
-
-
-def q_quadrat_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quadrat chi-square CSR test (Greig-Smith 1952) on an 8x8 split of
-    the 1200x1200 integer-key window; exact int64 partials."""
-    from lib_gdal_spark.operators.spatialstats import quadrat_test
-
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.select(((F.col("event_id") * 7919) % 1200).alias("x"),
-                    ((F.col("event_id") * 104729) % 1200).alias("y"))
-    return quadrat_test(pts, (0, 1200), (0, 1200), 8, 8)
-
-
-def q_general_g(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Getis-Ord General G high/low clustering over the 10-degree cell
-    counts (queen weights): exact int64 numerator/denominator."""
-    from lib_gdal_spark.operators.spatialstats import general_g
-
-    return general_g(_stat_cells(spark, sf_dir), queen=True)
-
-
-def q_gearys_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global Geary's C (Geary 1954; Cliff & Ord 1981 normality moments)
-    over the 10-degree lattice cell counts, queen contiguity — the
-    local-difference complement to Moran's I. The pair numerator
-    sum_w (xi-xj)^2 is an exact int64 aggregate; one final float
-    expression the oracle spells identically (bit-level match)."""
-    from lib_gdal_spark.operators.spatialstats import gearys_c
-
-    return gearys_c(_stat_cells(spark, sf_dir), queen=True)
-
-
-def q_local_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local Moran's I (LISA; Anselin 1995) per occupied cell with
-    randomization moments and HH/LL/HL/LH quadrant labels. nsum/deg are
-    int64 join-aggregates; the global kurtosis b2 comes from raw int64
-    power sums; one float expression per row, oracle-identical."""
-    from lib_gdal_spark.operators.spatialstats import local_moran
-
-    return local_moran(_stat_cells(spark, sf_dir), queen=True)
-
-
-def q_local_geary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local Geary's c (Anselin 2019) per occupied lattice cell —
-    value-similarity LISA beside local_moran's co-variation: c_i from
-    exact int64 neighbor aggregates (nsum, nsum2, deg) and global power
-    sums, E[c_i] = deg*2n/(n-1), similar/dissimilar labels. One float
-    expression per row, oracle-identical."""
-    from lib_gdal_spark.operators.spatialstats import local_geary
-
-    return local_geary(_stat_cells(spark, sf_dir), queen=True)
-
-
-def q_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-count statistics (Cliff & Ord 1981) for the binary
-    odd-count indicator over lattice cells: BB/BW/WW joins plus the
-    free-sampling z for BB. All counts exact int64."""
-    from lib_gdal_spark.operators.spatialstats import join_counts
-
-    cells = _stat_cells(spark, sf_dir).select(
-        "gx", "gy", (F.col("x") % 2).alias("x"))
-    return join_counts(cells, queen=True)
-
-
-def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emerging-hotspot classification (space-time Gi* per day x
-    Mann-Kendall trend, the documented 7-category simplification of the
-    ESRI taxonomy) over the 6x6 event lattice: per-bin Gi* z rounded to
-    10 dp is the contract between the two stages, so the composition is
-    engine-reproducible end to end. The oracle spells both stages and
-    the category CASE verbatim."""
-    from lib_gdal_spark.operators.spatialstats import emerging_hotspots
-
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    cells = (
-        ev.select(
-            ((k1 - k1 % 6000) / 6000).cast("int").alias("gx"),
-            ((k2 - k2 % 3000) / 3000).cast("int").alias("gy"),
-            F.dayofyear("ts").alias("tbin"),
-        )
-        .groupBy("gx", "gy", "tbin")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    return emerging_hotspots(cells)
-
-
-def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell Theil-Sen median slope over the same 6x6 day-binned
-    lattice as mann_kendall: pairwise slopes one integer division each,
-    median by exact order-statistic selection ((slope, ti, tj)
-    ranking). The oracle ranks the identical pairs and selects the
-    same middle rows."""
-    from lib_gdal_spark.operators.spatialstats import theil_sen
-
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    cells = (
-        ev.select(
-            ((k1 - k1 % 6000) / 6000).cast("int").alias("gx"),
-            ((k2 - k2 % 3000) / 3000).cast("int").alias("gy"),
-            F.dayofyear("ts").alias("tbin"),
-        )
-        .groupBy("gx", "gy", "tbin")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    return theil_sen(cells)
-
-
-def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell Mann-Kendall trend over day-binned event counts — the
-    emerging-hotspot statistic (Mann 1945 / Kendall 1975; Gi* says hot
-    NOW, MK says HEATING UP). 6x6 lattice from the _stat_cells integer
-    hash keys, tbin = dayofyear(ts). S, n, and the tie sums are exact
-    int64 aggregates (a bounded T^2 self-join per cell on the
-    AGGREGATED lattice); only the final z is float, spelled identically
-    in the oracle."""
-    from lib_gdal_spark.operators.spatialstats import mann_kendall
-
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    cells = (
-        ev.select(
-            ((k1 - k1 % 6000) / 6000).cast("int").alias("gx"),
-            ((k2 - k2 % 3000) / 3000).cast("int").alias("gy"),
-            F.dayofyear("ts").alias("tbin"),
-        )
-        .groupBy("gx", "gy", "tbin")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    return mann_kendall(cells)
-
-
-def q_kde_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantized quartic-kernel density heatmap (Silverman 1986 eq. 4.5)
-    over 1-degree pixel-binned points, radius 3 px. Kernel weights are
-    1/4096 dyadic rationals (the GRA_Sum trick, kernels/resample.py), so
-    per-pixel density sums are exact and order-independent — the oracle
-    matches UNROUNDED. Shape: bin (keyed shuffle, combinable) -> bounded
-    (2R-1)^2 explode of the aggregate -> re-sum (keyed, combinable)."""
-    from lib_gdal_spark.operators.spatialstats import kde_heatmap
-
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    counts = (
-        ev.select(
-            ((k1 - k1 % 100) / 100).cast("int").alias("px"),
-            ((k2 - k2 % 100) / 100).cast("int").alias("py"),
-        )
-        .groupBy("px", "py")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return kde_heatmap(counts, radius=3)
-
-
-def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ripley's K / Besag's L point-pattern statistics (Ripley 1976) at
-    r = 1, 2, 5 degrees over the [0,40)x[0,40) window. Pair counting runs
-    the bounded 3x3 cell-covering join (cell = r_max, the knn.s2_ring_pairs
-    completeness argument); the oracle counts the same ordered pairs BRUTE
-    FORCE (n^2 self-join at sf0.01), so equality proves the covering join
-    finds every in-range pair. Uncorrected estimator (no edge correction;
-    documented in operators/spatialstats.py)."""
-    from lib_gdal_spark.operators.spatialstats import ripley_k
-
-    pts = (
-        _points(spark, sf_dir)
-        .where(
-            (F.col("lon") >= 0) & (F.col("lon") < 40)
-            & (F.col("lat") >= 0) & (F.col("lat") < 40)
-        )
-        .select("pid", F.col("lon").alias("x"), F.col("lat").alias("y"))
-    )
-    return ripley_k(pts, [1.0, 2.0, 5.0], area=1600.0, cell=5.0)
-
-
 def _window_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _points(spark, sf_dir)
@@ -6500,52 +6058,6 @@ def _window_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("pid", F.col("lon").alias("x"), F.col("lat").alias("y"))
     )
-
-
-def q_cross_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate (cross) Ripley K/L (Lotwick & Silverman 1982) between
-    the even-pid and odd-pid point sets at r = 1, 2, 5 over the same
-    [0,40)^2 window as ripley_k: K_ab = area * #{(a,b): d < r} /
-    (n_a * n_b). The engine's 3x3 covering join is proven complete
-    against the oracle's brute-force n_a x n_b pair count."""
-    from lib_gdal_spark.operators.spatialstats import cross_k
-
-    pts = _window_points(spark, sf_dir)
-    return cross_k(pts.where(F.col("pid") % 2 == 0),
-                   pts.where(F.col("pid") % 2 == 1),
-                   [1.0, 2.0, 5.0], area=1600.0, cell=5.0)
-
-
-def q_two_step_fca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-step floating catchment area accessibility (Luo & Wang 2003)
-    over the [0,40)^2 window: supplies = pid%10==0 points with capacity
-    pid%5+1, demands = the rest with weight pid%3+1, catchment radius 5.
-    Supply ratios are one float division quantized half-up to 1e-9
-    units; step-2 sums are exact int64. The oracle brute-forces both
-    distance joins and spells the identical quantization."""
-    from lib_gdal_spark.operators.spatialstats import two_step_fca
-
-    pts = _window_points(spark, sf_dir)
-    sup = pts.where(F.col("pid") % 10 == 0).select(
-        "pid", "x", "y", (F.col("pid") % 5 + 1).alias("s"))
-    dem = pts.where(F.col("pid") % 10 != 0).select(
-        "pid", "x", "y", (F.col("pid") % 3 + 1).alias("d"))
-    return two_step_fca(sup, dem, radius=5.0)
-
-
-def q_colocation_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Colocation quotient (Leslie & Kronenfeld 2011) over the window
-    points with categories pid%3: each point's exact nearest neighbour
-    (escalating covering join, ties to smallest (d2, pid)) contributes
-    to C_a->b; CLQ = (C_ab/N_a) / (N_b'/(N-1)). The oracle brute-forces
-    every NN with the same arg-min tie-break."""
-    from lib_gdal_spark.operators.spatialstats import colocation_quotient
-
-    pts = _window_points(spark, sf_dir).select(
-        "pid", "x", "y",
-        F.concat(F.lit("c"), (F.col("pid") % 3).cast("string"))
-        .alias("cat"))
-    return colocation_quotient(pts, cell=5.0)
 
 
 def q_str_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6578,39 +6090,6 @@ def q_line_density(spark: SparkSession, sf_dir: str) -> DataFrame:
          + ((((k * 53 + 11) % 200) - 100) / 100.0)).alias("y1"),
     )
     return line_density(segs, radius=1.5, cell=2.0, nx=20, ny=20)
-
-
-def q_knox_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Knox space-time interaction test (Knox 1964) over the window
-    points carrying their event timestamps: pairs close in space
-    (d <= 2 deg, covering join) and time (|dt| <= 2 days, 1-D bucket
-    join), all counts exact int64 with microsecond time arithmetic; the
-    oracle brute-forces all n(n-1)/2 pairs."""
-    from lib_gdal_spark.operators.spatialstats import knox_test
-
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.select(
-        F.col("event_id").alias("pid"),
-        (((F.col("event_id") * 7919) % 36000) / 100.0 - 180.0).alias("x"),
-        (((F.col("event_id") * 104729) % 17000) / 100.0 - 85.0).alias("y"),
-        "ts",
-    ).where((F.col("x") >= 0) & (F.col("x") < 40)
-            & (F.col("y") >= 0) & (F.col("y") < 40))
-    return knox_test(pts, ds=2.0, dt_s=2 * 86400.0)
-
-
-def q_clark_evans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clark-Evans nearest-neighbour index (Clark & Evans 1954) over the
-    [0,40)^2 window points: R = mean NN distance / (0.5*sqrt(area/n)),
-    z = (obs-exp)/(0.26136/sqrt(n^2/area)). The engine resolves NN via
-    the escalating covering join (accept only when d <= cell); NN
-    distances are quantized to integer micrometres so the distributed
-    sum is exact; the oracle brute-forces every NN and spells the same
-    quantized mean and final expressions."""
-    from lib_gdal_spark.operators.spatialstats import clark_evans
-
-    return clark_evans(_window_points(spark, sf_dir),
-                       area=1600.0, cell=5.0)
 
 
 # ---------------------------------------------------------------------------
@@ -6793,23 +6272,6 @@ def q_visvalingam(spark: SparkSession, sf_dir: str) -> DataFrame:
     return visvalingam(pts, n_remove=4)
 
 
-def q_hausdorff_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete Hausdorff distance between consecutive 20-point event
-    tracks (OGR/GEOS HausdorffDistance analog): distances round at 9
-    BEFORE the min/max lattice, explicit pair table, one equi-join +
-    two combinable aggregations — never all-pairs."""
-    from lib_gdal_spark.operators.trajectory import hausdorff_pairs
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 400)
-    pts = ev.select(
-        F.floor(F.col("event_id") / 20).cast("long").alias("tid"),
-        ((F.col("event_id") * 7919) % 1000).cast("double").alias("x"),
-        ((F.col("event_id") * 104729) % 1000).cast("double").alias("y"))
-    pairs = spark.range(0, 19).select(
-        F.col("id").alias("tid_a"), (F.col("id") + 1).alias("tid_b"))
-    return hausdorff_pairs(pts, pairs)
-
-
 def q_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Levenshtein edit distance between the two leading 24-char
     windows of each document (both engines ship the textbook DP
@@ -6819,57 +6281,6 @@ def q_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.levenshtein(F.substring("text", 1, 24),
                       F.substring("text", 25, 24)).alias("dist"))
-
-
-def q_dtw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DTW distance between consecutive 12-point event tracks: exact
-    integer DP (squared-euclidean costs), one Arrow group per explicit
-    pair; the oracle unrolls the DP by anti-diagonals (22 chained CTEs,
-    each joining the previous two — the warp-iteration unroll style)."""
-    from lib_gdal_spark.operators.trajectory import dtw_pairs
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 240)
-    pts = ev.select(
-        F.floor(F.col("event_id") / 12).cast("long").alias("tid"),
-        (F.col("event_id") % 12).alias("vi"),
-        ((F.col("event_id") * 7919) % 500).alias("x"),
-        ((F.col("event_id") * 104729) % 500).alias("y"))
-    pairs = spark.range(0, 19).select(
-        F.col("id").alias("tid_a"), (F.col("id") + 1).alias("tid_b"))
-    return dtw_pairs(pts, pairs)
-
-
-def q_frechet_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discrete Frechet distance (squared integer) between consecutive
-    12-point event tracks — the dtw_pairs anti-diagonal oracle pattern
-    with max/min in place of cost accumulation."""
-    from lib_gdal_spark.operators.trajectory import frechet_pairs
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 240)
-    pts = ev.select(
-        F.floor(F.col("event_id") / 12).cast("long").alias("tid"),
-        (F.col("event_id") % 12).alias("vi"),
-        ((F.col("event_id") * 7919) % 500).alias("x"),
-        ((F.col("event_id") * 104729) % 500).alias("y"))
-    pairs = spark.range(0, 19).select(
-        F.col("id").alias("tid_a"), (F.col("id") + 1).alias("tid_b"))
-    return frechet_pairs(pts, pairs)
-
-
-def q_lcss_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LCSS trajectory similarity (integer eps^2 = 10000 match
-    threshold) between consecutive 12-point event tracks."""
-    from lib_gdal_spark.operators.trajectory import lcss_pairs
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 240)
-    pts = ev.select(
-        F.floor(F.col("event_id") / 12).cast("long").alias("tid"),
-        (F.col("event_id") % 12).alias("vi"),
-        ((F.col("event_id") * 7919) % 500).alias("x"),
-        ((F.col("event_id") * 104729) % 500).alias("y"))
-    pairs = spark.range(0, 19).select(
-        F.col("id").alias("tid_a"), (F.col("id") + 1).alias("tid_b"))
-    return lcss_pairs(pts, pairs, eps2=10000)
 
 
 def q_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6920,21 +6331,6 @@ def q_compactness(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer = spark.range(0, 200).mapInPandas(
         boxes, schema="fid long, geom_wkb binary")
     return compactness(layer)
-
-
-def q_circular_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Circular heading statistics over the 20 event trajectories
-    (unit-vector lattice sums — algebraic, no trig until the one
-    atan2): mean direction, resultant length, Rayleigh z."""
-    from lib_gdal_spark.operators.trajectory import circular_stats
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 240)
-    pts = ev.select(
-        F.floor(F.col("event_id") / 12).cast("long").alias("tid"),
-        (F.col("event_id") % 12).alias("vi"),
-        ((F.col("event_id") * 7919) % 500).alias("x"),
-        ((F.col("event_id") * 104729) % 500).alias("y"))
-    return circular_stats(pts)
 
 
 def q_pca_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7044,29 +6440,6 @@ def q_morph_close(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px", "py", F.col("closed").cast("int").alias("closed"),
         (F.col("dilated") - F.col("eroded")).cast("int").alias("gradient"),
         (F.col("closed") - F.col("mask")).cast("int").alias("tophat_black"))
-
-
-def q_lees_l(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lee's L bivariate spatial association between total event count
-    and the event_id%3==0 subset count per 10-degree cell (queen
-    contiguity, binary weights): n-scaled integer deviations make
-    every aggregate exact; the statistic is one fixed float
-    expression."""
-    from lib_gdal_spark.operators.spatialstats import lees_l
-
-    ev = _t(spark, sf_dir, "events")
-    k1 = (F.col("event_id") * 7919) % 36000
-    k2 = (F.col("event_id") * 104729) % 17000
-    cells = (
-        ev.select(
-            ((k1 - k1 % 1000) / 1000).cast("int").alias("gx"),
-            ((k2 - k2 % 1000) / 1000).cast("int").alias("gy"),
-            F.col("event_id"))
-        .groupBy("gx", "gy")
-        .agg(F.count(F.lit(1)).alias("x"),
-             F.sum(F.when(F.col("event_id") % 3 == 0, 1).otherwise(0))
-             .alias("y")))
-    return lees_l(cells, queen=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -7268,8 +6641,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semantic_dedup": q_semantic_dedup,
         "gc_navigation": q_gc_navigation,
         "rhumb_destination": q_rhumb_destination,
-        "dwell_segments": q_dwell_segments,
-        "od_matrix": q_od_matrix,
         "skyline_docs": q_skyline_docs,
         "morph_open": q_morph_open,
         "zonal_crosstab": q_zonal_crosstab,
@@ -7349,32 +6720,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hilbert_keys": q_hilbert_keys,
         "gtiff_export": q_gtiff_export,
         "georss_items": q_georss_items,
-        "morans_i": q_morans_i,
-        "gearys_c": q_gearys_c,
-        "std_ellipse": q_std_ellipse,
-        "variogram": q_variogram,
-        "variogram_directional": q_variogram_directional,
-        "variogram_fit": q_variogram_fit,
-        "morans_by_distance": q_morans_by_distance,
-        "trajectory_similarity": q_trajectory_similarity,
         "zonal_geometry": q_zonal_geometry,
-        "general_g": q_general_g,
-        "huff_model": q_huff_model,
-        "quadrat_test": q_quadrat_test,
-        "local_moran": q_local_moran,
-        "local_geary": q_local_geary,
-        "join_counts": q_join_counts,
-        "getis_hotspots": q_getis_hotspots,
-        "mann_kendall": q_mann_kendall,
-        "theil_sen": q_theil_sen,
-        "emerging_hotspots": q_emerging_hotspots,
-        "kde_heatmap": q_kde_heatmap,
-        "ripley_k": q_ripley_k,
-        "cross_k": q_cross_k,
-        "clark_evans": q_clark_evans,
-        "two_step_fca": q_two_step_fca,
-        "colocation_quotient": q_colocation_quotient,
-        "knox_test": q_knox_test,
         "str_partition": q_str_partition,
         "line_density": q_line_density,
         "focal_median": q_focal_median,
@@ -7386,21 +6732,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "min_enclosing_circle": q_min_enclosing_circle,
         "ipf_gravity": q_ipf_gravity,
         "visvalingam": q_visvalingam,
-        "hausdorff_pairs": q_hausdorff_pairs,
         "edit_distance": q_edit_distance,
-        "dtw_pairs": q_dtw_pairs,
-        "frechet_pairs": q_frechet_pairs,
-        "lcss_pairs": q_lcss_pairs,
         "ransac_line": q_ransac_line,
         "compactness": q_compactness,
-        "circular_stats": q_circular_stats,
         "pca_features": q_pca_features,
         "solar_exposure": q_solar_exposure,
         "isochrone_bands": q_isochrone_bands,
         "dem_hand": q_dem_hand,
         "largest_empty_circle": q_largest_empty_circle,
         "morph_close": q_morph_close,
-        "lees_l": q_lees_l,
     }
 
 
@@ -11989,89 +11329,6 @@ def oracle_sql() -> dict[str, str]:
     """
 
 
-    # dwell_segments: identical window chain (lag, class, break flag,
-    # running-sum run ids) and the identical stay aggregation; the
-    # stay/move comparison is the same single multiply, and integer
-    # coordinates make every sum exact. arg_min keys on ts alone where
-    # the operator keys on (ts, x, y): equivalent here because the
-    # events fixture's timestamps are unique per user (sequential
-    # generation), so the composite tie-break never engages.
-    sqls["od_matrix"] = """
-        WITH trk AS (
-          SELECT user_id AS eid, ts,
-                 CAST((event_id * 7919) % 1000 AS DOUBLE) AS x,
-                 CAST((event_id * 104729) % 1000 AS DOUBLE) AS y
-          FROM events
-        ),
-        cl AS (
-          SELECT eid, ts, x, y,
-                 CAST(floor(x / 100.0) AS BIGINT) AS cx,
-                 CAST(floor(y / 100.0) AS BIGINT) AS cy
-          FROM trk
-        ),
-        lg AS (
-          SELECT eid, cx, cy,
-                 lag(cx) OVER (PARTITION BY eid ORDER BY ts, x, y) AS pcx,
-                 lag(cy) OVER (PARTITION BY eid ORDER BY ts, x, y) AS pcy
-          FROM cl
-        )
-        SELECT pcx AS ocx, pcy AS ocy, cx AS dcx, cy AS dcy,
-               CAST(count(*) AS BIGINT) AS trips,
-               CAST(count(DISTINCT eid) AS BIGINT) AS users
-        FROM lg
-        WHERE pcx IS NOT NULL AND (cx <> pcx OR cy <> pcy)
-        GROUP BY 1, 2, 3, 4
-    """
-
-    sqls["dwell_segments"] = """
-        WITH pts AS (
-          SELECT user_id AS eid, ts,
-                 CAST((event_id * 7919) % 1000 AS DOUBLE) AS x,
-                 CAST((event_id * 104729) % 1000 AS DOUBLE) AS y
-          FROM events
-        ),
-        st AS (
-          SELECT eid, ts, x, y,
-                 lag(x) OVER w AS px, lag(y) OVER w AS py,
-                 lag(ts) OVER w AS pts
-          FROM pts WINDOW w AS (PARTITION BY eid ORDER BY ts, x, y)
-        ),
-        cl AS (
-          SELECT *, CASE WHEN sqrt((x - px) * (x - px)
-                                   + (y - py) * (y - py))
-                           <= 0.04 * ((epoch_us(ts) - epoch_us(pts))
-                                      / 1000000.0)
-                         THEN 'stay' ELSE 'move' END AS cls
-          FROM st WHERE pts IS NOT NULL
-        ),
-        br AS (
-          SELECT *, CASE WHEN lag(cls) OVER w IS NULL
-                           OR lag(cls) OVER w <> cls THEN 1 ELSE 0 END AS brk
-          FROM cl WINDOW w AS (PARTITION BY eid ORDER BY ts, x, y)
-        ),
-        sg AS (
-          SELECT *, SUM(brk) OVER (PARTITION BY eid ORDER BY ts, x, y
-                                   ROWS UNBOUNDED PRECEDING) AS seg
-          FROM br
-        ),
-        agg AS (
-          SELECT eid, seg, min(pts) AS t_start, max(ts) AS t_end,
-                 count(*) AS n_steps, sum(x) AS sx, sum(y) AS sy,
-                 arg_min(px, ts) AS fx,
-                 arg_min(py, ts) AS fy
-          FROM sg WHERE cls = 'stay' GROUP BY 1, 2
-        )
-        SELECT eid, CAST(seg AS BIGINT) AS seg, t_start, t_end,
-               round((epoch_us(t_end) - epoch_us(t_start)) / 1000000.0, 6)
-                 AS dur_s,
-               CAST(n_steps + 1 AS BIGINT) AS n_pts,
-               round((sx + fx) / (n_steps + 1), 9) AS cx,
-               round((sy + fy) / (n_steps + 1), 9) AS cy
-        FROM agg
-        WHERE (epoch_us(t_end) - epoch_us(t_start)) / 1000000.0 >= 3600.0
-    """
-
-
     # skyline_docs: the literal ICDE-2001 dominance definition as a
     # NOT EXISTS anti-join — integer comparisons only, order-free.
     sqls["skyline_docs"] = r"""
@@ -15088,148 +14345,6 @@ def oracle_sql() -> dict[str, str]:
         CROSS JOIN generate_series(0, 4) t(i)
     """
 
-    # Spatial statistics: Moran's I / Getis-Ord Gi* over the 10-degree
-    # lattice cell counts. Every partial is an exact int64 aggregate; the
-    # final float expressions below mirror operators/spatialstats.py
-    # operation-for-operation, so the doubles are bit-identical.
-    _STAT_CELLS_SQL = """
-        SELECT CAST((k1 - k1 % 1000) / 1000 AS INT) AS gx,
-               CAST((k2 - k2 % 1000) / 1000 AS INT) AS gy,
-               COUNT(*) AS x
-        FROM (SELECT (event_id * 7919) % 36000 AS k1,
-                     (event_id * 104729) % 17000 AS k2 FROM events)
-        GROUP BY 1, 2
-    """
-    _STAT_PAIRS_SQL = """
-        SELECT a.gx AS gx, a.gy AS gy, a.x AS xi, b.x AS xj
-        FROM cells a JOIN cells b
-          ON b.gx BETWEEN a.gx - 1 AND a.gx + 1
-         AND b.gy BETWEEN a.gy - 1 AND a.gy + 1
-         AND NOT (b.gx = a.gx AND b.gy = a.gy)
-    """
-    sqls["morans_i"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx FROM cells),
-        p AS (SELECT COUNT(*) AS s0, SUM(xi*xj) AS spp,
-                     SUM(xi+xj) AS sxy FROM pairs),
-        d AS (SELECT SUM(deg*deg) AS sdeg2 FROM
-              (SELECT gx, gy, COUNT(*) AS deg FROM pairs GROUP BY 1, 2))
-        SELECT n AS n_cells, s0,
-          round((n / s0)
-                * (spp - (sx/n)*sxy + (sx/n)*(sx/n)*s0)
-                / (sxx - n*(sx/n)*(sx/n)), 10) AS moran_i,
-          round(-1.0/(n - 1), 10) AS e_i,
-          round(((n / s0)
-                 * (spp - (sx/n)*sxy + (sx/n)*(sx/n)*s0)
-                 / (sxx - n*(sx/n)*(sx/n))
-                 - (-1.0/(n - 1)))
-                / sqrt((n*n*(2.0*s0) - n*(4.0*sdeg2) + 3.0*s0*s0)
-                       / ((n*n - 1.0) * s0 * s0)
-                       - (-1.0/(n - 1)) * (-1.0/(n - 1))), 8) AS z_norm
-        FROM g, p, d
-    """
-    sqls["getis_hotspots"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        nbr AS (SELECT gx, gy, SUM(xj) AS nsum, COUNT(*) AS deg
-                FROM pairs GROUP BY 1, 2),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx FROM cells),
-        per AS (SELECT c.gx, c.gy, c.x,
-                       COALESCE(nb.deg, 0) + 1 AS w_i,
-                       COALESCE(nb.nsum, 0) + c.x AS nbr_sum
-                FROM cells c LEFT JOIN nbr nb USING (gx, gy))
-        SELECT gx, gy, x, w_i, nbr_sum,
-          round((nbr_sum - (sx/n)*w_i)
-                / (sqrt(sxx/n - (sx/n)*(sx/n))
-                   * sqrt((n*w_i - w_i*w_i) / (n - 1.0))), 9) AS gi_star
-        FROM per, g
-    """
-
-    # variogram oracle: brute-force unordered pair join over the ~1/7
-    # subsample — completeness proof for the operator's cell-ring join
-    sqls["variogram"] = """
-        WITH pts AS (
-          SELECT event_id AS pid,
-                 (event_id * 7919) % 1200 AS x,
-                 (event_id * 104729) % 1200 AS y,
-                 event_id % 97 AS v
-          FROM events WHERE event_id % 7 = 0
-        ),
-        pairs AS (
-          SELECT (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2,
-                 (a.v - b.v) * (a.v - b.v) AS dd
-          FROM pts a JOIN pts b ON a.pid < b.pid
-          WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-                < 22500.0
-        )
-        SELECT CAST(floor(sqrt(CAST(d2 AS DOUBLE)) / 25.0) AS BIGINT)
-                 AS bin,
-               count(*) AS n_pairs,
-               round(sum(dd) / (2.0 * count(*)), 9) AS gamma,
-               round(sum(d2) / count(*), 9) AS avg_d2
-        FROM pairs GROUP BY 1 ORDER BY 1
-    """
-
-    # variogram_directional: same pairs (b - a orientation under
-    # a.pid < b.pid), identical atan2/fmod sector fold, exact sums.
-    sqls["variogram_directional"] = """
-        WITH pts AS (
-          SELECT event_id AS pid,
-                 (event_id * 7919) % 1200 AS x,
-                 (event_id * 104729) % 1200 AS y,
-                 event_id % 97 AS v
-          FROM events WHERE event_id % 7 = 0
-        ),
-        pairs AS (
-          SELECT (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-                   AS d2,
-                 (a.v - b.v) * (a.v - b.v) AS dd,
-                 CAST(b.x - a.x AS DOUBLE) AS dx,
-                 CAST(b.y - a.y AS DOUBLE) AS dy
-          FROM pts a JOIN pts b ON a.pid < b.pid
-          WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-                < 22500.0
-            AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-                > 0
-        ),
-        sec AS (
-          SELECT d2, dd,
-                 CASE WHEN az180 = 180.0 THEN 0.0 ELSE az180 END AS azn
-          FROM (
-            SELECT d2, dd,
-                   CASE WHEN degrees(atan2(dy, dx)) < 0.0
-                        THEN degrees(atan2(dy, dx)) + 180.0
-                        ELSE degrees(atan2(dy, dx)) END AS az180
-            FROM pairs
-          )
-        )
-        SELECT CAST(floor(fmod(azn + 22.5, 180.0) / 45.0) AS INT)
-                 AS sector,
-               CAST(floor(sqrt(CAST(d2 AS DOUBLE)) / 25.0) AS BIGINT)
-                 AS bin,
-               count(*) AS n_pairs,
-               round(sum(dd) / (2.0 * count(*)), 9) AS gamma
-        FROM sec GROUP BY 1, 2
-    """
-
-
-    sqls["trajectory_similarity"] = _traj_oracle_sql()
-
-    sqls["general_g"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx
-              FROM cells),
-        p AS (SELECT COUNT(*) AS s0, SUM(xi*xj) AS spp FROM pairs)
-        SELECT n AS n_cells, s0,
-          round(spp / (sx*sx - sxx), 12) AS g,
-          round(s0 / (n * (n - 1.0)), 12) AS e_g,
-          round((spp / (sx*sx - sxx)) / (s0 / (n * (n - 1.0))), 9)
-            AS g_ratio
-        FROM g, p
-    """
-
     zg_parts = []
     fourpi = repr(4.0 * math.pi)
     for mid, (mnx, mny, mxx, mxy) in METHOD_BOXES.items():
@@ -15252,647 +14367,6 @@ def oracle_sql() -> dict[str, str]:
                    * ((2 * nh) * 0.703125 + (2 * nw) * 1.40625)), 9)
             AS compactness
         FROM b
-    """
-
-    sqls["morans_by_distance"] = """
-        WITH pts AS (
-          SELECT event_id AS pid,
-                 (event_id * 7919) % 1200 AS x,
-                 (event_id * 104729) % 1200 AS y,
-                 event_id % 97 AS v
-          FROM events WHERE event_id % 7 = 0
-        ),
-        pairs AS (
-          SELECT CAST(floor(sqrt(CAST(
-                   (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-                 AS DOUBLE)) / 25.0) AS BIGINT) AS bin,
-                 a.pid AS pid_a, a.v AS va, b.v AS vb
-          FROM pts a JOIN pts b ON a.pid <> b.pid
-          WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) < 22500.0
-        ),
-        p AS (
-          SELECT bin, count(*) AS s0, sum(va*vb) AS spp,
-                 sum(va+vb) AS sxy
-          FROM pairs GROUP BY bin
-        ),
-        d AS (
-          SELECT bin, sum(deg*deg) AS sdeg2 FROM
-            (SELECT bin, pid_a, count(*) AS deg
-             FROM pairs GROUP BY 1, 2)
-          GROUP BY bin
-        ),
-        g AS (SELECT count(*) AS n, sum(v) AS sx, sum(v*v) AS sxx
-              FROM pts)
-        SELECT bin, s0,
-          round((n / s0)
-                * (spp - (sx/n)*sxy + (sx/n)*(sx/n)*s0)
-                / (sxx - n*(sx/n)*(sx/n)), 10) AS moran_i,
-          round(-1.0/(n - 1), 10) AS e_i,
-          round(((n / s0)
-                 * (spp - (sx/n)*sxy + (sx/n)*(sx/n)*s0)
-                 / (sxx - n*(sx/n)*(sx/n))
-                 - (-1.0/(n - 1)))
-                / sqrt((n*n*(2.0*s0) - n*(4.0*sdeg2) + 3.0*s0*s0)
-                       / ((n*n - 1.0) * s0 * s0)
-                       - (-1.0/(n - 1)) * (-1.0/(n - 1))), 8) AS z_norm
-        FROM p JOIN d USING (bin), g
-        WHERE s0 >= 2 ORDER BY bin
-    """
-
-
-    sqls["variogram_fit"] = f"""
-        WITH vgm AS ({sqls["variogram"]}),
-        cand AS (SELECT unnest([50.0, 75.0, 100.0, 125.0, 150.0])
-                   AS vrange),
-        j AS (
-          SELECT vrange, CAST(n_pairs AS DOUBLE) AS w, gamma AS y,
-                 CASE WHEN (bin + 0.5) * 25.0 >= vrange THEN 1.0
-                      ELSE 1.5*(((bin + 0.5) * 25.0)/vrange)
-                           - 0.5*(((bin + 0.5) * 25.0)/vrange)
-                             *(((bin + 0.5) * 25.0)/vrange)
-                             *(((bin + 0.5) * 25.0)/vrange) END AS g
-          FROM vgm CROSS JOIN cand
-        ),
-        s AS (
-          SELECT vrange, sum(w) AS sw, sum(w*g) AS swg,
-                 sum(w*g*g) AS swgg, sum(w*y) AS swy,
-                 sum(w*g*y) AS swgy, sum(w*y*y) AS swyy
-          FROM j GROUP BY vrange
-        ),
-        c AS (
-          SELECT s.*,
-                 (swy*swgg - swg*swgy) / (sw*swgg - swg*swg) AS c0,
-                 (sw*swgy - swg*swy) / (sw*swgg - swg*swg) AS c1
-          FROM s
-        )
-        SELECT vrange, round(round(c0, 9), 5) AS nugget,
-               round(round(c1, 9), 5) AS psill,
-               round(round(swyy - 2.0*c0*swy - 2.0*c1*swgy + c0*c0*sw
-                           + 2.0*c0*c1*swg + c1*c1*swgg, 6), 2) AS wss
-        FROM c ORDER BY round(swyy - 2.0*c0*swy - 2.0*c1*swgy + c0*c0*sw
-                              + 2.0*c0*c1*swg + c1*c1*swgg, 6), vrange
-        LIMIT 1
-    """
-
-    huff_stores = ", ".join(f"({f}, {x}, {y}, {a!r})"
-                            for f, x, y, a in HUFF_STORES)
-    sqls["huff_model"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        demand AS (
-          SELECT CAST(gx AS BIGINT) * 100 + gy AS cid,
-                 CAST(gx AS BIGINT) AS x, CAST(gy AS BIGINT) AS y,
-                 x AS pop
-          FROM cells
-        ),
-        stores(fid, sx, sy, attr) AS (VALUES {huff_stores}),
-        j AS (
-          SELECT cid, pop, fid,
-                 (x - sx) * (x - sx) + (y - sy) * (y - sy) AS d2, attr
-          FROM demand CROSS JOIN stores
-        ),
-        j2 AS (
-          SELECT *,
-                 CASE WHEN d2 = 0 THEN NULL ELSE attr / d2 END AS w,
-                 sum(CASE WHEN d2 = 0 THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY cid) AS hit
-          FROM j
-        ),
-        p AS (
-          SELECT cid, pop, fid,
-            CASE WHEN hit > 0 THEN
-              CASE WHEN fid = min(CASE WHEN d2 = 0 THEN fid END)
-                            OVER (PARTITION BY cid)
-                   THEN 1.0 ELSE 0.0 END
-            ELSE w / sum(w) OVER (PARTITION BY cid) END AS p
-          FROM j2
-        ),
-        rk AS (
-          SELECT *, row_number() OVER (
-            PARTITION BY cid ORDER BY p DESC, fid ASC) AS rk
-          FROM p
-        )
-        SELECT CAST(fid AS BIGINT) AS fid,
-               round(sum(pop * p), 6) AS share,
-               sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS n_primary
-        FROM rk GROUP BY fid
-    """
-
-    sqls["quadrat_test"] = """
-        WITH pts AS (
-          SELECT (event_id * 7919) % 1200 AS x,
-                 (event_id * 104729) % 1200 AS y
-          FROM events
-        ),
-        q AS (
-          SELECT CAST((x - x % 150) / 150 AS BIGINT) AS qcx,
-                 CAST((y - y % 150) / 150 AS BIGINT) AS qcy,
-                 count(*) AS n
-          FROM pts
-          WHERE x >= 0 AND x < 1200 AND y >= 0 AND y < 1200
-          GROUP BY 1, 2
-        ),
-        g AS (SELECT sum(n) AS ntot, sum(n*n) AS sn2 FROM q)
-        SELECT ntot AS n_points, CAST(64 AS BIGINT) AS n_quadrats,
-               round(((sn2 - ntot * (ntot / 64)) / 64)
-                     / (ntot / 64), 9) AS vmr,
-               round(64 * sn2 / ntot - ntot, 9) AS chi2,
-               round(sqrt(2.0 * (64 * sn2 / ntot - ntot))
-                     - sqrt(2.0 * 63.0 - 1.0), 8) AS z
-        FROM g
-    """
-
-    sqls["std_ellipse"] = """
-        WITH pts AS (
-          SELECT event_id % 4 AS g,
-                 (event_id * 7919) % 36000 AS x,
-                 (event_id * 104729) % 17000 AS y
-          FROM events
-        ),
-        agg AS (
-          SELECT g, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                 SUM(x*x) AS sxx, SUM(y*y) AS syy, SUM(x*y) AS sxy
-          FROM pts GROUP BY g
-        ),
-        e1 AS (
-          SELECT g, n, sx/n AS mx, sy/n AS my,
-                 sxx - n*(sx/n)*(sx/n) AS cxx,
-                 syy - n*(sy/n)*(sy/n) AS cyy,
-                 sxy - n*(sx/n)*(sy/n) AS cxy
-          FROM agg
-        ),
-        e2 AS (
-          SELECT e1.*,
-                 CASE WHEN cxy <> 0.0 THEN
-                   ((cxx - cyy) + sqrt((cxx - cyy)*(cxx - cyy)
-                                       + 4.0*cxy*cxy)) / (2.0*cxy)
-                 ELSE 0.0 END AS t
-          FROM e1
-        ),
-        e3 AS (
-          SELECT e2.*, 1.0/sqrt(1.0 + t*t) AS c,
-                 t/sqrt(1.0 + t*t) AS s
-          FROM e2
-        )
-        SELECT CAST(g AS BIGINT) AS g, n,
-          round(mx, 9) AS mean_x, round(my, 9) AS mean_y,
-          round(sqrt((cxx + cyy)/n), 9) AS std_dist,
-          round(sqrt(2.0) * sqrt((c*c*cxx - 2.0*c*s*cxy + s*s*cyy)/n), 9)
-            AS sigma_x,
-          round(sqrt(2.0) * sqrt((s*s*cxx + 2.0*c*s*cxy + c*c*cyy)/n), 9)
-            AS sigma_y,
-          round(atan(t), 9) AS theta
-        FROM e3
-    """
-
-    sqls["gearys_c"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx FROM cells),
-        p AS (SELECT COUNT(*) AS s0, SUM((xi-xj)*(xi-xj)) AS sdd FROM pairs),
-        d AS (SELECT SUM(deg*deg) AS sdeg2 FROM
-              (SELECT gx, gy, COUNT(*) AS deg FROM pairs GROUP BY 1, 2))
-        SELECT n AS n_cells, s0,
-          round((n - 1.0) * sdd
-                / (2.0 * s0 * (sxx - n*(sx/n)*(sx/n))), 10) AS geary_c,
-          round(((n - 1.0) * sdd
-                 / (2.0 * s0 * (sxx - n*(sx/n)*(sx/n))) - 1.0)
-                / sqrt(((2.0*(2.0*s0) + 4.0*sdeg2) * (n - 1.0)
-                        - 4.0*s0*s0)
-                       / (2.0 * (n + 1.0) * s0 * s0)), 8) AS z_norm
-        FROM g, p, d
-    """
-    sqls["local_moran"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        nbr AS (SELECT gx, gy, SUM(xj) AS nsum, COUNT(*) AS deg
-                FROM pairs GROUP BY 1, 2),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx,
-                     SUM(x*x*x) AS sx3, SUM(x*x*x*x) AS sx4 FROM cells),
-        per AS (SELECT c.gx, c.gy, c.x,
-                       COALESCE(nb.nsum, 0) AS nsum,
-                       COALESCE(nb.deg, 0) AS deg
-                FROM cells c LEFT JOIN nbr nb USING (gx, gy)),
-        e AS (SELECT per.*, n, sx, sxx, sx3, sx4,
-                     sx/n AS m,
-                     (sxx - n*(sx/n)*(sx/n)) / n AS m2,
-                     ((sx4 - 4.0*(sx/n)*sx3 + 6.0*(sx/n)*(sx/n)*sxx
-                       - 3.0*n*(sx/n)*(sx/n)*(sx/n)*(sx/n)) / n)
-                     / (((sxx - n*(sx/n)*(sx/n)) / n)
-                        * ((sxx - n*(sx/n)*(sx/n)) / n)) AS b2
-              FROM per, g)
-        SELECT gx, gy, x, deg,
-          round((x - m) / m2 * (nsum - deg*m), 10) AS ii,
-          round((0 - deg) / (n - 1.0), 10) AS e_ii,
-          CASE WHEN deg > 0 THEN
-            round(((x - m) / m2 * (nsum - deg*m) - (0 - deg) / (n - 1.0))
-                  / sqrt(deg * (n - b2) / (n - 1.0)
-                         + (deg*deg - deg) * (2.0*b2 - n)
-                           / ((n - 1.0) * (n - 2.0))
-                         - (deg*deg) / ((n - 1.0) * (n - 1.0))), 8)
-          END AS z,
-          CASE WHEN deg = 0 THEN NULL ELSE
-            (CASE WHEN x * n >= sx THEN 'H' ELSE 'L' END) ||
-            (CASE WHEN nsum - deg*m >= 0 THEN 'H' ELSE 'L' END)
-          END AS quad
-        FROM e
-    """
-    sqls["local_geary"] = f"""
-        WITH cells AS ({_STAT_CELLS_SQL}),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        nbr AS (SELECT gx, gy, SUM(xj) AS nsum, SUM(xj*xj) AS nsum2,
-                       COUNT(*) AS deg
-                FROM pairs GROUP BY 1, 2),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx
-              FROM cells),
-        per AS (SELECT c.gx, c.gy, c.x,
-                       COALESCE(nb.nsum, 0) AS nsum,
-                       COALESCE(nb.nsum2, 0) AS nsum2,
-                       COALESCE(nb.deg, 0) AS deg
-                FROM cells c LEFT JOIN nbr nb USING (gx, gy)),
-        e AS (SELECT per.*, n, sx,
-                     sx/n AS m,
-                     (sxx - n*(sx/n)*(sx/n)) / n AS m2
-              FROM per, g)
-        SELECT gx, gy, x, deg,
-          round((deg*(x - m)*(x - m)
-                 - 2.0*(x - m)*(nsum - deg*m)
-                 + (nsum2 - 2.0*m*nsum + deg*m*m)) / m2, 8) AS ci,
-          round(deg*2.0*n / (n - 1.0), 8) AS e_ci,
-          CASE WHEN deg = 0 THEN NULL
-               WHEN (deg*(x - m)*(x - m)
-                     - 2.0*(x - m)*(nsum - deg*m)
-                     + (nsum2 - 2.0*m*nsum + deg*m*m)) / m2
-                    < deg*2.0*n / (n - 1.0)
-               THEN 'similar' ELSE 'dissimilar' END AS cluster
-        FROM e
-    """
-    sqls["join_counts"] = f"""
-        WITH cells0 AS ({_STAT_CELLS_SQL}),
-        cells AS (SELECT gx, gy, x % 2 AS x FROM cells0),
-        pairs AS ({_STAT_PAIRS_SQL}),
-        p AS (SELECT COUNT(*) AS s0, SUM(xi*xj) AS bb2,
-                     SUM((1-xi)*(1-xj)) AS ww2,
-                     SUM(xi*(1-xj) + (1-xi)*xj) AS bw2 FROM pairs),
-        d AS (SELECT SUM(deg*(deg-1)) AS k2 FROM
-              (SELECT gx, gy, COUNT(*) AS deg FROM pairs GROUP BY 1, 2)),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS nb FROM cells)
-        SELECT n AS n_cells, nb AS n_black,
-          CAST(bb2/2 AS BIGINT) AS jj_bb,
-          CAST(bw2/2 AS BIGINT) AS jj_bw,
-          CAST(ww2/2 AS BIGINT) AS jj_ww,
-          round((s0/2.0) * (nb/n) * (nb/n), 10) AS e_bb,
-          round((bb2/2.0 - (s0/2.0) * (nb/n) * (nb/n))
-                / sqrt((s0/2.0) * (nb/n) * (nb/n)
-                       + 2.0 * (k2/2.0) * (nb/n) * (nb/n) * (nb/n)
-                       - ((s0/2.0) + 2.0 * (k2/2.0))
-                         * (nb/n) * (nb/n) * (nb/n) * (nb/n)), 8) AS z_bb
-        FROM g, p, d
-    """
-
-    # kde_heatmap: the quartic kernel quanta are dyadic multiples of
-    # 1/4096 computed by the SAME helper the operator uses, so the VALUES
-    # list cannot drift; repr() round-trips dyadic doubles exactly.
-    from lib_gdal_spark.operators.spatialstats import kernel_quanta
-
-    _kq_vals = ", ".join(
-        f"({dx}, {dy}, {q!r})" for dx, dy, q in kernel_quanta(3)
-    )
-    # emerging_hotspots: per-bin Gi* (identical formula and degenerate
-    # guards, z rounded 10) -> MK over the rounded z series -> the same
-    # category CASE in the same order.
-    sqls["emerging_hotspots"] = """
-        WITH cells AS (
-          SELECT CAST((k1 - k1 % 6000) / 6000 AS INT) AS gx,
-                 CAST((k2 - k2 % 3000) / 3000 AS INT) AS gy,
-                 dayofyear(ts) AS tbin, COUNT(*) AS x
-          FROM (SELECT (event_id * 7919) % 36000 AS k1,
-                       (event_id * 104729) % 17000 AS k2, ts FROM events)
-          GROUP BY 1, 2, 3
-        ),
-        offs(dx, dy) AS (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,1),
-                                (1,-1),(1,0),(1,1)),
-        pairs AS (
-          SELECT a.gx, a.gy, a.tbin, b.x AS xj
-          FROM cells a, offs o
-          JOIN cells b ON b.gx = a.gx + o.dx AND b.gy = a.gy + o.dy
-           AND b.tbin = a.tbin
-        ),
-        agg AS (
-          SELECT gx, gy, tbin, SUM(xj) AS nsum, COUNT(*) AS deg
-          FROM pairs GROUP BY 1, 2, 3
-        ),
-        g AS (
-          SELECT tbin, COUNT(*) AS n, SUM(x) AS sx, SUM(x*x) AS sxx
-          FROM cells GROUP BY 1
-        ),
-        per AS (
-          SELECT c.gx, c.gy, c.tbin, c.x,
-                 COALESCE(a.deg, 0) + 1 AS w_i,
-                 COALESCE(a.nsum, 0) + c.x AS nbr_sum,
-                 g.n, g.sx, g.sxx
-          FROM cells c
-          LEFT JOIN agg a ON a.gx = c.gx AND a.gy = c.gy
-           AND a.tbin = c.tbin
-          JOIN g ON g.tbin = c.tbin
-        ),
-        zz AS (
-          SELECT gx, gy, tbin,
-            CASE WHEN sqrt(sxx/n - (sx/n)*(sx/n)) > 0
-                  AND n * w_i - w_i * w_i > 0
-                 THEN round((nbr_sum - (sx/n)*w_i)
-                      / (sqrt(sxx/n - (sx/n)*(sx/n))
-                         * sqrt(CAST(n*w_i - w_i*w_i AS DOUBLE)
-                                / (n - 1.0))), 10)
-                 ELSE 0.0 END AS z
-          FROM per
-        ),
-        s AS (
-          SELECT a.gx, a.gy,
-                 SUM(CASE WHEN b.z > a.z THEN 1
-                          WHEN b.z < a.z THEN -1 ELSE 0 END) AS s
-          FROM zz a JOIN zz b
-            ON a.gx = b.gx AND a.gy = b.gy AND a.tbin < b.tbin
-          GROUP BY 1, 2
-        ),
-        nb AS (SELECT gx, gy, COUNT(*) AS n_bins FROM zz GROUP BY 1, 2),
-        ties AS (
-          SELECT gx, gy, SUM(t * (t - 1) * (2 * t + 5)) AS tt
-          FROM (SELECT gx, gy, z, COUNT(*) AS t FROM zz GROUP BY 1, 2, 3)
-          GROUP BY 1, 2
-        ),
-        mkj AS (
-          SELECT nb.gx, nb.gy, nb.n_bins, COALESCE(s.s, 0) AS s,
-                 (nb.n_bins * (nb.n_bins - 1) * (2 * nb.n_bins + 5)
-                  - ties.tt) / 18.0 AS var
-          FROM nb
-          LEFT JOIN s ON s.gx = nb.gx AND s.gy = nb.gy
-          JOIN ties ON ties.gx = nb.gx AND ties.gy = nb.gy
-        ),
-        mk AS (
-          SELECT gx, gy, n_bins,
-                 CASE WHEN var > 0 AND s > 0 THEN (s - 1) / sqrt(var)
-                      WHEN var > 0 AND s < 0 THEN (s + 1) / sqrt(var)
-                      ELSE 0.0 END AS z_raw
-          FROM mkj
-        ),
-        lastb AS (SELECT max(tbin) AS lb FROM zz),
-        hotagg AS (
-          SELECT gx, gy,
-                 SUM(CASE WHEN z > 1.645 THEN 1 ELSE 0 END) AS n_hot,
-                 MAX(CASE WHEN tbin = (SELECT lb FROM lastb)
-                           AND z > 1.645 THEN 1 ELSE 0 END) AS hot_last
-          FROM zz GROUP BY 1, 2
-        )
-        SELECT m.gx, m.gy, CAST(m.n_bins AS BIGINT) AS n_bins,
-               CAST(h.n_hot AS BIGINT) AS n_hot,
-               round(m.z_raw, 8) AS mk_z,
-               CASE WHEN h.hot_last = 1 AND h.n_hot = 1 THEN 'new'
-                    WHEN h.n_hot >= 0.9 * m.n_bins
-                         AND m.z_raw > 1.959964 THEN 'intensifying'
-                    WHEN h.n_hot >= 0.9 * m.n_bins
-                         AND m.z_raw < -1.959964 THEN 'diminishing'
-                    WHEN h.n_hot >= 0.9 * m.n_bins THEN 'persistent'
-                    WHEN h.hot_last = 1 THEN 'sporadic'
-                    WHEN h.n_hot > 0 THEN 'historic'
-                    ELSE 'none' END AS category
-        FROM mk m JOIN hotagg h ON h.gx = m.gx AND h.gy = m.gy
-    """
-
-
-    # theil_sen: identical pairwise-slope divisions and the same
-    # (slope, ti, tj) order-statistic median selection.
-    sqls["theil_sen"] = """
-        WITH cells AS (
-          SELECT CAST(((event_id * 7919) % 36000
-                       - (event_id * 7919) % 36000 % 6000) / 6000
-                      AS INT) AS gx,
-                 CAST(((event_id * 104729) % 17000
-                       - (event_id * 104729) % 17000 % 3000) / 3000
-                      AS INT) AS gy,
-                 dayofyear(ts) AS tbin, count(*) AS x
-          FROM events GROUP BY 1, 2, 3
-        ),
-        pr AS (
-          SELECT a.gx, a.gy, a.tbin AS ti, b.tbin AS tj,
-                 (b.x - a.x) / CAST(b.tbin - a.tbin AS DOUBLE) AS s
-          FROM cells a JOIN cells b
-            ON a.gx = b.gx AND a.gy = b.gy AND a.tbin < b.tbin
-        ),
-        rk AS (
-          SELECT gx, gy, s,
-                 row_number() OVER (PARTITION BY gx, gy
-                                    ORDER BY s, ti, tj) AS r,
-                 count(*) OVER (PARTITION BY gx, gy) AS m
-          FROM pr
-        ),
-        med AS (
-          SELECT gx, gy, m,
-                 SUM(s) AS ssum, count(*) AS k
-          FROM rk
-          WHERE (m % 2 = 1 AND r * 2 = m + 1)
-             OR (m % 2 = 0 AND (r * 2 = m OR r * 2 = m + 2))
-          GROUP BY 1, 2, 3
-        ),
-        nb AS (SELECT gx, gy, count(*) AS n_bins FROM cells GROUP BY 1, 2)
-        SELECT med.gx, med.gy, CAST(nb.n_bins AS BIGINT) AS n_bins,
-               CAST(med.m AS BIGINT) AS n_pairs,
-               round(med.ssum / med.k, 9) AS slope
-        FROM med JOIN nb ON nb.gx = med.gx AND nb.gy = med.gy
-    """
-
-    sqls["mann_kendall"] = """
-        WITH cells AS (
-          SELECT CAST((k1 - k1 % 6000) / 6000 AS INT) AS gx,
-                 CAST((k2 - k2 % 3000) / 3000 AS INT) AS gy,
-                 dayofyear(ts) AS tbin, COUNT(*) AS x
-          FROM (SELECT (event_id * 7919) % 36000 AS k1,
-                       (event_id * 104729) % 17000 AS k2, ts FROM events)
-          GROUP BY 1, 2, 3
-        ),
-        s AS (
-          SELECT a.gx, a.gy,
-                 SUM(CASE WHEN b.x > a.x THEN 1
-                          WHEN b.x < a.x THEN -1 ELSE 0 END) AS s
-          FROM cells a JOIN cells b
-            ON a.gx = b.gx AND a.gy = b.gy AND a.tbin < b.tbin
-          GROUP BY 1, 2
-        ),
-        n AS (SELECT gx, gy, COUNT(*) AS n_bins FROM cells GROUP BY 1, 2),
-        ties AS (
-          SELECT gx, gy, SUM(t * (t - 1) * (2 * t + 5)) AS tt
-          FROM (SELECT gx, gy, x, COUNT(*) AS t FROM cells GROUP BY 1, 2, 3)
-          GROUP BY 1, 2
-        ),
-        j AS (
-          SELECT n.gx, n.gy, n.n_bins, COALESCE(s.s, 0) AS s,
-                 (n.n_bins * (n.n_bins - 1) * (2 * n.n_bins + 5)
-                  - ties.tt) / 18.0 AS var
-          FROM n
-          LEFT JOIN s ON s.gx = n.gx AND s.gy = n.gy
-          JOIN ties ON ties.gx = n.gx AND ties.gy = n.gy
-        ),
-        zz AS (
-          SELECT gx, gy, n_bins, s,
-                 CASE WHEN var > 0 AND s > 0 THEN (s - 1) / sqrt(var)
-                      WHEN var > 0 AND s < 0 THEN (s + 1) / sqrt(var)
-                      ELSE 0.0 END AS z_raw
-          FROM j
-        )
-        SELECT gx, gy, CAST(n_bins AS BIGINT) AS n_bins,
-               CAST(s AS BIGINT) AS s, round(z_raw, 8) AS z,
-               CASE WHEN z_raw > 1.959964 THEN 'increasing'
-                    WHEN z_raw < -1.959964 THEN 'decreasing'
-                    ELSE 'no_trend' END AS trend
-        FROM zz
-    """
-
-    sqls["kde_heatmap"] = f"""
-        WITH kq(dx, dy, q) AS (VALUES {_kq_vals}),
-        cnts AS (
-          SELECT CAST((k1 - k1 % 100) / 100 AS INT) AS px,
-                 CAST((k2 - k2 % 100) / 100 AS INT) AS py,
-                 COUNT(*) AS cnt
-          FROM (SELECT (event_id * 7919) % 36000 AS k1,
-                       (event_id * 104729) % 17000 AS k2 FROM events)
-          GROUP BY 1, 2
-        )
-        SELECT c.px + k.dx AS px, c.py + k.dy AS py,
-               SUM(c.cnt * k.q) AS density
-        FROM cnts c CROSS JOIN kq k
-        GROUP BY 1, 2
-    """
-
-    # ripley_k: BRUTE-FORCE ordered-pair counts (n^2 self-join at sf0.01)
-    # against the engine's 3x3 cell-covering join — equality proves the
-    # covering join complete, the same proof pattern as s2_ring_pairs.
-    sqls["ripley_k"] = f"""
-        WITH pts AS (
-          SELECT pid, lon AS x, lat AS y FROM ({_POINTS_SQL})
-          WHERE lon >= 0 AND lon < 40 AND lat >= 0 AND lat < 40
-        ),
-        nn AS (SELECT COUNT(*) AS n FROM pts),
-        pr AS (
-          SELECT (a.x - b.x)*(a.x - b.x) + (a.y - b.y)*(a.y - b.y) AS d2
-          FROM pts a JOIN pts b ON a.pid <> b.pid
-        ),
-        c AS (
-          SELECT COALESCE(SUM(CASE WHEN d2 < 1.0 THEN 1 ELSE 0 END), 0) AS c0,
-                 COALESCE(SUM(CASE WHEN d2 < 4.0 THEN 1 ELSE 0 END), 0) AS c1,
-                 COALESCE(SUM(CASE WHEN d2 < 25.0 THEN 1 ELSE 0 END), 0) AS c2
-          FROM pr
-        ),
-        u AS (
-          SELECT 1.0 AS r, c0 AS n_pairs FROM c
-          UNION ALL SELECT 2.0, c1 FROM c
-          UNION ALL SELECT 5.0, c2 FROM c
-        )
-        SELECT r, n_pairs,
-          round(1600.0 * n_pairs / (n * (n - 1.0)), 9) AS k_hat,
-          round(sqrt(1600.0 * n_pairs / (n * (n - 1.0)) / pi()), 9) AS l_hat
-        FROM u, nn
-    """
-
-    # cross_k: brute-force n_a x n_b pair counts between the even/odd
-    # pid halves — equality proves the bivariate covering join complete.
-    sqls["cross_k"] = f"""
-        WITH pts AS (
-          SELECT pid, lon AS x, lat AS y FROM ({_POINTS_SQL})
-          WHERE lon >= 0 AND lon < 40 AND lat >= 0 AND lat < 40
-        ),
-        pa AS (SELECT * FROM pts WHERE pid % 2 = 0),
-        pb AS (SELECT * FROM pts WHERE pid % 2 = 1),
-        nn AS (SELECT (SELECT COUNT(*) FROM pa) AS na,
-                      (SELECT COUNT(*) FROM pb) AS nb),
-        pr AS (
-          SELECT (a.x - b.x)*(a.x - b.x) + (a.y - b.y)*(a.y - b.y) AS d2
-          FROM pa a CROSS JOIN pb b
-        ),
-        c AS (
-          SELECT COALESCE(SUM(CASE WHEN d2 < 1.0 THEN 1 ELSE 0 END), 0) AS c0,
-                 COALESCE(SUM(CASE WHEN d2 < 4.0 THEN 1 ELSE 0 END), 0) AS c1,
-                 COALESCE(SUM(CASE WHEN d2 < 25.0 THEN 1 ELSE 0 END), 0) AS c2
-          FROM pr
-        ),
-        u AS (
-          SELECT 1.0 AS r, c0 AS n_pairs FROM c
-          UNION ALL SELECT 2.0, c1 FROM c
-          UNION ALL SELECT 5.0, c2 FROM c
-        )
-        SELECT r, n_pairs,
-          round(1600.0 * n_pairs / (na * nb * 1.0), 9) AS k_ab,
-          round(sqrt(1600.0 * n_pairs / (na * nb * 1.0) / pi()), 9) AS l_ab
-        FROM u, nn
-    """
-
-    # two_step_fca: brute-force radius joins both ways, identical
-    # half-up 1e-9 ratio quantization, exact int access sums.
-    sqls["two_step_fca"] = f"""
-        WITH pts AS (
-          SELECT pid, lon AS x, lat AS y FROM ({_POINTS_SQL})
-          WHERE lon >= 0 AND lon < 40 AND lat >= 0 AND lat < 40
-        ),
-        sup AS (SELECT pid AS spid, x, y, pid % 5 + 1 AS s
-                FROM pts WHERE pid % 10 = 0),
-        dem AS (SELECT pid AS dpid, x, y, pid % 3 + 1 AS d
-                FROM pts WHERE pid % 10 <> 0),
-        pr AS (
-          SELECT sup.spid, sup.s, dem.dpid, dem.d
-          FROM sup JOIN dem
-            ON (sup.x - dem.x)*(sup.x - dem.x)
-             + (sup.y - dem.y)*(sup.y - dem.y) <= 25.0
-        ),
-        ratio AS (
-          SELECT spid,
-                 CAST(floor(min(s) / sum(d) * 1e9 + 0.5) AS BIGINT)
-                   AS r_units
-          FROM pr GROUP BY spid
-        ),
-        acc AS (
-          SELECT pr.dpid, SUM(ratio.r_units) AS access_units
-          FROM pr JOIN ratio ON ratio.spid = pr.spid
-          GROUP BY pr.dpid
-        )
-        SELECT dem.dpid AS pid,
-               CAST(COALESCE(acc.access_units, 0) AS BIGINT)
-                 AS access_units,
-               round(COALESCE(acc.access_units, 0) / 1e9, 9) AS access
-        FROM dem LEFT JOIN acc ON acc.dpid = dem.dpid
-    """
-
-    # colocation_quotient: brute-force NN with the identical
-    # (d2, neighbour-pid) arg-min tie-break, exact pair counts.
-    sqls["colocation_quotient"] = f"""
-        WITH pts AS (
-          SELECT pid, lon AS x, lat AS y,
-                 'c' || (pid % 3) AS cat
-          FROM ({_POINTS_SQL})
-          WHERE lon >= 0 AND lon < 40 AND lat >= 0 AND lat < 40
-        ),
-        nt AS (SELECT count(*) AS n FROM pts),
-        nnp AS (
-          SELECT pid, cat_a, cat_b FROM (
-            SELECT a.pid, a.cat AS cat_a, b.cat AS cat_b,
-                   row_number() OVER (
-                     PARTITION BY a.pid
-                     ORDER BY (a.x - b.x)*(a.x - b.x)
-                            + (a.y - b.y)*(a.y - b.y), b.pid) AS rn
-            FROM pts a JOIN pts b ON a.pid <> b.pid
-          ) WHERE rn = 1
-        ),
-        cats AS (SELECT cat, count(*) AS n FROM pts GROUP BY cat),
-        pair AS (
-          SELECT cat_a, cat_b, count(*) AS c_ab
-          FROM nnp GROUP BY cat_a, cat_b
-        )
-        SELECT p.cat_a, p.cat_b, CAST(p.c_ab AS BIGINT) AS c_ab,
-               CAST(ca.n AS BIGINT) AS n_a, CAST(cb.n AS BIGINT) AS n_b,
-               round((p.c_ab / ca.n)
-                     / ((CASE WHEN p.cat_a = p.cat_b THEN cb.n - 1
-                              ELSE cb.n END)
-                        / ((SELECT n FROM nt) - 1.0)), 9) AS clq
-        FROM pair p
-        JOIN cats ca ON ca.cat = p.cat_a
-        JOIN cats cb ON cb.cat = p.cat_b
     """
 
     # str_partition: the same ranks/cuts via two row_number windows and
@@ -15990,73 +14464,6 @@ def oracle_sql() -> dict[str, str]:
                round(COALESCE(a.length_units, 0) / 1e9
                      / {_ld_area!r}, 9) AS density
         FROM cells c LEFT JOIN agg a ON a.ci = c.ci AND a.cj = c.cj
-    """
-
-    # knox_test: brute-force all unordered pairs with exact microsecond
-    # time arithmetic; identical final float expressions.
-    sqls["knox_test"] = f"""
-        WITH pts AS (
-          SELECT event_id AS pid,
-                 ((event_id * 7919) % 36000) / 100.0 - 180.0 AS x,
-                 ((event_id * 104729) % 17000) / 100.0 - 85.0 AS y,
-                 epoch_us(ts) AS t
-          FROM events
-          WHERE ((event_id * 7919) % 36000) / 100.0 - 180.0 >= 0
-            AND ((event_id * 7919) % 36000) / 100.0 - 180.0 < 40
-            AND ((event_id * 104729) % 17000) / 100.0 - 85.0 >= 0
-            AND ((event_id * 104729) % 17000) / 100.0 - 85.0 < 40
-        ),
-        nn AS (SELECT count(*) AS n FROM pts),
-        pr AS (
-          SELECT CASE WHEN (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-                           <= 4.0 THEN 1 ELSE 0 END AS sp,
-                 CASE WHEN abs(a.t - b.t) <= {2 * 86400 * 10**6}
-                      THEN 1 ELSE 0 END AS tp
-          FROM pts a JOIN pts b ON a.pid < b.pid
-        ),
-        agg AS (
-          SELECT SUM(sp) AS space_pairs, SUM(tp) AS time_pairs,
-                 SUM(sp * tp) AS st_pairs, COUNT(*) AS total_pairs
-          FROM pr
-        )
-        SELECT CAST(n AS BIGINT) AS n,
-               CAST(space_pairs AS BIGINT) AS space_pairs,
-               CAST(time_pairs AS BIGINT) AS time_pairs,
-               CAST(st_pairs AS BIGINT) AS st_pairs,
-               round(space_pairs * time_pairs / total_pairs, 9)
-                 AS expected,
-               round((st_pairs - space_pairs * time_pairs / total_pairs)
-                     / sqrt(space_pairs * time_pairs / total_pairs), 9)
-                 AS z
-        FROM agg, nn
-    """
-
-    # clark_evans: brute-force per-point NN min, the identical integer-
-    # micrometre quantization, and the same final float expressions.
-    sqls["clark_evans"] = f"""
-        WITH pts AS (
-          SELECT pid, lon AS x, lat AS y FROM ({_POINTS_SQL})
-          WHERE lon >= 0 AND lon < 40 AND lat >= 0 AND lat < 40
-        ),
-        nnd AS (
-          SELECT a.pid,
-                 min((a.x - b.x)*(a.x - b.x) + (a.y - b.y)*(a.y - b.y)) AS d2
-          FROM pts a JOIN pts b ON a.pid <> b.pid
-          GROUP BY a.pid
-        ),
-        agg AS (
-          SELECT COUNT(*) AS n,
-                 SUM(CAST(round(sqrt(d2) * 1e6, 0) AS BIGINT)) AS sum_q
-          FROM nnd
-        )
-        SELECT CAST(n AS BIGINT) AS n,
-               round(sum_q / n / 1e6, 9) AS mean_nn,
-               round(0.5 * sqrt(1600.0 / n), 9) AS expected_nn,
-               round((sum_q / n / 1e6) / (0.5 * sqrt(1600.0 / n)), 9)
-                 AS r_index,
-               round(((sum_q / n / 1e6) - 0.5 * sqrt(1600.0 / n))
-                     / (0.26136 / sqrt(n * n / 1600.0)), 9) AS z
-        FROM agg
     """
 
     # ------------------------------------------------------------------
@@ -16157,917 +14564,6 @@ def oracle_sql() -> dict[str, str]:
         FROM sel
     """
 
-
-    # discrete Hausdorff: pure min/max SQL over the rounded-distance
-    # lattice, explicit consecutive-track pairs
-    sqls["hausdorff_pairs"] = """
-        WITH pts AS (
-          SELECT CAST((event_id - event_id % 20) / 20 AS BIGINT) AS tid,
-                 CAST((event_id * 7919) % 1000 AS DOUBLE) AS x,
-                 CAST((event_id * 104729) % 1000 AS DOUBLE) AS y
-          FROM events WHERE event_id < 400
-        ),
-        prs AS (SELECT gs.i AS tid_a, gs.i + 1 AS tid_b
-                FROM generate_series(0, 18) gs(i)),
-        j AS (
-          SELECT p.tid_a, p.tid_b, a.x AS xa, a.y AS ya,
-                 b.x AS xb, b.y AS yb,
-                 round(sqrt((a.x - b.x) * (a.x - b.x)
-                            + (a.y - b.y) * (a.y - b.y)), 9) AS d
-          FROM prs p
-          JOIN pts a ON a.tid = p.tid_a
-          JOIN pts b ON b.tid = p.tid_b
-        ),
-        fwd AS (
-          SELECT tid_a, tid_b, MAX(dmin) AS h_ab FROM (
-            SELECT tid_a, tid_b, xa, ya, MIN(d) AS dmin
-            FROM j GROUP BY tid_a, tid_b, xa, ya)
-          GROUP BY tid_a, tid_b
-        ),
-        bwd AS (
-          SELECT tid_a, tid_b, MAX(dmin) AS h_ba FROM (
-            SELECT tid_a, tid_b, xb, yb, MIN(d) AS dmin
-            FROM j GROUP BY tid_a, tid_b, xb, yb)
-          GROUP BY tid_a, tid_b
-        )
-        SELECT f.tid_a, f.tid_b, f.h_ab, b.h_ba,
-               greatest(f.h_ab, b.h_ba) AS hausdorff
-        FROM fwd f JOIN bwd b ON b.tid_a = f.tid_a AND b.tid_b = f.tid_b
-    """
-
-
-    sqls["circular_stats"] = """
-        WITH pts AS (
-          SELECT CAST((event_id - event_id % 12) / 12 AS BIGINT) AS tid,
-                 event_id % 12 AS vi,
-                 (event_id * 7919) % 500 AS x,
-                 (event_id * 104729) % 500 AS y
-          FROM events WHERE event_id < 240
-        ),
-        st AS (
-          SELECT tid,
-                 lead(x) OVER (PARTITION BY tid ORDER BY vi) - x AS dx,
-                 lead(y) OVER (PARTITION BY tid ORDER BY vi) - y AS dy
-          FROM pts
-        ),
-        uv AS (
-          SELECT CAST(round(CAST(dx AS DOUBLE)
-                 / sqrt(CAST(dx*dx + dy*dy AS DOUBLE)) * 1e12)
-                 AS HUGEINT) AS uq,
-                 CAST(round(CAST(dy AS DOUBLE)
-                 / sqrt(CAST(dx*dx + dy*dy AS DOUBLE)) * 1e12)
-                 AS HUGEINT) AS vq
-          FROM st WHERE dx IS NOT NULL AND (dx <> 0 OR dy <> 0)
-        ),
-        agg AS (SELECT COUNT(*) AS n, SUM(uq) AS u, SUM(vq) AS v FROM uv)
-        SELECT CAST(n AS BIGINT) AS n_steps,
-               round(degrees(atan2(CAST(v AS DOUBLE) / 1e12,
-                                   CAST(u AS DOUBLE) / 1e12)), 9)
-                 AS mean_deg,
-               round(sqrt((CAST(u AS DOUBLE) / 1e12)
-                          * (CAST(u AS DOUBLE) / 1e12)
-                          + (CAST(v AS DOUBLE) / 1e12)
-                          * (CAST(v AS DOUBLE) / 1e12)) / n, 9) AS r_len,
-               round(1.0 - sqrt((CAST(u AS DOUBLE) / 1e12)
-                          * (CAST(u AS DOUBLE) / 1e12)
-                          + (CAST(v AS DOUBLE) / 1e12)
-                          * (CAST(v AS DOUBLE) / 1e12)) / n, 9)
-                 AS circ_var,
-               round(CAST(n AS DOUBLE)
-                     * (sqrt((CAST(u AS DOUBLE) / 1e12)
-                             * (CAST(u AS DOUBLE) / 1e12)
-                             + (CAST(v AS DOUBLE) / 1e12)
-                             * (CAST(v AS DOUBLE) / 1e12)) / n)
-                     * (sqrt((CAST(u AS DOUBLE) / 1e12)
-                             * (CAST(u AS DOUBLE) / 1e12)
-                             + (CAST(v AS DOUBLE) / 1e12)
-                             * (CAST(v AS DOUBLE) / 1e12)) / n), 9)
-                 AS rayleigh_z
-        FROM agg
-    """
-
-
-    # DTW: anti-diagonal unroll — diag_s cells take cost + least of the
-    # up/left cells (diag_{s-1}) and the diagonal cell (diag_{s-2});
-    # 4611686018427387904 = 2^62 sentinel (never added, only compared)
-    sqls["dtw_pairs"] = """
-        WITH pts AS (
-          SELECT CAST((event_id - event_id % 12) / 12 AS BIGINT) AS tid,
-                 event_id % 12 AS vi,
-                 (event_id * 7919) % 500 AS x,
-                 (event_id * 104729) % 500 AS y
-          FROM events WHERE event_id < 240
-        ),
-        prs AS (SELECT gs.i AS tid_a, gs.i + 1 AS tid_b
-                FROM generate_series(0, 18) gs(i)),
-        cells AS MATERIALIZED (
-          SELECT p.tid_a * 100 + p.tid_b AS pair, a.vi AS i, b.vi AS j,
-                 (a.x - b.x) * (a.x - b.x)
-                 + (a.y - b.y) * (a.y - b.y) AS cost
-          FROM prs p
-          JOIN pts a ON a.tid = p.tid_a
-          JOIN pts b ON b.tid = p.tid_b
-        ),
-        diag0 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost AS d
-          FROM cells c
-          WHERE c.i + c.j = 0
-        ),
-        diag1 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag0 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag0 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          WHERE c.i + c.j = 1
-        ),
-        diag2 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag1 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag1 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag0 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 2
-        ),
-        diag3 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag2 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag2 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag1 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 3
-        ),
-        diag4 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag3 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag3 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag2 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 4
-        ),
-        diag5 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag4 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag4 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag3 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 5
-        ),
-        diag6 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag5 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag5 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag4 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 6
-        ),
-        diag7 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag6 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag6 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag5 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 7
-        ),
-        diag8 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag7 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag7 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag6 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 8
-        ),
-        diag9 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag8 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag8 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag7 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 9
-        ),
-        diag10 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag9 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag9 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag8 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 10
-        ),
-        diag11 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag10 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag10 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag9 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 11
-        ),
-        diag12 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag11 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag11 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag10 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 12
-        ),
-        diag13 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag12 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag12 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag11 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 13
-        ),
-        diag14 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag13 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag13 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag12 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 14
-        ),
-        diag15 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag14 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag14 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag13 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 15
-        ),
-        diag16 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag15 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag15 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag14 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 16
-        ),
-        diag17 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag16 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag16 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag15 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 17
-        ),
-        diag18 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag17 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag17 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag16 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 18
-        ),
-        diag19 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag18 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag18 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag17 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 19
-        ),
-        diag20 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag19 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag19 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag18 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 20
-        ),
-        diag21 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag20 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag20 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag19 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 21
-        ),
-        diag22 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost + least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904)) AS d
-          FROM cells c
-          LEFT JOIN diag21 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN diag21 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN diag20 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 22
-        )
-        SELECT CAST((pair - pair % 100) / 100 AS BIGINT) AS tid_a,
-               CAST(pair % 100 AS BIGINT) AS tid_b,
-               CAST(12 AS BIGINT) AS n_a, CAST(12 AS BIGINT) AS n_b,
-               CAST(d AS BIGINT) AS dtw_cost
-        FROM diag22
-        WHERE i = 11 AND j = 11
-    """
-
-
-    # discrete Frechet: same anti-diagonal unroll as DTW with
-    # max(cost, min(preds)); boundary cells take the single available
-    # predecessor via the 2^62 sentinel
-    sqls["frechet_pairs"] = """
-        WITH fpts AS (
-          SELECT CAST((event_id - event_id % 12) / 12 AS BIGINT) AS tid,
-                 event_id % 12 AS vi,
-                 (event_id * 7919) % 500 AS x,
-                 (event_id * 104729) % 500 AS y
-          FROM events WHERE event_id < 240
-        ),
-        fprs AS (SELECT gs.i AS tid_a, gs.i + 1 AS tid_b
-                 FROM generate_series(0, 18) gs(i)),
-        fcells AS MATERIALIZED (
-          SELECT p.tid_a * 100 + p.tid_b AS pair, a.vi AS i, b.vi AS j,
-                 (a.x - b.x) * (a.x - b.x)
-                 + (a.y - b.y) * (a.y - b.y) AS cost
-          FROM fprs p
-          JOIN fpts a ON a.tid = p.tid_a
-          JOIN fpts b ON b.tid = p.tid_b
-        ),
-        fdg0 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, c.cost AS d
-          FROM fcells c
-          WHERE c.i + c.j = 0
-        ),
-        fdg1 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg0 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg0 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          WHERE c.i + c.j = 1
-        ),
-        fdg2 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg1 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg1 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg0 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 2
-        ),
-        fdg3 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg2 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg2 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg1 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 3
-        ),
-        fdg4 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg3 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg3 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg2 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 4
-        ),
-        fdg5 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg4 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg4 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg3 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 5
-        ),
-        fdg6 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg5 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg5 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg4 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 6
-        ),
-        fdg7 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg6 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg6 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg5 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 7
-        ),
-        fdg8 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg7 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg7 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg6 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 8
-        ),
-        fdg9 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg8 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg8 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg7 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 9
-        ),
-        fdg10 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg9 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg9 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg8 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 10
-        ),
-        fdg11 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg10 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg10 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg9 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 11
-        ),
-        fdg12 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg11 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg11 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg10 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 12
-        ),
-        fdg13 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg12 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg12 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg11 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 13
-        ),
-        fdg14 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg13 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg13 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg12 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 14
-        ),
-        fdg15 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg14 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg14 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg13 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 15
-        ),
-        fdg16 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg15 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg15 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg14 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 16
-        ),
-        fdg17 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg16 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg16 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg15 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 17
-        ),
-        fdg18 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg17 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg17 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg16 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 18
-        ),
-        fdg19 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg18 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg18 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg17 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 19
-        ),
-        fdg20 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg19 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg19 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg18 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 20
-        ),
-        fdg21 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg20 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg20 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg19 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 21
-        ),
-        fdg22 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.i = 0 AND c.j = 0 THEN c.cost ELSE greatest(c.cost, least(coalesce(up.d, 4611686018427387904), coalesce(lf.d, 4611686018427387904), coalesce(dg.d, 4611686018427387904))) END AS d
-          FROM fcells c
-          LEFT JOIN fdg21 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN fdg21 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN fdg20 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 22
-        )
-        SELECT CAST((pair - pair % 100) / 100 AS BIGINT) AS tid_a,
-               CAST(pair % 100 AS BIGINT) AS tid_b,
-               CAST(12 AS BIGINT) AS n_a, CAST(12 AS BIGINT) AS n_b,
-               CAST(d AS BIGINT) AS frechet_d2
-        FROM fdg22
-        WHERE i = 11 AND j = 11
-    """
-
-    # LCSS: 1-based cells, zero boundary, +1 on an integer eps^2 match
-    sqls["lcss_pairs"] = """
-        WITH lpts AS (
-          SELECT CAST((event_id - event_id % 12) / 12 AS BIGINT) AS tid,
-                 event_id % 12 + 1 AS vi,
-                 (event_id * 7919) % 500 AS x,
-                 (event_id * 104729) % 500 AS y
-          FROM events WHERE event_id < 240
-        ),
-        lprs AS (SELECT gs.i AS tid_a, gs.i + 1 AS tid_b
-                 FROM generate_series(0, 18) gs(i)),
-        lcells AS MATERIALIZED (
-          SELECT p.tid_a * 100 + p.tid_b AS pair, a.vi AS i, b.vi AS j,
-                 ((a.x - b.x) * (a.x - b.x)
-                  + (a.y - b.y) * (a.y - b.y)) <= 10000 AS hit
-          FROM lprs p
-          JOIN lpts a ON a.tid = p.tid_a
-          JOIN lpts b ON b.tid = p.tid_b
-        ),
-        ldg2 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN 0 + 1 ELSE greatest(0, 0) END AS d
-          FROM lcells c
-          WHERE c.i + c.j = 2
-        ),
-        ldg3 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN 0 + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg2 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg2 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          WHERE c.i + c.j = 3
-        ),
-        ldg4 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg3 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg3 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg2 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 4
-        ),
-        ldg5 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg4 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg4 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg3 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 5
-        ),
-        ldg6 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg5 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg5 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg4 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 6
-        ),
-        ldg7 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg6 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg6 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg5 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 7
-        ),
-        ldg8 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg7 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg7 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg6 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 8
-        ),
-        ldg9 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg8 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg8 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg7 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 9
-        ),
-        ldg10 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg9 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg9 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg8 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 10
-        ),
-        ldg11 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg10 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg10 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg9 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 11
-        ),
-        ldg12 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg11 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg11 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg10 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 12
-        ),
-        ldg13 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg12 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg12 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg11 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 13
-        ),
-        ldg14 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg13 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg13 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg12 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 14
-        ),
-        ldg15 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg14 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg14 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg13 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 15
-        ),
-        ldg16 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg15 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg15 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg14 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 16
-        ),
-        ldg17 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg16 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg16 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg15 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 17
-        ),
-        ldg18 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg17 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg17 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg16 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 18
-        ),
-        ldg19 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg18 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg18 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg17 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 19
-        ),
-        ldg20 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg19 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg19 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg18 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 20
-        ),
-        ldg21 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg20 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg20 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg19 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 21
-        ),
-        ldg22 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg21 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg21 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg20 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 22
-        ),
-        ldg23 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg22 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg22 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg21 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 23
-        ),
-        ldg24 AS MATERIALIZED (
-          SELECT c.pair, c.i, c.j, CASE WHEN c.hit THEN coalesce(dg.d, 0) + 1 ELSE greatest(coalesce(up.d, 0), coalesce(lf.d, 0)) END AS d
-          FROM lcells c
-          LEFT JOIN ldg23 up ON up.pair = c.pair AND up.i = c.i - 1
-            AND up.j = c.j
-          LEFT JOIN ldg23 lf ON lf.pair = c.pair AND lf.i = c.i
-            AND lf.j = c.j - 1
-          LEFT JOIN ldg22 dg ON dg.pair = c.pair AND dg.i = c.i - 1
-            AND dg.j = c.j - 1
-          WHERE c.i + c.j = 24
-        )
-        SELECT CAST((pair - pair % 100) / 100 AS BIGINT) AS tid_a,
-               CAST(pair % 100 AS BIGINT) AS tid_b,
-               CAST(12 AS BIGINT) AS n_a, CAST(12 AS BIGINT) AS n_b,
-               CAST(d AS BIGINT) AS lcss_len,
-               round(CAST(d AS DOUBLE) / 12.0, 9) AS lcss_sim
-        FROM ldg24
-        WHERE i = 12 AND j = 12
-    """
 
     sqls["edit_distance"] = """
         SELECT doc_id,
@@ -17532,56 +15028,6 @@ def oracle_sql() -> dict[str, str]:
                    i1 ASC, i2 ASC, i3 ASC) = 1
     """
 
-
-    # lees_l: same lattice derivation as morans_i, both variables.
-    sqls["lees_l"] = """
-        WITH base AS (
-          SELECT (event_id * 7919) % 36000 AS k1,
-                 (event_id * 104729) % 17000 AS k2,
-                 event_id
-          FROM events
-        ),
-        lcells AS (
-          SELECT CAST((k1 - k1 % 1000) / 1000 AS INT) AS gx,
-                 CAST((k2 - k2 % 1000) / 1000 AS INT) AS gy,
-                 COUNT(*) AS x,
-                 SUM(CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END) AS y
-          FROM base GROUP BY 1, 2
-        ),
-        g AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy
-              FROM lcells),
-        c AS (
-          SELECT gx, gy, g.n * x - g.sx AS dx, g.n * y - g.sy AS dy
-          FROM lcells, g
-        ),
-        offs AS (
-          SELECT * FROM (VALUES (-1,-1),(0,-1),(1,-1),(-1,0),(1,0),
-                                (-1,1),(0,1),(1,1)) o(ox, oy)
-        ),
-        sums AS (
-          SELECT a.gx, a.gy, COUNT(*) AS deg,
-                 SUM(b.dx) AS wx, SUM(b.dy) AS wy
-          FROM c a
-          JOIN offs o ON TRUE
-          JOIN c b ON b.gx = a.gx + o.ox AND b.gy = a.gy + o.oy
-          GROUP BY a.gx, a.gy
-        ),
-        agg AS (
-          SELECT SUM(deg) AS s0, SUM(deg * deg) AS sdeg2,
-                 SUM(wx * wy) AS l_num
-          FROM sums
-        ),
-        dev AS (SELECT SUM(dx * dx) AS sxx, SUM(dy * dy) AS syy FROM c)
-        SELECT CAST(g.n AS BIGINT) AS n_cells,
-               CAST(agg.s0 AS BIGINT) AS s0,
-               CAST(agg.sdeg2 AS BIGINT) AS sdeg2,
-               CAST(agg.l_num AS BIGINT) AS l_num,
-               CAST(g.n AS DOUBLE) / CAST(agg.sdeg2 AS DOUBLE)
-                 * CAST(agg.l_num AS DOUBLE)
-                 / sqrt(CAST(dev.sxx AS DOUBLE) * CAST(dev.syy AS DOUBLE))
-                 AS lees_l
-        FROM g, agg, dev
-    """
 
     # hist_match: integer CDF alignment, cross-multiplied (no division);
     # src = gradient256 ((px+py) * 255/510 truncated), ref = world4326.

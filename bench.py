@@ -122,21 +122,11 @@ BENCH = {
     "warp_ups": lambda s: _force(E.q_warp_ups_nearest(s, SF_DIR)),
     "warp_stateplane_md": lambda s: _force(E.q_warp_stateplane_md(s, SF_DIR)),
     "warp_stateplane_nj": lambda s: _force(E.q_warp_stateplane_nj(s, SF_DIR)),
-    "hausdorff_pairs": lambda s: _force(E.q_hausdorff_pairs(s, SF_DIR)),
     "mgrs_polar_cells": lambda s: _force(E.q_mgrs_polar_cells(s, SF_DIR)),
     "edit_distance": lambda s: _force(E.q_edit_distance(s, SF_DIR)),
-    "dtw_pairs": lambda s: _force(E.q_dtw_pairs(s, SF_DIR)),
-    "frechet_pairs": lambda s: _force(E.q_frechet_pairs(s, SF_DIR)),
-    "lcss_pairs": lambda s: _force(E.q_lcss_pairs(s, SF_DIR)),
     "ransac_line": lambda s: _force(E.q_ransac_line(s, SF_DIR)),
-    "circular_stats": lambda s: _force(E.q_circular_stats(s, SF_DIR)),
     "gc_navigation": lambda s: _force(E.q_gc_navigation(s, SF_DIR)),
     "rhumb_destination": lambda s: _force(E.q_rhumb_destination(s, SF_DIR)),
-    # round-4 session-5 additions: spatial statistics
-    "morans_i": lambda s: _force(E.q_morans_i(s, SF_DIR)),
-    "getis_hotspots": lambda s: _force(E.q_getis_hotspots(s, SF_DIR)),
-    "kde_heatmap": lambda s: _force(E.q_kde_heatmap(s, SF_DIR)),
-    "ripley_k": lambda s: _force(E.q_ripley_k(s, SF_DIR)),
     # round-4 session-6 additions
     "hex_kring_pairs": lambda s: _force(E.q_hex_kring_pairs(s, SF_DIR)),
     "dbscan_clusters": lambda s: _force(E.q_dbscan_clusters(s, SF_DIR)),
@@ -154,12 +144,9 @@ BENCH = {
     # dominated by fixed iterative-round latency, not data volume, so
     # they would add minutes to the suite without measuring throughput)
     "map_match": lambda s: _force(E.q_map_match(s, SF_DIR)),
-    "mann_kendall": lambda s: _force(E.q_mann_kendall(s, SF_DIR)),
-    "dwell_segments": lambda s: _force(E.q_dwell_segments(s, SF_DIR)),
     "polygon_neighbors": lambda s: _force(E.q_polygon_neighbors(s, SF_DIR)),
     "raster_quantile_classes":
         lambda s: _force(E.q_raster_quantile_classes(s, SF_DIR)),
-    "emerging_hotspots": lambda s: _force(E.q_emerging_hotspots(s, SF_DIR)),
     # round-4 session-9 additions
     "skyline_docs": lambda s: _force(E.q_skyline_docs(s, SF_DIR)),
     "morph_open": lambda s: _force(E.q_morph_open(s, SF_DIR)),
@@ -171,13 +158,8 @@ BENCH = {
     "dem_vrm": lambda s: _force(E.q_dem_vrm(s, SF_DIR)),
     # round-4 session-10 additions: geostatistics + spatial stats + text
     "areal_interp": lambda s: _force(E.q_areal_interp(s, SF_DIR)),
-    "gearys_c": lambda s: _force(E.q_gearys_c(s, SF_DIR)),
-    "local_moran": lambda s: _force(E.q_local_moran(s, SF_DIR)),
-    "std_ellipse": lambda s: _force(E.q_std_ellipse(s, SF_DIR)),
     "grid_kriging": lambda s: _force(E.q_grid_kriging(s, SF_DIR)),
     "grid_gwr": lambda s: _force(E.q_grid_gwr(s, SF_DIR)),
-    "variogram": lambda s: _force(E.q_variogram(s, SF_DIR)),
-    "huff_model": lambda s: _force(E.q_huff_model(s, SF_DIR)),
     # round-4 session-11 additions (cost_corridor/cost_allocation stay
     # gate-only with the other fixpoint ops; the fixed-size fixture
     # queries are covered by the gate; the entries below scale with
@@ -186,11 +168,7 @@ BENCH = {
     "focal_stats": lambda s: _force(E.q_focal_stats(s, SF_DIR)),
     "netcdf_roundtrip": lambda s: _force(E.q_netcdf_roundtrip(s, SF_DIR)),
     "tpi_landforms": lambda s: _force(E.q_tpi_landforms(s, SF_DIR)),
-    "circular_stats": lambda s: _force(E.q_circular_stats(s, SF_DIR)),
-    "od_matrix": lambda s: _force(E.q_od_matrix(s, SF_DIR)),
-    "knox_test": lambda s: _force(E.q_knox_test(s, SF_DIR)),
     "st_dbscan": lambda s: _force(E.q_st_dbscan(s, SF_DIR)),
-    "theil_sen": lambda s: _force(E.q_theil_sen(s, SF_DIR)),
     # round-4 session-12 additions (chaikin/snap/mec/visvalingam/mst/ipf
     # are fixed-size fixture queries -> gate-only; the entries below
     # scale with SF_DIR or the full fixture rasters)
@@ -199,7 +177,6 @@ BENCH = {
     "hist_match": lambda s: _force(E.q_hist_match(s, SF_DIR)),
     "pca_features": lambda s: _force(E.q_pca_features(s, SF_DIR)),
     "morph_close": lambda s: _force(E.q_morph_close(s, SF_DIR)),
-    "lees_l": lambda s: _force(E.q_lees_l(s, SF_DIR)),
 }
 
 

@@ -123,7 +123,9 @@ def k_ring(cell: np.ndarray, k: int) -> np.ndarray:
     reference's counterpart is quadtree radius growth,
     ``core/alg/gdalgrid.cpp:281-301``). Returns shape
     ``(len(cell), (2k+1)**2)``; x wraps around the antimeridian, y is clipped
-    by marking out-of-range rows with -1 (caller filters).
+    by marking out-of-range rows with -1 (caller filters). A ring wider than
+    the grid (2k+1 > 2^res) takes each column once: the wrapped repeats are
+    -1 too.
     """
     cell = np.atleast_1d(np.asarray(cell, dtype=np.int64))
     res, x, y = unpack_cell(cell)
@@ -134,7 +136,7 @@ def k_ring(cell: np.ndarray, k: int) -> np.ndarray:
     dy = dy.ravel()[None, :]
     nx = (x[:, None] + dx) % n  # antimeridian wrap
     ny = y[:, None] + dy
-    valid = (ny >= 0) & (ny < n)
+    valid = (ny >= 0) & (ny < n) & (dx + k < n)
     out = pack_cell(int(res[0]), nx, np.clip(ny, 0, n - 1))
     return np.where(valid, out, np.int64(-1))
 

@@ -79,7 +79,7 @@ def knn_bruteforce(queries: DataFrame, targets: DataFrame, k: int) -> DataFrame:
 def _ring_cells(queries: DataFrame, res: int, rings: int) -> DataFrame:
     """One (qid, qlon, qlat, cell) row per cell within Chebyshev distance
     ``rings`` of each query's own cell, each cell once: ``cells.k_ring``
-    without its repeats and its -1 rows. x wraps at the antimeridian, and
+    without its -1 rows. x wraps at the antimeridian, and
     a ring at least as wide as the grid takes every column once; rows off
     the top or bottom of the grid are left out."""
     n = 1 << res

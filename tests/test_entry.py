@@ -10,7 +10,9 @@ import importlib
 import importlib.util
 import pathlib
 import pkgutil
+import re
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -66,6 +68,12 @@ def test_query_matches_oracle(spark, sf_dir, oracle, name):
     pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
 
 
+def test_mbtiles_roundtrip_leaves_no_file(spark, sf_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = E.queries()["mbtiles_roundtrip"](spark, sf_dir).collect()
+    assert len(rows) == 16
+    assert not list(tmp_path.rglob("*.mbtiles*"))
+
 def test_entry_smoke(spark):
     df = E.entry(spark)
     rows = df.collect()
@@ -107,3 +115,21 @@ def test_check_correctness_checks_its_own_checkout(monkeypatch):
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
     assert pathlib.Path(tool.E.__file__).resolve().is_relative_to(root)
+
+
+def test_scripts_call_only_registered_entry_names():
+    """bench.py and the tools call the registry as ``E.<name>``, some from
+    job templates held in strings, so the scan reads the text: a deleted
+    query fails here instead of at the next bench run."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    scanned, missing = [], []
+    for path in [root / "bench.py", *sorted((root / "tools").glob("*.py"))]:
+        text = path.read_text()
+        if "__spark_entry__ as E" not in text:
+            continue
+        scanned.append(path.name)
+        missing += [f"{path.name}: E.{name}"
+                    for name in sorted(set(re.findall(r"\bE\.(\w+)", text)))
+                    if not hasattr(E, name)]
+    assert "bench.py" in scanned
+    assert not missing

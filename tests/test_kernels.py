@@ -66,6 +66,23 @@ class TestCells:
         _, x, _ = C.unpack_cell(ring.ravel())
         assert (x == 15).sum() == 3  # wrapped west column
 
+    def test_k_ring_wider_than_grid_takes_each_column_once(self):
+        for res in (1, 2, 3):
+            n = 1 << res
+            xs, ys = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+            cell = C.pack_cell(res, xs.ravel(), ys.ravel())
+            for k in range(1, n + 1):
+                ring = C.k_ring(cell, k)
+                assert ring.shape == (len(cell), (2 * k + 1) ** 2)
+                for row, y0 in zip(ring, ys.ravel()):
+                    kept = row[row >= 0]
+                    assert len(np.unique(kept)) == len(kept)
+                    ry, counts = np.unique(C.unpack_cell(kept)[2],
+                                           return_counts=True)
+                    assert ry.tolist() == list(range(max(y0 - k, 0),
+                                                     min(y0 + k, n - 1) + 1))
+                    assert (counts == min(2 * k + 1, n)).all()
+
     def test_haversine(self):
         # London -> Paris ~ 343-344 km
         d = C.haversine_km(

@@ -1,41 +1,11 @@
-"""Knox space-time test, STR partitioner, Otsu threshold."""
-
-import datetime as dt
+"""STR partitioner, Otsu threshold."""
 
 import numpy as np
 import pandas as pd
 
 from lib_gdal_spark.operators.skew import str_partition
-from lib_gdal_spark.operators.spatialstats import knox_test
 from lib_gdal_spark.operators.stats import otsu_threshold
 from lib_gdal_spark.sources import rasters as RS
-
-
-def test_knox_matches_bruteforce(spark):
-    rng = np.random.default_rng(6)
-    n = 80
-    xy = rng.uniform(0, 20, size=(n, 2))
-    t0 = dt.datetime(2026, 1, 1)
-    ts = [t0 + dt.timedelta(seconds=int(s))
-          for s in rng.integers(0, 10**6, size=n)]
-    pts = spark.createDataFrame(
-        pd.DataFrame([(i, *xy[i], ts[i]) for i in range(n)],
-                     columns=["pid", "x", "y", "ts"]),
-        schema="pid long, x double, y double, ts timestamp")
-    ds, dtb = 3.0, 50_000.0
-    got = knox_test(pts, ds=ds, dt_s=dtb).first()
-    d = np.hypot(xy[:, None, 0] - xy[None, :, 0],
-                 xy[:, None, 1] - xy[None, :, 1])
-    tsec = np.array([(t - t0).total_seconds() for t in ts])
-    td = np.abs(tsec[:, None] - tsec[None, :])
-    iu = np.triu_indices(n, 1)
-    S = int((d[iu] <= ds).sum())
-    T = int((td[iu] <= dtb).sum())
-    X = int(((d[iu] <= ds) & (td[iu] <= dtb)).sum())
-    P = n * (n - 1) // 2
-    assert (got["space_pairs"], got["time_pairs"], got["st_pairs"]) \
-        == (S, T, X)
-    assert abs(got["expected"] - S * T / P) < 1e-8
 
 
 def test_str_partition_balance_and_determinism(spark):

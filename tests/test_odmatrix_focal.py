@@ -1,36 +1,10 @@
-"""OD flow matrix (operators/trajectory.od_matrix) and 3x3 focal
-statistics (operators/dem.focal_stats_kernel)."""
-
-import datetime as dt
+"""3x3 focal statistics (operators/dem.focal_stats_kernel)."""
 
 import numpy as np
 import pandas as pd
 
 from lib_gdal_spark.operators.dem import dem_op_k, focal_stats_kernel
-from lib_gdal_spark.operators.trajectory import od_matrix
 from lib_gdal_spark.sources import rasters as RS
-
-
-def test_od_matrix_counts(spark):
-    t0 = dt.datetime(2026, 1, 1)
-    rows = []
-    # user 1: cells (0,0) -> (1,0) -> (1,1) -> (1,1) (no move) -> (0,0)
-    for i, (x, y) in enumerate([(5, 5), (15, 5), (15, 15), (16, 14),
-                                (5, 5)]):
-        rows.append((1, t0 + dt.timedelta(minutes=i), float(x), float(y)))
-    # user 2: (0,0) -> (1,0) (same first hop as user 1)
-    rows.append((2, t0, 5.0, 5.0))
-    rows.append((2, t0 + dt.timedelta(minutes=1), 19.0, 3.0))
-    track = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["eid", "ts", "x", "y"]),
-        schema="eid long, ts timestamp, x double, y double")
-    got = {(r["ocx"], r["ocy"], r["dcx"], r["dcy"]): (r["trips"], r["users"])
-           for r in od_matrix(track, cell=10.0).collect()}
-    assert got == {
-        (0, 0, 1, 0): (2, 2),   # both users
-        (1, 0, 1, 1): (1, 1),
-        (1, 1, 0, 0): (1, 1),
-    }
 
 
 def test_focal_stats_matches_local_kernel(spark):
